@@ -42,8 +42,8 @@ object ExtractJob {
     val report = runWith[DocRow](spark, docs,
       d => Extract.run(d, partitions, telemetry = Some(sink)).toDF(),
       outDir, buckets, groups, runId, failAfterGroups)
-    // per-attempt counters (a resumed attempt only sees its own buckets);
-    // a no-op re-run appends nothing
+    // per-attempt, AT-LEAST-ONCE counters (a resumed attempt only sees its
+    // own buckets; task retries re-add); a no-op re-run appends nothing
     if (report.processed > 0) {
       import spark.implicits._
       val rows = Seq(
@@ -74,8 +74,7 @@ object ExtractJob {
       writer: DataWriter): Long = {
     val n = spark.sparkContext.longAccumulator("graft.outputs.docs")
     docs.foreachPartition { (it: Iterator[DocRow]) =>
-      it.foreach { d =>
-        val res = Extract.extractDoc(d)
+      Extract.extractPartition(it).foreach { res =>
         writer.writeString(s"${res.doc_id}.md", res.markdown)
         writer.writeString(s"${res.doc_id}_content_list.json",
           contentListJson(res))

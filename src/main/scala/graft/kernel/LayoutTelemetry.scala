@@ -2,51 +2,49 @@ package graft.kernel
 
 import org.apache.spark.util.LongAccumulator
 
-/** Layout-validation telemetry for the kernel stage.
+/** Layout-validation telemetry for the kernel stage: a per-task [[Sink]]
+  * of Spark `LongAccumulator`s, the one channel that reaches the driver on
+  * a multi-executor cluster. [[graft.io.ExtractJob.run]] registers the
+  * accumulators and writes their merged values into the job's `_metrics`
+  * table, so a real-model deployment inherits the "no silently-authored-away
+  * layouts" invariant as a monitorable counter (VERDICT r3 task 9). A
+  * driver-side caller counts the same way: register a Sink, `install` it on
+  * its own thread, extract, read the accumulators.
   *
-  * Two channels, updated together at the increment sites:
-  *   - JVM-wide AtomicLongs — the dev counters the probes/specs read in
-  *     local mode (single JVM ⇒ they ARE the job totals there);
-  *   - an optional per-task [[Sink]] of Spark `LongAccumulator`s — the
-  *     channel that actually reaches the driver on a multi-executor
-  *     cluster, where the AtomicLongs are per-executor and invisible.
-  *     [[graft.io.ExtractJob.run]] registers the accumulators and writes
-  *     their merged values into the job's `_metrics` table, so a real-model
-  *     deployment inherits the "no silently-authored-away layouts"
-  *     invariant as a monitorable counter (VERDICT r3 task 9).
+  * The counters are AT-LEAST-ONCE: task retries and speculative attempts
+  * re-add to accumulators, so a value can exceed the distinct page count.
   *
-  * The sink is installed per PARTITION (a Spark task runs its whole
+  * The sink is installed per PARTITION by
+  * [[graft.pipeline.Extract.extractPartition]] (a Spark task runs its whole
   * iterator on one thread, so ThreadLocal scoping is exact; re-installing
-  * at every partition start makes executor thread reuse safe). */
+  * at every partition start makes executor thread reuse safe). With no
+  * sink installed the bumps are no-ops. */
 object LayoutTelemetry {
 
-  /** Pages where every HARD candidate layout failed validation and the
-    * plain single column was used instead. */
-  val authoredAway = new java.util.concurrent.atomic.AtomicLong
-  /** Pages where even the single-column layout failed validation. */
-  val unsolvable = new java.util.concurrent.atomic.AtomicLong
-  /** Pages accepted with a nested-insert region layout. */
-  val insertPages = new java.util.concurrent.atomic.AtomicLong
-
-  /** Driver-registered accumulators, captured by the extraction closure. */
+  /** Driver-registered accumulators, captured by the extraction closure:
+    *   - `authoredAway`: pages where every HARD candidate layout failed
+    *     validation and the plain single column was used instead;
+    *   - `unsolvable`: pages where even the single-column layout failed;
+    *   - `insertPages`: pages accepted with a nested-insert region layout. */
   case class Sink(authoredAway: LongAccumulator, unsolvable: LongAccumulator,
       insertPages: LongAccumulator) extends Serializable
 
   private val taskSink = new ThreadLocal[Sink]
 
-  /** Install `s` for the current task thread (call at partition start). */
-  def install(s: Sink): Unit = taskSink.set(s)
+  /** Install `s` for the current thread, or clear it (call at partition
+    * start). */
+  def install(s: Option[Sink]): Unit = s match {
+    case Some(sink) => taskSink.set(sink)
+    case None => taskSink.remove()
+  }
 
   def bumpAuthoredAway(): Unit = {
-    authoredAway.incrementAndGet()
     val s = taskSink.get; if (s != null) s.authoredAway.add(1L)
   }
   def bumpUnsolvable(): Unit = {
-    unsolvable.incrementAndGet()
     val s = taskSink.get; if (s != null) s.unsolvable.add(1L)
   }
   def bumpInsertPages(): Unit = {
-    insertPages.incrementAndGet()
     val s = taskSink.get; if (s != null) s.insertPages.add(1L)
   }
 }

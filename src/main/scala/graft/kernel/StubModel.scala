@@ -382,19 +382,6 @@ object StubModel extends DocModel {
     got == placed.map(_._1.offset).sorted
   }
 
-  // -- layout telemetry (see LayoutTelemetry: JVM counters + per-task
-  // Spark accumulator sink; these aliases keep the probes/specs reading
-  // the same names) ---------------------------------------------------------
-  /** Pages where every HARD candidate layout failed validation and the
-    * plain single column was used instead — the "authored away" event the
-    * sweep drives to ~0. */
-  val authoredAwayCount = LayoutTelemetry.authoredAway
-  /** Pages where even the single-column layout failed validation (never
-    * expected; the golden suite would also catch it). */
-  val unsolvableCount = LayoutTelemetry.unsolvable
-  /** Pages accepted with a nested-insert region layout. */
-  val insertPageCount = LayoutTelemetry.insertPages
-
   /** Pull far-flagged BELOW-captions (authored after their body — figure
     * captions) out of body units and re-append them as standalone trailing
     * units placed at the column end. Above-captions stay put: deferring
@@ -429,8 +416,8 @@ object StubModel extends DocModel {
     * with deferred far captions -> two-column -> single with deferred ->
     * single. Docs whose model emits original_order accept the hardest
     * layout immediately (the shortcut recovers any geometry). A page whose
-    * HARD candidates all failed counts into [[authoredAwayCount]]; a page
-    * where even the single column fails counts into [[unsolvableCount]]
+    * HARD candidates all failed counts as authored-away; a page where even
+    * the single column fails counts as unsolvable ([[LayoutTelemetry]])
     * (and still places single — the golden suite would surface it).
     * Returns the placed spans plus the page's region-detection boxes
     * (non-empty only for the insert layout). */
@@ -563,7 +550,7 @@ object StubModel extends DocModel {
     // choice — when the page's geometry would make the reference's own
     // greedy tie-up misattach the far caption, the corpus keeps it
     // adjacent instead), while a failed insert/two-column layout counts
-    // into authoredAwayCount
+    // as authored-away
     // (placed, regions, countsAsHard, isInsertLayout)
     val hard: Iterator[(Placed, Vector[Region], Boolean, Boolean)] =
       (if (insert) insertCandidate(baseUnits).map(c => (c._1, c._2, true, true)) else Iterator.empty) ++
@@ -583,10 +570,6 @@ object StubModel extends DocModel {
         (p, rs)
       case None =>
         val s = single(baseUnits)
-        if (hardTried && sys.env.contains("GRAFT_LAYOUT_DEBUG")) {
-          println(s"AWAY page=$pageIdx insert=$insert twoCol=$twoCol hasFar=$hasFar " +
-            s"units=${baseUnits.length} kinds=${mains.map(_.kind).mkString(",")}")
-        }
         if (hardTried) {
           // a hard layout existed and every candidate failed validation —
           // the authored-away event; validate the single it degrades to

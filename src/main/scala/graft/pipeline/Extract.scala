@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.corpus.DocGen
-import graft.kernel.{DocModel, StubModel}
+import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
 
 /** End-to-end extraction job (SURVEY.md §3.1 Spark shape):
   *
@@ -16,10 +16,9 @@ import graft.kernel.{DocModel, StubModel}
   *
   * Keeping each document whole through one mapPartitions fuses kernel,
   * page processing and doc-level folds into a single stage: the only
-  * shuffle in the job is the skew-balancing repartition. Page-level
-  * fan-out (explode pages, groupByKey(doc_id) to reassemble) is only
-  * worth a second shuffle for monster documents; at the reference's
-  * 64-page windows a whole doc is far below task granularity. */
+  * shuffle in the job is the skew-balancing repartition. At the
+  * reference's 64-page windows a whole doc is far below task granularity,
+  * so a page-level fan-out would buy a second shuffle for nothing. */
 object Extract {
 
   /** Pure per-document extraction — unit-testable without Spark. */
@@ -40,26 +39,41 @@ object Extract {
     spark.range(n).map(i => f"doc-$i%012d")
   }
 
-  /** Salted repartition on size buckets: span count proxies page count
-    * (the skew axis — 5% of docs have 13-64 pages). The salt space must be
+  /** THE per-partition body of every Spark extraction path (`run`,
+    * `runFromIds`, `DocExtractExec`, `StreamJobs.extractStream`,
+    * `ExtractJob.writeOutputs`). It owns the per-partition model scope —
+    * a real model lazily creates its ONNX session here and reuses it
+    * across the iterator — and installs the layout-telemetry sink for the
+    * task thread (clearing a sink a previous task left on a reused
+    * executor thread; see [[graft.kernel.LayoutTelemetry]]). */
+  def extractPartition(docs: Iterator[DocRow], model: DocModel = StubModel,
+      telemetry: Option[LayoutTelemetry.Sink] = None): Iterator[DocResult] = {
+    LayoutTelemetry.install(telemetry)
+    docs.map(d => extractDoc(d, model))
+  }
+
+  /** Salted repartition on a size bucket (0 small, 1 mid, 2 monster; the
+    * skew axis — 5% of docs have 13-64 pages). The salt space must be
     * FINE-GRAINED (~64 salts per partition per bucket): with only a few
     * (bucket, salt) combos per partition, combo-level hash clumping
     * re-creates the very imbalance salting is meant to remove (measured:
-    * 2.1x max/mean pages at 6 combos/partition vs 1.1x at 192/partition —
-    * graft.tools.SkewProbe). Monster-doc buckets get a 4x-wider space so
-    * several monsters can never share a (bucket, salt) cell. */
-  def saltRepartition(docs: Dataset[DocRow], partitions: Int): Dataset[DocRow] = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("size_bucket",
-        when(size(col("spans")) <= 32, lit(0))
-          .when(size(col("spans")) <= 128, lit(1))
-          .otherwise(lit(2)))
+    * 2.1x max/mean pages at 6 combos/partition vs 1.1x at 192/partition,
+    * BASELINE.md). Monster-doc buckets get a 4x-wider space so several
+    * monsters can never share a (bucket, salt) cell. */
+  private def salted(df: DataFrame, sizeBucket: Column, partitions: Int): DataFrame =
+    df.withColumn("size_bucket", sizeBucket)
       .withColumn("salt",
         pmod(xxhash64(col("doc_id")),
           when(col("size_bucket") === 2, lit(partitions * 256))
             .otherwise(lit(partitions * 64))))
       .repartition(partitions, col("size_bucket"), col("salt"))
+
+  /** Salted repartition of whole documents: span count proxies page count. */
+  def saltRepartition(docs: Dataset[DocRow], partitions: Int): Dataset[DocRow] = {
+    import docs.sparkSession.implicits._
+    val spans = size(col("spans"))
+    salted(docs.toDF(),
+      when(spans <= 32, lit(0)).when(spans <= 128, lit(1)).otherwise(lit(2)), partitions)
       .select(col("doc_id"), col("spans"))
       .as[DocRow]
   }
@@ -71,36 +85,10 @@ object Extract {
     * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]). */
   def run(docs: Dataset[DocRow], partitions: Int = 32,
       model: DocModel = StubModel,
-      telemetry: Option[graft.kernel.LayoutTelemetry.Sink] = None): Dataset[DocResult] = {
-    import docs.sparkSession.implicits._
-    saltRepartition(docs, partitions).mapPartitions { it =>
-      // per-partition model scope: a real model would lazily create its
-      // ONNX session here and reuse it across the iterator
-      telemetry.foreach(graft.kernel.LayoutTelemetry.install)
-      val m = model
-      it.map(d => extractDoc(d, m))
-    }
-  }
-
-  /** Page-parallel variant for monster documents: explode to one row per
-    * page after the kernel, process pages independently, regroup per doc
-    * for the ordered folds. Costs a second shuffle (pages) — only worth it
-    * when single documents exceed task granularity (hundreds of pages);
-    * `run` keeps docs whole and is the default. */
-  def runPaged(docs: Dataset[DocRow], partitions: Int = 32,
-      model: DocModel = StubModel): Dataset[DocResult] = {
+      telemetry: Option[LayoutTelemetry.Sink] = None): Dataset[DocResult] = {
     import docs.sparkSession.implicits._
     saltRepartition(docs, partitions)
-      .mapPartitions { it =>
-        val m = model
-        it.flatMap(d => m.analyze(d))
-      }
-      .map(pm => (pm.doc_id, pm.page_idx, PageOps.process(pm)))
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        val pages = it.toVector.sortBy(_._2).map(_._3)
-        Assemble.assemble(id, pages)
-      }
+      .mapPartitions(it => extractPartition(it, model, telemetry))
   }
 
   /** Generation-fused variant: salt-repartition the doc_id STREAM (the size
@@ -111,23 +99,11 @@ object Extract {
   def runFromIds(ids: Dataset[String], partitions: Int = 32,
       model: DocModel = StubModel): Dataset[DocResult] = {
     import ids.sparkSession.implicits._
-    ids
-      .map(id => (id, DocGen.pageCount(id)))
-      .toDF("doc_id", "pages")
-      .withColumn("size_bucket",
-        when(col("pages") <= 3, lit(0)).when(col("pages") <= 12, lit(1)).otherwise(lit(2)))
-      .withColumn("salt",
-        // fine-grained salt space, same moduli as saltRepartition: few
-        // (bucket,salt) combos per partition re-create imbalance via combo
-        // clumping (SkewProbe: 2.1x max/mean at ~6 combos vs 1.1x at 192)
-        pmod(xxhash64(col("doc_id")),
-          when(col("size_bucket") === 2, lit(partitions * 256)).otherwise(lit(partitions * 64))))
-      .repartition(partitions, col("size_bucket"), col("salt"))
+    val pages = col("pages")
+    salted(ids.map(id => (id, DocGen.pageCount(id))).toDF("doc_id", "pages"),
+      when(pages <= 3, lit(0)).when(pages <= 12, lit(1)).otherwise(lit(2)), partitions)
       .select(col("doc_id")).as[String]
-      .mapPartitions { it =>
-        val m = model
-        it.map(id => extractDoc(DocGen.docRow(id), m))
-      }
+      .mapPartitions(it => extractPartition(it.map(DocGen.docRow), model))
   }
 
   /** Exploded span view of the extraction output (one row per span) —

@@ -233,7 +233,11 @@ object PageOps {
     * path skips them, :141-151) and mixed-category pairs involving an
     * image or seal box (:159-166, the background-media exemption; the
     * reference comments 'table' out of that set). Drops are live within
-    * the scan, like the reference's dropped_indexes check. */
+    * the scan, like the reference's dropped_indexes check. Dets at or
+    * below [[LowConf]] take no part in the pairing: the reference model's
+    * own score threshold removes them before this filter, and here step 1
+    * drops them after it — a larger junk det must not evict a real box
+    * (a formula number) on its way out. */
   def filterOverlapBoxes(dets: Vector[Det]): Vector[Det] = {
     val n = dets.length
     val dropped = new Array[Boolean](n)
@@ -246,7 +250,8 @@ object PageOps {
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        if (!dropped(i) && !dropped(j)) {
+        if (!dropped(i) && !dropped(j) &&
+            dets(i).score > LowConf && dets(j).score > LowConf) {
           val a = dets(i); val b = dets(j)
           val inline =
             a.cat == Kinds.InlineFormula || b.cat == Kinds.InlineFormula

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, SparkStrategy}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.corpus.DocGen
+import graft.pipeline.Extract
 
 /** The whole-operator form of the extraction pipeline — the builder
   * preference tier (c): a custom `LogicalPlan` + `SparkStrategy` +
@@ -64,14 +66,12 @@ case class DocExtractExec(output: Seq[Attribute], child: SparkPlan)
   override protected def doExecute(): RDD[InternalRow] = {
     val types = output.map(_.dataType).toArray
     child.execute().mapPartitions { it =>
-      // per-partition model scope (the ONNX-session boundary); the
-      // projection is per-partition too — UnsafeProjection is not
-      // thread-safe across tasks
+      // the projection is per-partition — UnsafeProjection is not
+      // thread-safe across tasks; the model scope lives in extractPartition
       val proj = UnsafeProjection.create(types)
       val scratch = new GenericInternalRow(5)
-      it.flatMap { row =>
-        val id = row.getUTF8String(0).toString
-        val res = graft.pipeline.Extract.extractDoc(graft.corpus.DocGen.docRow(id))
+      val docs = it.map(row => DocGen.docRow(row.getUTF8String(0).toString))
+      Extract.extractPartition(docs).flatMap { res =>
         res.spans.iterator.map { s =>
           scratch.update(0, UTF8String.fromString(res.doc_id))
           scratch.update(1, s.order)

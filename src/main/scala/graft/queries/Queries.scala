@@ -40,11 +40,12 @@ object Queries {
     * one det per word. Bboxes collide pairwise (slot = pos % 12, two words
     * per 24-word page share a cell) so IoU dedup is non-trivial.
     * r6 note (guide §2.5): unlike the converter tier, the single-row-group
-    * scan is NOT a pathology here — graft.tools.DetsProbe measured the
+    * scan is NOT a pathology here — a one-off r6 probe measured the
     * whole single-task explode + det arithmetic at ~0.22 s while a
     * pre-explode hash repartition costs a ~0.13 s text shuffle in every
     * dets query for a ~0.02 s parallel-explode gain. The dets-family time
-    * lives in each query's own downstream shuffles; left un-repartitioned. */
+    * lives in each query's own downstream shuffles; left un-repartitioned
+    * (OPTIMIZATION_r06.md). */
   def dets(spark: SparkSession, dir: String): DataFrame =
     tbl(spark, dir, "documents")
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))

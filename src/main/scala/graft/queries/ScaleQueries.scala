@@ -86,7 +86,7 @@ object ScaleQueries {
     * withColumn first made the optimizer substitute the whole interpreted
     * higher-order `transform(...)` into the Generate's inferred
     * size/notnull filter, evaluating it ~3x per row — measured 2.8s vs
-    * 0.6s for the whole stage at sf0.1 (graft.tools.ShingleProf2). */
+    * 0.6s for the whole stage at sf0.1 (OPTIMIZATION_r06.md). */
   def shinglesFrom(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))

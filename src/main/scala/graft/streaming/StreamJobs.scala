@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.{DocRow, DocResult}
 import graft.pipeline.Extract
-import graft.kernel.StubModel
 
 /** Structured Streaming surface. The reference is pure batch (SURVEY.md
   * §2.10) — these jobs are the streaming-ingest counterparts a production
@@ -30,49 +29,17 @@ object StreamJobs {
       .schema(docSchema)
       .parquet(landingDir)
       .as[DocRow]
-      .mapPartitions { it =>
-        val m = StubModel
-        it.map(d => Extract.extractDoc(d, m))
-      }
+      .mapPartitions(it => Extract.extractPartition(it))
   }
 
-  /** Continuous HTML ingestion over a binary landing directory: landed
-    * .html pages stream in via the binaryFile source and the DOM walk +
-    * boilerplate strip runs inside the partition (the same per-document
-    * function as the batch html_extract), emitting the full DocResult
-    * contract (spans + markdown). Stateless, exactly-once with a
-    * replayable source/sink. */
-  def htmlStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
-    import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .option("pathGlobFilter", "*.html")
-      .load(landingDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (path, bytes) =>
-          val id = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".html")
-          graft.html.HtmlConvert.result(id, bytes)
-        }
-      }
-  }
-
-  /** Continuous OFFICE ingestion over a binary landing directory: newly
-    * landed .docx/.xlsx/.pptx packages stream in via the binaryFile source
-    * and convert inside the partition (zip + DOM + rels — the same
-    * per-document function as the batch office_extract). Stateless,
-    * exactly-once with a replayable source/sink. */
-  /** Continuous MIXED ingestion: any landed blob (.pdf/.ooxml/.html —
-    * extension-agnostic) routes through the ONE shared magic-byte sniffer
-    * the batch `runRaw` uses ([[graft.io.Sniff]]): %PDF → the byte-level
-    * PDF parser, zip → OOXML, markup → soup + strip. The streaming face
-    * of the crawl-store ingestion shape: one stream, every input tier. */
+  /** Continuous ingestion of landed blobs (.pdf/.ooxml/.html/images/OLE —
+    * extension-agnostic): each blob routes through the ONE shared
+    * magic-byte sniffer the batch `runRaw` uses ([[graft.io.Sniff]]):
+    * %PDF → the byte-level PDF parser, zip → OOXML, markup → soup +
+    * boilerplate strip, emitting the full DocResult contract (spans +
+    * markdown). The doc id is the file name up to its first dot. The
+    * streaming face of the crawl-store ingestion shape: one stream, every
+    * input tier; stateless, so exactly-once with a replayable source/sink. */
   def rawStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
     import spark.implicits._
     spark.readStream
@@ -98,27 +65,6 @@ object StreamJobs {
           catch { case scala.util.control.NonFatal(_) =>
             DocResult(id, Seq.empty, "")
           }
-        }
-      }
-  }
-
-  def officeStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
-    import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq( // the binaryFile source's fixed schema
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .option("pathGlobFilter", "*.ooxml")
-      .load(landingDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (path, bytes) =>
-          val id = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".ooxml")
-          graft.office.OfficeConvert.convert(id, bytes)
         }
       }
   }

@@ -24,9 +24,12 @@ object DedupScale10x {
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
     val scaledDir = "/tmp/graft_scale10x"
+    // copy k shifts ids by k strides past the source's max id, so no copy
+    // can collide with another (a fixed stride breaks once ids reach it)
+    val stride = base.agg(max(col("doc_id"))).as[Long].head() + 1L
     val scaled = base.flatMap { case (id, text) =>
+      val words = text.split(' ')
       (0 until 10).map { k =>
-        val words = text.split(' ')
         val sb = new java.lang.StringBuilder(text.length * 2)
         var i = 0
         while (i < words.length) {
@@ -35,7 +38,7 @@ object DedupScale10x {
           if (i % 2 == 1) sb.append(" c").append(k).append('x')
           i += 1
         }
-        (id + k * 1000000L, sb.toString)
+        (id + k * stride, sb.toString)
       }
     }.toDF("doc_id", "text")
     scaled.write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")

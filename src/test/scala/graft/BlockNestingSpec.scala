@@ -89,6 +89,10 @@ class BlockNestingSpec extends AnyFunSuite {
     // higher score does NOT save the smaller box — the drop is by area
     val out = PageOps.filterOverlapBoxes(Vector(sliver, a, b))
     assert(out.map(_.text) == Vector("big"), s"got ${out.map(_.text)}")
+    // a det at or below the low-confidence cut takes no part in the pairing:
+    // the larger junk box must not evict the real one it covers
+    val junk = Det(Kinds.Text, 36, 200, 336, 240, 0.04, "junk", "", -1)
+    assert(PageOps.filterOverlapBoxes(Vector(junk, b)).map(_.text) == Vector("junk", "small"))
     // inline-formula pairs are skipped (the default no-custom-OCR path)
     val line = Det(Kinds.Text, 36, 300, 336, 312, 0.6, "x = y line", "", 3)
     val inl = Det(Kinds.InlineFormula, 100, 300, 200, 312, 0.6, "$x=y$", "", -1)

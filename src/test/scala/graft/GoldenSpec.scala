@@ -14,9 +14,15 @@ class GoldenSpec extends AnyFunSuite {
 
   private def ids(n: Int): Seq[String] = (0 until n).map(i => f"doc-$i%012d")
 
+  /** Pages where a sub-threshold junk text det covering a formula number
+    * once evicted it in the model-order overlap prefilter (perfbench ids:
+    * seeds 5, 15 and 33). */
+  private val tagRegressionIds = Seq(
+    "doc-000005000184", "doc-000015001721", "doc-000033000629")
+
   test("pipeline output equals golden span sequence AND markdown on 500 documents") {
     var checked = 0
-    ids(500).foreach { id =>
+    (ids(500) ++ tagRegressionIds).foreach { id =>
       val got = Extract.extractDoc(DocGen.docRow(id))
       val want = DocGen.golden(id)
       assert(got.spans == want.spans,
@@ -24,7 +30,7 @@ class GoldenSpec extends AnyFunSuite {
       assert(got.markdown == want.markdown, s"markdown mismatch for $id")
       checked += 1
     }
-    assert(checked == 500)
+    assert(checked == 503)
   }
 
   test("generation is deterministic and order-independent") {

@@ -2,8 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import graft.corpus.DocGen
 import graft.pipeline.Extract
 import graft.io.ExtractJob
+import graft.kernel.LayoutTelemetry
 import java.nio.file.Files
 
 /** Kill-at-50% resume idempotency (FIXTURES.md §4): a run that commits only
@@ -67,6 +69,24 @@ class ResumeSpec extends AnyFunSuite {
       s"layout metric rows missing: $m")
     assert(m("authored_away_pages") == 0.0 && m("unsolvable_pages") == 0.0,
       s"layout invariant violated: $m")
+    // ...and the channel counts: the cold run's insert pages equal a
+    // driver-side count over the same ids through a locally installed sink
+    val sc = spark.sparkContext
+    val local = LayoutTelemetry.Sink(sc.longAccumulator, sc.longAccumulator,
+      sc.longAccumulator)
+    LayoutTelemetry.install(Some(local))
+    try (0L until n).foreach(i => Extract.extractDoc(DocGen.docRow(f"doc-$i%012d")))
+    finally LayoutTelemetry.install(None)
+    val inserts = local.insertPages.value.toDouble
+    assert(inserts > 0, "no insert-layout page in the corpus")
+    assert(m("insert_pages") == inserts, s"cold insert_pages ${m("insert_pages")} != $inserts")
+    // the two warm attempts each count only their own buckets
+    val warmInserts = spark.read.parquet(s"$warm/_metrics")
+      .filter("stage = 'layout' AND key = 'insert_pages'")
+      .select("run_id", "value").as[(String, Double)].collect()
+    assert(warmInserts.map(_._1).sorted.toSeq == Seq("attempt-1", "attempt-2"))
+    assert(warmInserts.map(_._2).sum == inserts,
+      s"warm insert_pages ${warmInserts.toSeq} do not sum to $inserts")
   }
 
   test("raw-blob ingestion (office + html + pdf + image + ole interleaved) under the same protocol") {

@@ -22,21 +22,13 @@ class SparkExtractSpec extends AnyFunSuite {
     val got = Extract.run(Extract.corpus(ids), partitions = 7)
       .collect().map(r => r.doc_id -> r.spans).toMap
     assert(got.size == 96)
+    // whole-doc extraction covers the monster-doc tail too (no page fan-out)
+    assert((0 until 96).exists(i => DocGen.pageCount(f"doc-$i%012d") >= 13),
+      "no monster doc in the corpus")
     (0 until 96).foreach { i =>
       val id = f"doc-$i%012d"
       val want = DocGen.golden(id).spans
       assert(got(id) == want, s"mismatch for $id")
-    }
-  }
-
-  test("page-parallel path agrees with golden (monster-doc fan-out)") {
-    import spark.implicits._
-    val ids = Extract.idRange(spark, 64)
-    val got = Extract.runPaged(Extract.corpus(ids), partitions = 7)
-      .collect().map(r => r.doc_id -> r.spans).toMap
-    (0 until 64).foreach { i =>
-      val id = f"doc-$i%012d"
-      assert(got(id) == DocGen.golden(id).spans, s"paged mismatch for $id")
     }
   }
 

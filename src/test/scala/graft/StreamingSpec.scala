@@ -48,7 +48,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     drop(0 until 15)
     drop(15 until 30)
-    val q = StreamJobs.officeStream(spark, landing)
+    val q = StreamJobs.rawStream(spark, landing)
       .writeStream.format("memory").queryName("office_stream_out")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
@@ -71,7 +71,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     drop(0 until 15)
     drop(15 until 30)
-    val q = StreamJobs.htmlStream(spark, landing)
+    val q = StreamJobs.rawStream(spark, landing)
       .writeStream.format("memory").queryName("html_stream_out")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
