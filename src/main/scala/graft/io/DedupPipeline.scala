@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,7 +8,7 @@ import graft.queries.ScaleQueries
 
 /** Materialized MinHash-dedup chain under the SAME commit protocol as
   * extraction: shingles → candidates → verified → groups → keep, each stage a
-  * bucket-partitioned parquet table written through [[ExtractJob.runWith]]
+  * bucket-partitioned parquet table committed through [[Commit.runWith]]
   * (checkpoint + lineage + idempotent resume). This is the production
   * shape at 100 TB — the chain is computed ONCE and every consumer reads
   * views, instead of each query re-deriving shingles → signatures →
@@ -15,209 +16,101 @@ import graft.queries.ScaleQueries
   *
   * Stage granularity:
   *   - CANDIDATES and GROUPS are corpus-global (LSH banding and component
-  *     propagation shuffle across every document) — one commit unit each;
+  *     propagation shuffle across every document) — one bucket each;
   *   - SHINGLES, VERIFIED and KEEP are per-doc / per-pair / per-row —
   *     bucket-incremental on the hash of the left id.
   *
-  * INCREMENTAL APPEND (r5): every bucketed stage stores a per-bucket
-  * FINGERPRINT of its input (`_input_fp`: order-free xor of row hashes).
-  * A corpus delta invalidates only the buckets whose fingerprint moved:
-  * shingles re-tokenizes just the delta buckets, candidates and groups
-  * recompute globally (banding and component propagation are honestly
-  * global), and verified/keep re-verify only the buckets whose upstream
-  * PAIRS changed — the fingerprint is taken over each stage's actual
-  * input table, so a byte-identical recompute upstream invalidates
-  * nothing downstream. A real deployment keys the same mechanism off
-  * Iceberg snapshot/partition metadata instead of a scan. */
+  * INCREMENTAL APPEND (r5): every stage stores a FINGERPRINT of its
+  * input (order-free xor of row hashes, per bucket). A re-run re-opens
+  * ([[Commit.reopen]]) only the buckets whose fingerprint moved: shingles
+  * re-tokenizes just the delta buckets; candidates and groups, whose
+  * one bucket is fingerprinted over the whole corpus, recompute on any
+  * delta (banding and component propagation are honestly global); and
+  * verified/keep re-verify only the buckets whose upstream PAIRS changed
+  * — the fingerprint is taken over each stage's actual input table, so a
+  * byte-identical recompute upstream invalidates nothing downstream. The
+  * fingerprint is stored only after its stage commits, so a crash at any
+  * point re-opens the same buckets on the next run. A real deployment
+  * keys the same mechanism off Iceberg snapshot/partition metadata
+  * instead of a scan. */
 object DedupPipeline {
 
   // explicit stage schemas: a duplicate-free corpus can legally produce a
   // ZERO-ROW stage, whose partitionBy write leaves no part files — reading
   // it back must not die on schema inference (r4 advice)
-  private val shingleSchema = StructType(Seq(
+  private[graft] val shingleSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("g32", LongType),
     StructField("bucket", IntegerType)))
-  private val candSchema = StructType(Seq(
+  private[graft] val candSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("b_id", LongType),
     StructField("nbands", LongType), StructField("bucket", IntegerType)))
-  private val verifiedSchema = StructType(Seq(
+  private[graft] val verifiedSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("b_id", LongType),
     StructField("inter", LongType), StructField("uni", LongType),
     StructField("bucket", IntegerType)))
-  private val groupSchema = StructType(Seq(
+  private[graft] val groupSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("group_id", LongType),
     StructField("bucket", IntegerType)))
-  private val keepSchema = StructType(Seq(
+  private[graft] val keepSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("group_id", LongType),
     StructField("keep", IntegerType), StructField("bucket", IntegerType)))
 
-  private def readStage(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
-  // ---- per-bucket input fingerprints --------------------------------------
-
   /** order-free per-bucket content hash of a stage input: one columnar
     * scan, xor-combined so row order and partitioning don't matter. */
-  private def bucketFp(df: DataFrame, cols: Seq[String],
-      buckets: Int): Map[Int, Long] =
-    df.select(pmod(xxhash64(col(cols.head)), lit(buckets)).cast("int").as("bucket"),
-      xxhash64(cols.map(col): _*).as("h"))
+  private def bucketFp(df: DataFrame, buckets: Int): Map[Int, Long] =
+    df.select(pmod(xxhash64(col(df.columns.head)), lit(buckets)).cast("int").as("bucket"),
+      xxhash64(df.columns.map(col): _*).as("h"))
       .groupBy(col("bucket")).agg(expr("bit_xor(h)").as("h"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-  private def readFp(spark: SparkSession, path: String): Map[Int, Long] =
-    if (new java.io.File(path).exists())
-      spark.read.parquet(path).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    else Map.empty
-
-  private def writeFp(spark: SparkSession, path: String,
-      fp: Map[Int, Long]): Unit = {
-    import spark.implicits._
-    spark.createDataset(fp.toSeq).toDF("bucket", "h")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Buckets whose input changed since the stored fingerprint (all of
-    * them on first build). */
-  private def staleBuckets(cur: Map[Int, Long], stored: Map[Int, Long],
-      buckets: Int): Set[Int] =
-    if (stored.isEmpty) (0 until buckets).toSet
-    else (0 until buckets).filter(b => cur.get(b) != stored.get(b)).toSet
-
-  /** Re-open the named buckets for processing: rewrite the stage
-    * checkpoint without their `done` rows (dynamic partition overwrite
-    * replaces their data partitions on the re-run). Driver-side metadata
-    * only — the checkpoint table is O(buckets). */
-  private def dropDoneBuckets(spark: SparkSession, stageOut: String,
-      stale: Set[Int]): Unit = {
-    val ckpt = s"$stageOut/_checkpoint"
-    if (stale.isEmpty || !new java.io.File(ckpt).exists()) return
-    import spark.implicits._
-    val keepRows = spark.read.parquet(ckpt)
-      .as[graft.schema.CheckpointRow].collect()
-      .filterNot(r => stale.contains(r.bucket)).toSeq
-    val tmp = ckpt + ".rewrite"
-    spark.createDataset(keepRows).coalesce(1).write.mode("overwrite").parquet(tmp)
-    deleteDir(new java.io.File(ckpt))
-    new java.io.File(tmp).renameTo(new java.io.File(ckpt))
-    // r5 advice (medium): dynamic partition overwrite only replaces
-    // partitions that receive rows — a delta that recomputes a stale
-    // bucket to ZERO rows would silently keep serving its old parquet.
-    // Delete the re-opened buckets' data dirs here; the re-run rewrites
-    // the non-empty ones.
-    stale.foreach(b => deleteDir(new java.io.File(s"$stageOut/data/bucket=$b")))
-  }
-
-  private def wipeCheckpoint(stageOut: String): Unit =
-    deleteDir(new java.io.File(s"$stageOut/_checkpoint"))
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteDir)
-    f.delete(): Unit
-  }
-
-  // ---- the chain ----------------------------------------------------------
 
   /** Run the five stages into `outDir` (resumable AND incremental:
     * finished stages/buckets with unchanged inputs are skipped on
     * re-run; changed inputs re-open exactly the stale buckets).
     * `failAfterStages` stops the job after N completed stages — the
-    * resume spec's crash hook. Returns the per-stage job reports. */
+    * resume spec's crash hook. `incremental = false` is the one-shot
+    * run into a fresh dir that nothing re-runs (pipelineQuery): it
+    * computes no fingerprints, and commits each stage as one unit, since
+    * there is nothing to resume (2 units per stage only doubled the job
+    * count). Returns the per-stage job reports. */
   def run(spark: SparkSession, dir: String, outDir: String,
       buckets: Int = 8,
       failAfterStages: Int = Int.MaxValue,
-      recordFp: Boolean = true,
-      unitGroups: Int = 2): Vector[(String, ExtractJob.JobReport)] = {
+      incremental: Boolean = true): Vector[(String, Commit.JobReport)] = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val out = Vector.newBuilder[(String, ExtractJob.JobReport)]
-    // `recordFp = false` (the fresh one-shot pipelineQuery run into a
-    // scratch dir deleted on exit): the per-stage input fingerprints
-    // exist ONLY to serve future incremental re-runs of the same dir —
-    // computing five aggregation jobs' worth of fps for a dir about to
-    // be deleted is pure overhead. The memoized ensure() path always
-    // records them (the production shape).
-    @inline def fpOf(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
-      if (recordFp) bucketFp(df, cols, buckets) else Map.empty[Int, Long]
-    @inline def putFp(path: String, fp: Map[Int, Long]): Unit =
-      if (recordFp) writeFp(spark, path, fp)
+    def table(name: String, schema: StructType) = Commit.read(spark, s"$outDir/$name", schema)
 
-    // stage 0 — SHINGLES (per-doc, bucket-incremental on the corpus delta)
-    val shDir = s"$outDir/shingles"
-    val corpusFp = fpOf(docs.select(col("doc_id"), col("text")),
-      Seq("doc_id", "text"))
-    val staleSh =
-      if (recordFp) staleBuckets(corpusFp, readFp(spark, s"$shDir/_input_fp"), buckets)
-      else Set.empty[Int]
-    dropDoneBuckets(spark, shDir, staleSh)
-    out += "shingles" -> ExtractJob.runWith[org.apache.spark.sql.Row](
-      spark, docs.toDF(),
-      slice => ScaleQueries.shinglesFrom(slice).select(col("doc_id"), col("g32")),
-      shDir, buckets = buckets, groups = math.min(unitGroups, buckets),
-      runId = "shingles", failAfterGroups = Int.MaxValue)
-    putFp(s"$shDir/_input_fp", corpusFp)
-    if (failAfterStages <= 1) return out.result()
-    def shingleTable = readStage(spark, s"$shDir/data", shingleSchema)
-      .select(col("doc_id"), col("g32"))
+    // fingerprint → stale set → re-open → commit → store fingerprint
+    def stage(name: String, input: DataFrame, fp: => Map[Int, Long], nb: Int)(
+        body: DataFrame => DataFrame): (String, Commit.JobReport) = {
+      val stageOut = s"$outDir/$name"
+      lazy val cur = fp
+      val stale = if (incremental) Commit.stale(spark, stageOut, cur, nb) else Set.empty[Int]
+      Commit.reopen(spark, stageOut, stale)
+      val report = Commit.runWith(spark, input, body, stageOut, nb,
+        groups = if (incremental) math.min(2, nb) else 1, runId = name)
+      if (stale.nonEmpty) Commit.storeFp(spark, stageOut, cur)
+      name -> report
+    }
+    lazy val corpusFp = bucketFp(docs.select(col("doc_id"), col("text")), buckets)
+    lazy val globalFp = Map(0 -> corpusFp.values.foldLeft(0L)(_ ^ _))
 
-    // stage 1 — CANDIDATES (global: banding shuffles the whole corpus, so
-    // ANY shingle delta recomputes it — the honest global stage)
-    val candDir = s"$outDir/candidates"
-    if (staleSh.nonEmpty) wipeCheckpoint(candDir)
-    out += "candidates" -> ExtractJob.runWith[org.apache.spark.sql.Row](
-      spark, docs.toDF(),
-      slice => ScaleQueries.minhashLshPairsFromShingles(shingleTable),
-      candDir, buckets = 1, groups = 1, runId = "candidates",
-      failAfterGroups = Int.MaxValue)
-    if (failAfterStages <= 2) return out.result()
-    def candTable = readStage(spark, s"$candDir/data", candSchema)
-      .select(col("doc_id"), col("b_id"), col("nbands"))
-
-    // stage 2 — VERIFIED (bucket-incremental over the PAIRS that actually
-    // changed: fingerprinted on the recomputed candidate table, so a
-    // byte-identical candidates rebuild invalidates nothing here)
-    val verDir = s"$outDir/verified"
-    val candFp = fpOf(candTable, Seq("doc_id", "b_id", "nbands"))
-    val staleV =
-      if (recordFp) staleBuckets(candFp, readFp(spark, s"$verDir/_input_fp"), buckets)
-      else Set.empty[Int]
-    dropDoneBuckets(spark, verDir, staleV)
-    out += "verified" -> ExtractJob.runWith[org.apache.spark.sql.Row](
-      spark, candTable,
-      slice => ScaleQueries.minhashVerifyFromShingles(slice, shingleTable),
-      verDir, buckets = buckets, groups = math.min(unitGroups, buckets),
-      runId = "verified", failAfterGroups = Int.MaxValue)
-    putFp(s"$verDir/_input_fp", candFp)
-    if (failAfterStages <= 3) return out.result()
-
-    // stage 3 — GROUPS (global: min-label propagation to convergence)
-    val grpDir = s"$outDir/groups"
-    if (staleSh.nonEmpty) wipeCheckpoint(grpDir)
-    out += "groups" -> ExtractJob.runWith[org.apache.spark.sql.Row](
-      spark, docs.toDF(),
-      slice => ScaleQueries.dedupGroupsFrom(candTable,
-        slice.select(col("doc_id"))),
-      grpDir, buckets = 1, groups = 1, runId = "groups",
-      failAfterGroups = Int.MaxValue)
-    if (failAfterStages <= 4) return out.result()
-    def grpTable = readStage(spark, s"$grpDir/data", groupSchema)
-      .select(col("doc_id"), col("group_id"))
-
-    // stage 4 — KEEP (per-row decision, incremental on the groups delta)
-    val keepDir = s"$outDir/keep"
-    val grpFp = fpOf(grpTable, Seq("doc_id", "group_id"))
-    val staleK =
-      if (recordFp) staleBuckets(grpFp, readFp(spark, s"$keepDir/_input_fp"), buckets)
-      else Set.empty[Int]
-    dropDoneBuckets(spark, keepDir, staleK)
-    out += "keep" -> ExtractJob.runWith[org.apache.spark.sql.Row](
-      spark, grpTable,
-      slice => ScaleQueries.dedupKeepFrom(slice),
-      keepDir, buckets = buckets, groups = math.min(unitGroups, buckets),
-      runId = "keep", failAfterGroups = Int.MaxValue)
-    putFp(s"$keepDir/_input_fp", grpFp)
-    out.result()
+    Vector(
+      () => stage("shingles", docs, corpusFp, buckets)(slice =>
+        ScaleQueries.shinglesFrom(slice).select(col("doc_id"), col("g32"))),
+      () => stage("candidates", docs, globalFp, 1)(_ =>
+        ScaleQueries.minhashLshPairsFromShingles(table("shingles", shingleSchema))),
+      () => {
+        val cand = table("candidates", candSchema)
+        stage("verified", cand, bucketFp(cand, buckets), buckets)(slice =>
+          ScaleQueries.minhashVerifyFromShingles(slice, table("shingles", shingleSchema)))
+      },
+      () => stage("groups", docs, globalFp, 1)(slice =>
+        ScaleQueries.dedupGroupsFrom(table("candidates", candSchema), slice.select(col("doc_id")))),
+      () => {
+        val grp = table("groups", groupSchema)
+        stage("keep", grp, bucketFp(grp, buckets), buckets)(ScaleQueries.dedupKeepFrom)
+      }
+    ).take(failAfterStages).map(_())
   }
 
   // ---- session-shared materialization ------------------------------------
@@ -263,20 +156,16 @@ object DedupPipeline {
   }
 
   def candidatesView(spark: SparkSession, dir: String): DataFrame =
-    readStage(spark, s"${ensure(spark, dir)}/candidates/data", candSchema)
-      .select(col("doc_id"), col("b_id"), col("nbands"))
+    Commit.read(spark, s"${ensure(spark, dir)}/candidates", candSchema)
 
   def verifiedView(spark: SparkSession, dir: String): DataFrame =
-    readStage(spark, s"${ensure(spark, dir)}/verified/data", verifiedSchema)
-      .select(col("doc_id"), col("b_id"), col("inter"), col("uni"))
+    Commit.read(spark, s"${ensure(spark, dir)}/verified", verifiedSchema)
 
   def groupsView(spark: SparkSession, dir: String): DataFrame =
-    readStage(spark, s"${ensure(spark, dir)}/groups/data", groupSchema)
-      .select(col("doc_id"), col("group_id"))
+    Commit.read(spark, s"${ensure(spark, dir)}/groups", groupSchema)
 
   def keepView(spark: SparkSession, dir: String): DataFrame =
-    readStage(spark, s"${ensure(spark, dir)}/keep/data", keepSchema)
-      .select(col("doc_id"), col("group_id"), col("keep"))
+    Commit.read(spark, s"${ensure(spark, dir)}/keep", keepSchema)
 
   /** The end-to-end chain as ONE driver query: a FRESH materialization
     * (unique run dir) so its timing is the real five-stage cost, returning
@@ -288,21 +177,15 @@ object DedupPipeline {
     // scratch reaping is AGE-GATED (r5 advice): another JVM's in-flight
     // run dir (a verify and a bench overlapping) must not be deleted
     // mid-run; only dirs a stale hour old are clearly abandoned
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("graft_dedup_run") && f.lastModified() < cutoff)
-      .foreach(deleteDir)
+    local.globStatus(new Path(s"${System.getProperty("java.io.tmpdir")}/graft_dedup_run*"))
+      .filter(_.getModificationTime < cutoff)
+      .foreach(st => local.delete(st.getPath, true))
     val out = java.nio.file.Files.createTempDirectory("graft_dedup_run").toString
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      deleteDir(new java.io.File(out))))
-    // unitGroups = 1: the fresh one-shot chain has nothing to resume, so
-    // splitting each bucketed stage into 2 sequential commit units only
-    // doubled the per-stage job count (the memoized ensure() path keeps
-    // the default resume granularity)
-    run(spark, dir, out, recordFp = false, unitGroups = 1)
-    readStage(spark, s"$out/keep/data", keepSchema)
-      .select(col("doc_id"), col("group_id"), col("keep"))
-      .orderBy("doc_id")
+      local.delete(new Path(out), true): Unit))
+    run(spark, dir, out, incremental = false)
+    Commit.read(spark, s"$out/keep", keepSchema).orderBy("doc_id")
   }
 }

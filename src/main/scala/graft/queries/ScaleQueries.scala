@@ -340,10 +340,11 @@ object ScaleQueries {
         .select(col("v"),
           least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
           col("lbl").as("prev"))
-      spark.sparkContext.setJobDescription(s"labelprop:round$iter")
-      val next = if (reliable) next0.checkpoint() else next0.localCheckpoint(true)
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      spark.sparkContext.setJobDescription(null)
+      val next = graft.io.Commit.labeled(spark, s"labelprop:round$iter") {
+        val cut = if (reliable) next0.checkpoint() else next0.localCheckpoint(true)
+        changed = cut.filter(col("lbl") =!= col("prev")).count()
+        cut
+      }
       labels.unpersist()
       labels = next.select(col("v"), col("lbl"))
       iter += 1

@@ -46,7 +46,7 @@ object DedupScale10x {
     def chain(d: String): (Double, Long) = {
       val out = java.nio.file.Files.createTempDirectory("graft_scaleprobe").toString
       val t0 = System.nanoTime()
-      graft.io.DedupPipeline.run(spark, d, out, recordFp = false, unitGroups = 1)
+      graft.io.DedupPipeline.run(spark, d, out, incremental = false)
       val secs = (System.nanoTime() - t0) / 1e9
       val keep = spark.read.parquet(s"$out/keep/data").count()
       def del(f: java.io.File): Unit = {

@@ -23,10 +23,27 @@ class DedupPipelineSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  private val stages = Vector("shingles", "candidates", "verified", "groups", "keep")
+
+  /** Every stage table of `out` holds the rows of the cold build `cold`.
+    * Read with the explicit schema: a cold stage may have zero rows. */
+  private def assertSameStages(cold: String, out: String, what: String): Unit = {
+    val schema = Map("shingles" -> DedupPipeline.shingleSchema,
+      "candidates" -> DedupPipeline.candSchema, "verified" -> DedupPipeline.verifiedSchema,
+      "groups" -> DedupPipeline.groupSchema, "keep" -> DedupPipeline.keepSchema)
+    stages.foreach { st =>
+      def read(d: String) = spark.read.schema(schema(st)).parquet(s"$d/$st/data").drop("bucket")
+      val (a, b) = (read(cold), read(out))
+      val cols = a.columns.toSeq.sorted.map(col)
+      assert(rows(a.select(cols: _*).orderBy(cols: _*)) ==
+        rows(b.select(cols: _*).orderBy(cols: _*)), s"stage $st differs $what")
+    }
+  }
+
   test("materialized stages equal the live chain computations") {
     val out = Files.createTempDirectory("dedup_chain").toString
     val reports = DedupPipeline.run(spark, dir, out, buckets = 4)
-    assert(reports.map(_._1) == Vector("shingles", "candidates", "verified", "groups", "keep"))
+    assert(reports.map(_._1) == stages)
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val liveCand = ScaleQueries.minhashLshPairsFrom(docs.toDF())
@@ -72,13 +89,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(skipped("verified").skipped == 4 && skipped("verified").processed == 0)
     assert(skipped("groups").processed == 1 && skipped("keep").processed == 4)
 
-    Seq("shingles", "candidates", "verified", "groups", "keep").foreach { st =>
-      val a = spark.read.parquet(s"$cold/$st/data").drop("bucket")
-      val b = spark.read.parquet(s"$warm/$st/data").drop("bucket")
-      val cols = a.columns.toSeq.sorted.map(col)
-      assert(rows(a.select(cols: _*).orderBy(cols: _*)) ==
-        rows(b.select(cols: _*).orderBy(cols: _*)), s"stage $st differs after resume")
-    }
+    assertSameStages(cold, warm, "after resume")
   }
 
   test("incremental append: a corpus delta re-opens only the delta buckets") {
@@ -110,19 +121,36 @@ class DedupPipelineSpec extends AnyFunSuite {
     // the appended chain equals a cold build over the full corpus
     val cold = Files.createTempDirectory("dedup_cold2").toString
     DedupPipeline.run(spark, v2dir, cold, buckets = 4)
-    Seq("shingles", "verified", "keep").foreach { st =>
-      val a = spark.read.parquet(s"$cold/$st/data").drop("bucket")
-      val b = spark.read.parquet(s"$out/$st/data").drop("bucket")
-      val cols = a.columns.toSeq.sorted.map(col)
-      assert(rows(a.select(cols: _*).orderBy(cols: _*)) ==
-        rows(b.select(cols: _*).orderBy(cols: _*)),
-        s"stage $st differs after incremental append")
-    }
+    assertSameStages(cold, out, "after incremental append")
 
     // and a no-op re-run over the SAME corpus touches nothing
     val third = DedupPipeline.run(spark, v2dir, out, buckets = 4).toMap
     assert(third.values.forall(_.processed == 0),
       s"no-op re-run reprocessed: $third")
+  }
+
+  test("a global stage that recomputes to zero rows drops its old rows") {
+    // corpus v2 keeps one document per v1 duplicate group (the max
+    // doc_id), so its candidate stage is empty: the incremental v1 -> v2
+    // chain must not keep serving v1's pairs from the global stages
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val out = Files.createTempDirectory("dedup_shrink").toString
+    DedupPipeline.run(spark, dir, out, buckets = 4)
+    val v2dir = Files.createTempDirectory("dedup_v2max").toString
+    spark.read.schema(DedupPipeline.groupSchema).parquet(s"$out/groups/data")
+      .groupBy("group_id").agg(max("doc_id").as("doc_id"))
+      .select("doc_id").join(docs, "doc_id")
+      .write.mode("overwrite").parquet(s"$v2dir/documents.parquet")
+
+    val cold = Files.createTempDirectory("dedup_cold3").toString
+    DedupPipeline.run(spark, v2dir, cold, buckets = 4)
+    assert(spark.read.schema(DedupPipeline.candSchema)
+      .parquet(s"$cold/candidates/data").count() == 0)
+    DedupPipeline.run(spark, v2dir, out, buckets = 4)
+    assertSameStages(cold, out, "after the corpus shrank")
+    // the empty candidate input fingerprints as empty, not as "never built"
+    val again = DedupPipeline.run(spark, v2dir, out, buckets = 4).toMap
+    assert(again.values.forall(_.processed == 0), s"no-op re-run reprocessed: $again")
   }
 
   test("a zero-row stage round-trips through the explicit schema") {
@@ -146,5 +174,8 @@ class DedupPipelineSpec extends AnyFunSuite {
     // all stage checkpoints complete -> a re-run processes nothing
     val rerun = DedupPipeline.run(spark, dir, base, buckets = 8).toMap
     assert(rerun.values.forall(_.processed == 0))
+    // ...also when the same dir is named by a `file:` URI
+    val uri = DedupPipeline.run(spark, dir, s"file:$base", buckets = 8).toMap
+    assert(uri.values.forall(_.processed == 0), s"file: URI re-run reprocessed: $uri")
   }
 }

@@ -33,10 +33,22 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("kill at 50% of commit units, resume, output equals cold run") {
+    killAndResume("")
+  }
+
+  // the protocol resolves every path through its Hadoop FileSystem, so
+  // output dirs named by `file:` URI resume like plain paths
+  test("kill at 50% of commit units, resume, output equals cold run (file: URI output)") {
+    killAndResume("file:")
+  }
+
+  /** Cold run vs a run killed after 2 of 4 units and resumed, both into
+    * `scheme`-prefixed temp dirs. */
+  private def killAndResume(scheme: String): Unit = {
     val n = 300L
     val docs = Extract.corpus(Extract.idRange(spark, n))
-    val cold = Files.createTempDirectory("graft_cold").toString
-    val warm = Files.createTempDirectory("graft_warm").toString
+    val cold = scheme + Files.createTempDirectory("graft_cold").toString
+    val warm = scheme + Files.createTempDirectory("graft_warm").toString
 
     val r0 = ExtractJob.run(spark, docs, cold, buckets = 16, groups = 4,
       runId = "cold", partitions = 4)
@@ -87,6 +99,26 @@ class ResumeSpec extends AnyFunSuite {
     assert(warmInserts.map(_._1).sorted.toSeq == Seq("attempt-1", "attempt-2"))
     assert(warmInserts.map(_._2).sum == inserts,
       s"warm insert_pages ${warmInserts.toSeq} do not sum to $inserts")
+    // one `_metrics` append per attempt carries the layout rows too
+    assert(spark.read.parquet(s"$warm/_metrics")
+      .select(org.apache.spark.sql.functions.input_file_name()).distinct().count() == 2)
+  }
+
+  test("ExtractJob.run leaves the caller's job description and session conf as it found them") {
+    val sc = spark.sparkContext
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val docs = Extract.corpus(Extract.idRange(spark, 20L))
+    val out = Files.createTempDirectory("graft_label").toString
+    spark.conf.set(mode, "static")
+    sc.setJobDescription("outer")
+    try {
+      ExtractJob.run(spark, docs, out, buckets = 4, groups = 2, partitions = 2)
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+      assert(spark.conf.get(mode) == "static")
+      // under a static session mode, the second unit's write still
+      // replaces only its own buckets
+      assert(spark.read.parquet(s"$out/data").count() == 20)
+    } finally sc.setJobDescription(null)
   }
 
   test("raw-blob ingestion (office + html + pdf + image + ole interleaved) under the same protocol") {
