@@ -1,7 +1,13 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.schema.CheckpointRow
@@ -17,21 +23,28 @@ import graft.schema.CheckpointRow
   *   - `out/_input_fp/`: the per-bucket input fingerprint `(bucket, h)`
   *     of an incremental stage, stored after the stage committed.
   *
-  * A unit writes its buckets with dynamic partition overwrite (re-running
-  * a unit replaces exactly its partitions), then appends its checkpoint
-  * file. Resume = re-run: buckets with a `done` row are skipped, the
-  * buckets of a crashed unit are overwritten. Output is byte-stable
-  * because the per-unit work is deterministic per `doc_id`.
+  * A unit is ONE Spark job, `<runId>:write`: it writes its buckets with
+  * dynamic partition overwrite (re-running a unit replaces exactly its
+  * partitions) and counts each bucket's rows and spans with
+  * `Dataset.observe`, exactly, since Spark applies a result task's
+  * accumulator updates once per partition. Then the driver writes the
+  * unit's checkpoint file. Resume = re-run: buckets with a `done` row are
+  * skipped, the buckets of a crashed unit are overwritten. Output is
+  * byte-stable because the per-unit work is deterministic per `doc_id`.
   *
-  * Every file operation goes through the Hadoop `FileSystem` the path
-  * resolves to, so plain paths, `file:` URIs and remote filesystems
-  * behave alike. A cluster deployment swaps the directory commit for an
-  * Iceberg table with the same bucket column; the checkpoint schema is
-  * unchanged. */
+  * The driver reads and writes the side tables itself (parquet-hadoop),
+  * with no Spark job: each file under a hidden `.` name first, which
+  * Spark and [[readTable]] skip, then renamed into place. Every file
+  * operation goes through the Hadoop `FileSystem` the path resolves to,
+  * so plain paths, `file:` URIs and remote filesystems behave alike. A
+  * cluster deployment swaps the directory commit for an Iceberg table
+  * with the same bucket column; the checkpoint schema is unchanged. */
 object Commit {
 
   case class JobReport(run_id: String, buckets: Int, processed: Int,
       skipped: Int, docs: Long, spans: Long, wall_ms: Long)
+
+  private val checkpointSchema = Encoders.product[CheckpointRow].schema
 
   /** Commits `extract` over `input` into `outDir`: the buckets not yet
     * done run in `groups` sequential units, and `failAfterGroups` stops
@@ -46,7 +59,6 @@ object Commit {
       buckets: Int, groups: Int, runId: String,
       failAfterGroups: Int = Int.MaxValue,
       metrics: => Seq[(String, String, Double)] = Nil): JobReport = {
-    import spark.implicits._
     val done = checkpoint(spark, outDir).collect {
       case (_, r) if r.status == "done" => r.bucket }.toSet
     val todo = (0 until buckets).filterNot(done).toVector
@@ -57,48 +69,33 @@ object Commit {
     var totDocs = 0L
     var totSpans = 0L
     val t0 = System.nanoTime()
+    val bucketOf = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
 
     units.take(failAfterGroups).foreach { unit =>
       // a unit spanning every bucket (fresh single-unit run) needs no
       // bucket filter — skip the per-row hash predicate (r6)
-      val in =
-        if (unit.size == buckets) input
-        else input.filter(
-          pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int").isin(unit: _*))
-      val res = extract(in)
-        .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int"))
-        .persist()
+      val in = if (unit.size == buckets) input else input.filter(bucketOf.isin(unit: _*))
+      val res = extract(in).withColumn("bucket", bucketOf)
+      // per-bucket lineage, counted by the write itself (an Iceberg
+      // deployment reads these from commit metrics instead); non-span
+      // stages (the dedup chain's pair/label tables) record rows only
+      val spanCount = if (res.columns.contains("spans")) size(col("spans")) else lit(0)
+      val counts = unit.flatMap(b => Seq(count(when(col("bucket") === b, 1)).as(s"docs$b"),
+        coalesce(sum(when(col("bucket") === b, spanCount)), lit(0L)).as(s"spans$b")))
+      val obs = Observation()
       val tU = System.nanoTime()
       // the writer option, not the session conf: later writes in the
       // session keep their own overwrite mode
       labeled(spark, s"$runId:write") {
-        res.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        res.observe(obs, counts.head, counts.tail: _*)
+          .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket").parquet(s"$outDir/data")
       }
       val wallMs = (System.nanoTime() - tU) / 1000000
-      // per-bucket lineage from the persisted result (an Iceberg deployment
-      // reads these from commit metrics instead); non-span stages (the
-      // dedup chain's pair/label tables) record rows only
-      val spanStat =
-        if (res.columns.contains("spans")) sum(size(col("spans")))
-        else sum(lit(0L))
-      val stats = labeled(spark, s"$runId:stats") {
-        res.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("docs"), spanStat.as("spans"))
-          .collect()
-      }
-      val rows = unit.map { b =>
-        val st = stats.find(_.getInt(0) == b)
-        CheckpointRow(runId, b, "done",
-          st.map(_.getLong(1)).getOrElse(0L), st.map(_.getLong(2)).getOrElse(0L), wallMs)
-      }
-      // coalesce(1): a <=buckets-row bookkeeping write must not fan out
-      // into default-parallelism empty tasks/files (r6)
-      labeled(spark, s"$runId:ckpt") {
-        spark.createDataset(rows).coalesce(1).write.mode(SaveMode.Append)
-          .parquet(s"$outDir/_checkpoint")
-      }
-      res.unpersist()
+      val stats = obs.get
+      val rows = unit.map(b => CheckpointRow(runId, b, "done",
+        stats(s"docs$b").asInstanceOf[Long], stats(s"spans$b").asInstanceOf[Long], wallMs))
+      writeTable(spark, s"$outDir/_checkpoint", checkpointSchema, rows)
       processedBuckets += unit.size
       totDocs += rows.map(_.docs).sum
       totSpans += rows.map(_.spans).sum
@@ -117,11 +114,9 @@ object Commit {
           if (wallMs > 0) totDocs * 1000.0 / wallMs else 0.0),
         ("extract", "buckets_processed", processedBuckets.toDouble),
         ("extract", "buckets_skipped", done.size.toDouble)) ++ metrics
-      labeled(spark, s"$runId:metrics") {
-        spark.createDataset(rows.map { case (stage, key, value) => (runId, stage, key, value) })
-          .coalesce(1).toDF("run_id", "stage", "key", "value")
-          .write.mode(SaveMode.Append).parquet(s"$outDir/_metrics")
-      }
+      writeTable(spark, s"$outDir/_metrics",
+        StructType.fromDDL("run_id STRING, stage STRING, key STRING, value DOUBLE"),
+        rows.map { case (stage, key, value) => (runId, stage, key, value) })
     }
     JobReport(runId, buckets, processedBuckets, done.size, totDocs, totSpans, wallMs)
   }
@@ -131,19 +126,16 @@ object Commit {
     * that receive rows, so a bucket that recomputes to zero rows would
     * keep serving its old ones. Then their `done` rows go: each
     * checkpoint file holding one is deleted, and the rows it held for
-    * other buckets are appended again as one file. A crash in between
+    * other buckets are written again as one file. A crash in between
     * only makes those buckets run again. */
   def reopen(spark: SparkSession, outDir: String, stale: Set[Int]): Unit =
     if (stale.nonEmpty) {
-      import spark.implicits._
       stale.foreach(b => delete(spark, new Path(s"$outDir/data/bucket=$b")))
       val rows = checkpoint(spark, outDir)
       val hit = rows.collect { case (f, r) if stale(r.bucket) => f }.toSet
-      hit.foreach(f => delete(spark, new Path(new java.net.URI(f))))
+      hit.foreach(delete(spark, _))
       val kept = rows.collect { case (f, r) if hit(f) && !stale(r.bucket) => r }
-      if (kept.nonEmpty)
-        spark.createDataset(kept).coalesce(1).write.mode(SaveMode.Append)
-          .parquet(s"$outDir/_checkpoint")
+      if (kept.nonEmpty) writeTable(spark, s"$outDir/_checkpoint", checkpointSchema, kept)
     }
 
   /** The buckets whose input fingerprint `fp` differs from the one stored
@@ -152,18 +144,19 @@ object Commit {
     * an empty input again. */
   def stale(spark: SparkSession, outDir: String, fp: Map[Int, Long],
       buckets: Int): Set[Int] = {
-    val path = s"$outDir/_input_fp"
-    if (!exists(spark, path)) return (0 until buckets).toSet
-    val stored = spark.read.schema("bucket INT, h BIGINT").parquet(path).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val path = new Path(s"$outDir/_input_fp")
+    if (!fs(spark, path).exists(path)) return (0 until buckets).toSet
+    val stored = readTable(spark, path)
+      .map { case (_, g) => g.getInteger("bucket", 0) -> g.getLong("h", 0) }.toMap
     (0 until buckets).filter(b => fp.get(b) != stored.get(b)).toSet
   }
 
-  /** Stores the input fingerprint a finished run into `outDir` was built from. */
+  /** Stores the input fingerprint a finished run into `outDir` was built
+    * from, in place of the old one. A crash after the old one went leaves
+    * none, and with none stored every bucket is stale. */
   def storeFp(spark: SparkSession, outDir: String, fp: Map[Int, Long]): Unit = {
-    import spark.implicits._
-    spark.createDataset(fp.toSeq).toDF("bucket", "h")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/_input_fp")
+    delete(spark, new Path(s"$outDir/_input_fp"))
+    writeTable(spark, s"$outDir/_input_fp", StructType.fromDDL("bucket INT, h BIGINT"), fp.toSeq)
   }
 
   /** The committed rows of `outDir`, without the `bucket` column.
@@ -173,8 +166,8 @@ object Commit {
     spark.read.schema(schema).parquet(s"$outDir/data").drop("bucket")
 
   /** Runs `body` under the job description `desc`, then restores the
-    * caller's. Traces attribute jobs by these labels; the protocol's are
-    * `<runId>:write|stats|ckpt|metrics`. */
+    * caller's. Traces attribute jobs by these labels; the protocol's one
+    * job per unit is `<runId>:write`. */
   def labeled[A](spark: SparkSession, desc: String)(body: => A): A = {
     val sc = spark.sparkContext
     val outer = sc.getLocalProperty("spark.job.description")
@@ -182,22 +175,60 @@ object Commit {
     try body finally sc.setJobDescription(outer)
   }
 
-  /** The checkpoint rows of `outDir`, each with the URI of its file. */
-  private def checkpoint(spark: SparkSession,
-      outDir: String): Seq[(String, CheckpointRow)] = {
-    import spark.implicits._
-    val path = s"$outDir/_checkpoint"
-    if (!exists(spark, path)) Nil
-    else spark.read.schema(Encoders.product[CheckpointRow].schema).parquet(path)
-      .select(input_file_name().as("_1"), struct(col("*")).as("_2"))
-      .as[(String, CheckpointRow)].collect().toSeq
+  /** The checkpoint rows of `outDir`, each with the path of its file. */
+  private def checkpoint(spark: SparkSession, outDir: String): Seq[(Path, CheckpointRow)] =
+    readTable(spark, new Path(s"$outDir/_checkpoint")).map { case (f, g) =>
+      f -> CheckpointRow(g.getString("run_id", 0), g.getInteger("bucket", 0),
+        g.getString("status", 0), g.getLong("docs", 0), g.getLong("spans", 0),
+        g.getLong("wall_ms", 0))
+    }
+
+  /** Writes `rows` (tuples or case classes in `schema`'s field order) as
+    * one parquet file into `dir`, as a Spark write of them would: Spark's
+    * parquet schema (every column nullable) and row metadata, snappy. The
+    * file is written under a hidden name, then renamed into place. */
+  private def writeTable(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Product]): Unit = {
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val tmp = new Path(dir, "." + name)
+    val nullable = StructType(schema.map(_.copy(nullable = true)))
+    val parquetSchema = new SparkToParquetSchemaConverter().convert(nullable)
+    val out = ExampleParquetWriter.builder(tmp).withType(parquetSchema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", nullable.json))
+      .build()
+    try rows.foreach { row =>
+      val g = new SimpleGroupFactory(parquetSchema).newGroup()
+      row.productIterator.zip(schema.fieldNames).foreach {
+        case (v: String, f) => g.add(f, v)
+        case (v: Int, f) => g.add(f, v)
+        case (v: Long, f) => g.add(f, v)
+        case (v: Double, f) => g.add(f, v)
+      }
+      out.write(g)
+    } finally out.close()
+    if (!fs(spark, tmp).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not rename $tmp into place")
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The rows of every parquet file in `dir` (none if it does not exist),
+    * each with its file's path. Hidden (`.`) and metadata (`_`) files are
+    * skipped, as Spark skips them. */
+  private def readTable(spark: SparkSession, dir: Path): Seq[(Path, Group)] = {
+    val files = fs(spark, dir)
+    if (!files.exists(dir)) return Nil
+    files.listStatus(dir, (p: Path) => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+      .toSeq.flatMap { st =>
+        val in = ParquetReader.builder(new GroupReadSupport, st.getPath)
+          .withConf(spark.sparkContext.hadoopConfiguration).build()
+        try Iterator.continually(in.read()).takeWhile(_ != null).map(st.getPath -> _).toVector
+        finally in.close()
+      }
   }
 
-  private def delete(spark: SparkSession, p: Path): Unit =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def delete(spark: SparkSession, p: Path): Unit = fs(spark, p).delete(p, true): Unit
 }

@@ -167,24 +167,31 @@ object DedupPipeline {
   def keepView(spark: SparkSession, dir: String): DataFrame =
     Commit.read(spark, s"${ensure(spark, dir)}/keep", keepSchema)
 
+  /** This JVM's last [[pipelineQuery]] run dir; the next call or exit deletes it. */
+  private var lastRun: Option[Path] = None
+
   /** The end-to-end chain as ONE driver query: a FRESH materialization
     * (unique run dir) so its timing is the real five-stage cost, returning
     * the final keep table — the row the whole chain exists to produce.
-    * Output values are deterministic; only the scratch dir varies. Scratch
-    * hygiene (r4): prior run dirs are deleted on entry and this run's dir
-    * on JVM exit, so repeated bench runs don't grow tmp. */
+    * Output values are deterministic; only the scratch dir varies. The
+    * frame reads that dir lazily and the next call deletes it: consume
+    * the result (count it, write it) before calling again. */
   def pipelineQuery(spark: SparkSession, dir: String): DataFrame = {
-    // scratch reaping is AGE-GATED (r5 advice): another JVM's in-flight
-    // run dir (a verify and a bench overlapping) must not be deleted
-    // mid-run; only dirs a stale hour old are clearly abandoned
+    // reaping other JVMs' dirs is AGE-GATED (r5 advice): another JVM's
+    // in-flight run dir (a verify and a bench overlapping) must not be
+    // deleted mid-run; only dirs a stale hour old are clearly abandoned
     val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
     local.globStatus(new Path(s"${System.getProperty("java.io.tmpdir")}/graft_dedup_run*"))
       .filter(_.getModificationTime < cutoff)
       .foreach(st => local.delete(st.getPath, true))
-    val out = java.nio.file.Files.createTempDirectory("graft_dedup_run").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      local.delete(new Path(out), true): Unit))
+    // exit deletes go through the Hadoop FileSystem cache's one shutdown hook
+    val out = synchronized {
+      lastRun.foreach { p => local.delete(p, true); local.cancelDeleteOnExit(p) }
+      lastRun = Some(new Path(java.nio.file.Files.createTempDirectory("graft_dedup_run").toString))
+      local.deleteOnExit(lastRun.get)
+      lastRun.get.toString
+    }
     run(spark, dir, out, incremental = false)
     Commit.read(spark, s"$out/keep", keepSchema).orderBy("doc_id")
   }

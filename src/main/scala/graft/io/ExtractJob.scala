@@ -19,8 +19,8 @@ object ExtractJob {
     // that reaches the driver on a multi-executor cluster. Their merged
     // values land in `_metrics`, making "no silently-authored-away
     // layouts" a monitorable job invariant instead of a JVM-local probe.
-    // Per-attempt, AT-LEAST-ONCE counters: a resumed attempt only sees its
-    // own buckets, and task retries re-add.
+    // Per-attempt, EXACT counters (extraction runs in the write's result
+    // stage); a resumed attempt counts only its own buckets.
     val sc = spark.sparkContext
     val sink = graft.kernel.LayoutTelemetry.Sink(
       sc.longAccumulator("graft.layout.authored_away"),
@@ -43,11 +43,9 @@ object ExtractJob {
     * The writer ships inside the closure, so it must write to a location
     * every executor can reach (a shared filesystem for [[FileWriter]];
     * [[MemoryWriter]] is the single-JVM test sink, as in the reference).
-    * Returns the number of documents written — an AT-LEAST-ONCE counter
-    * (r5 advice): task retries and speculative attempts re-add to
-    * accumulators inside actions, so the value can exceed the distinct
-    * document count; the writes themselves are idempotent by path. Use a
-    * count() over the input when an exact figure is needed. */
+    * Returns the number of documents written, exactly: `foreachPartition`
+    * is a result stage, and Spark applies a result task's accumulator
+    * updates once per partition. Retried writes are idempotent by path. */
   def writeOutputs(spark: SparkSession, docs: Dataset[DocRow],
       writer: DataWriter): Long = {
     val n = spark.sparkContext.longAccumulator("graft.outputs.docs")

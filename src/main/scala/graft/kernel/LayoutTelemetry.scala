@@ -11,8 +11,9 @@ import org.apache.spark.util.LongAccumulator
   * driver-side caller counts the same way: register a Sink, `install` it on
   * its own thread, extract, read the accumulators.
   *
-  * The counters are AT-LEAST-ONCE: task retries and speculative attempts
-  * re-add to accumulators, so a value can exceed the distinct page count.
+  * The counters are EXACT where extraction runs in a result stage, as in
+  * `ExtractJob.run`: Spark applies a result task's accumulator updates
+  * once per partition. In a map stage, a re-run task would re-add.
   *
   * The sink is installed per PARTITION by
   * [[graft.pipeline.Extract.extractPartition]] (a Spark task runs its whole

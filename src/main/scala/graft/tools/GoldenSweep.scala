@@ -11,24 +11,29 @@ object GoldenSweep {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(5000L)
     val start = args.lift(1).map(_.toLong).getOrElse(0L)
+    val bad = mismatches(start until start + n)
+    if (bad.isEmpty) println(s"SWEEP OK: $n docs from $start golden-exact")
+    else {
+      println(s"SWEEP FAIL: ${bad.size} of $n mismatch; first: ${bad.head}")
+      sys.exit(1)
+    }
+  }
+
+  /** The ids `doc-%012d` of `ids` whose extraction differs from the golden
+    * in spans or markdown, or throws; sorted. One thread per core. */
+  def mismatches(ids: IndexedSeq[Long]): Seq[String] = {
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val threads = (0 until 16).map { t =>
-      new Thread(() => {
-        var i = start + t
-        while (i < start + n) {
-          val id = f"doc-$i%012d"
-          val got = Extract.extractDoc(DocGen.docRow(id))
-          val want = DocGen.golden(id)
-          if (got.spans != want.spans || got.markdown != want.markdown) bad.add(id)
-          i += 16
+    val n = Runtime.getRuntime.availableProcessors
+    val threads = (0 until n).map { t =>
+      new Thread(() => (t until ids.size by n).map(k => f"doc-${ids(k)}%012d").foreach { id =>
+        val same = scala.util.Try {
+          val (got, want) = (Extract.extractDoc(DocGen.docRow(id)), DocGen.golden(id))
+          got.spans == want.spans && got.markdown == want.markdown
         }
+        if (!same.getOrElse(false)) bad.add(id)
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    if (bad.isEmpty) println(s"SWEEP OK: $n docs from $start golden-exact")
-    else {
-      println(s"SWEEP FAIL: ${bad.size} of $n mismatch; first: ${bad.peek()}")
-      sys.exit(1)
-    }
+    bad.toArray(Array.empty[String]).toSeq.sorted
   }
 }

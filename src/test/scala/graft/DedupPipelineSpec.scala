@@ -178,4 +178,14 @@ class DedupPipelineSpec extends AnyFunSuite {
     val uri = DedupPipeline.run(spark, dir, s"file:$base", buckets = 8).toMap
     assert(uri.values.forall(_.processed == 0), s"file: URI re-run reprocessed: $uri")
   }
+
+  test("pipelineQuery keeps at most one run dir of this JVM in tmp") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def runDirs = tmp.list().filter(_.startsWith("graft_dedup_run")).toSet
+    val before = runDirs
+    val first = DedupPipeline.pipelineQuery(spark, dir).count()
+    val second = DedupPipeline.pipelineQuery(spark, dir).count()
+    assert(first == second && first > 0)
+    assert((runDirs -- before).size <= 1, s"run dirs left: ${runDirs -- before}")
+  }
 }

@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.execution.QueryExecution
 import graft.pipeline.Extract
-import graft.io.SpanStats
 import graft.corpus.DocGen
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-/** Observability surfaces: the typed SpanStats Aggregator and
-  * Dataset.observe metrics captured through a QueryExecutionListener —
-  * the zero-extra-pass way to get lineage counters off a production run. */
+/** Observability surface: Dataset.observe metrics captured through a
+  * QueryExecutionListener — the zero-extra-pass way to get lineage
+  * counters off a production run (the commit protocol counts its buckets
+  * this way). */
 class ObserveSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -20,16 +20,6 @@ class ObserveSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  test("typed Aggregator computes extraction stats in one pass") {
-    import spark.implicits._
-    val res = Extract.run(Extract.corpus(Extract.idRange(spark, 60)), partitions = 4)
-    val stats = res.select(SpanStats.toColumn).head()
-    val expected = (0 until 60).map(i => DocGen.golden(f"doc-$i%012d"))
-    assert(stats.docs == 60)
-    assert(stats.spans == expected.map(_.spans.length).sum)
-    assert(stats.max_spans == expected.map(_.spans.length).max)
-  }
 
   test("Dataset.observe emits metrics to a QueryExecutionListener") {
     import spark.implicits._

@@ -1,13 +1,21 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
+  QueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The whole-operator Catalyst form (builder preference tier c): custom
   * LogicalPlan -> injected SparkStrategy -> fused physical DocExtractExec
   * emitting UnsafeRows directly. The physical plan must actually contain
   * the custom operator, and its results must equal the Dataset path's. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -38,5 +46,53 @@ class PlanSpec extends AnyFunSuite {
       .where("kind = 'title'").select("kind", "text")
     val rows = df.collect()
     assert(rows.nonEmpty && rows.forall(_.getString(0) == "title"))
+  }
+
+  test("a commit unit is one write job that counts its rows in the result stage") {
+    val writes = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val labels = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val docs = graft.pipeline.Extract.corpus(graft.pipeline.Extract.idRange(spark, 40L))
+    val out = java.nio.file.Files.createTempDirectory("graft_plan").toString
+    spark.listenerManager.register(plans)
+    spark.sparkContext.addSparkListener(labels)
+    try {
+      graft.io.ExtractJob.run(spark, docs, out, buckets = 4, groups = 2, runId = "plan",
+        partitions = 2)
+      // both listeners sit on the same bus queue: once the second write's
+      // plan arrived, every job start before it has too
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(labels)
+    }
+    assert(writes.size == 2, "the two units' write plans never arrived")
+    // no bookkeeping job: no stats, checkpoint, metrics or side-table read
+    assert(jobs.toArray.toSet == Set("plan:write"), s"jobs: $jobs")
+
+    val write = writes.peek()
+    // the result stage: the plan above the first stage boundary
+    def resultStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => resultStage(a.executedPlan)
+      case r: ResultQueryStageExec => resultStage(r.plan)
+      case _: QueryStageExec | _: Exchange => Nil
+      case other => other +: other.children.flatMap(resultStage)
+    }
+    assert(resultStage(write).exists(_.isInstanceOf[CollectMetricsExec]),
+      s"the row counts are not in the write's result stage:\n$write")
+    // the writer's local sort by bucket adds no Exchange
+    def shuffles(p: SparkPlan) = collect(p) { case s: ShuffleExchangeExec => s }.size
+    val alone = graft.pipeline.Extract.run(docs, 2).queryExecution.executedPlan
+    assert(shuffles(alone) == 1 && shuffles(write) == shuffles(alone), s"write plan:\n$write")
   }
 }

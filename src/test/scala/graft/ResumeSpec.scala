@@ -104,6 +104,51 @@ class ResumeSpec extends AnyFunSuite {
       .select(org.apache.spark.sql.functions.input_file_name()).distinct().count() == 2)
   }
 
+  test("a crash at each step of a unit's commit resumes to the cold output") {
+    import spark.implicits._
+    val n = 300L
+    val docs = Extract.corpus(Extract.idRange(spark, n))
+    val cold = Files.createTempDirectory("graft_step_cold").toString
+    ExtractJob.run(spark, docs, cold, buckets = 16, groups = 4, runId = "cold", partitions = 4)
+    val out = Files.createTempDirectory("graft_step").toString
+    def run(runId: String) = ExtractJob.run(spark, docs, out, buckets = 16, groups = 4,
+      runId = runId, partitions = 4)
+    run("full")
+    val ckptDir = new java.io.File(s"$out/_checkpoint")
+    def listing(table: String) = new java.io.File(s"$out/$table").list().toSet
+    // the checkpoint file of the last unit (buckets 12-15)
+    def lastUnit = new java.io.File(new java.net.URI(spark.read.parquet(ckptDir.getPath)
+      .where("bucket = 15").select(org.apache.spark.sql.functions.input_file_name())
+      .as[String].head()))
+
+    // (c) the last unit's file renamed into place: nothing to do, nothing appended
+    val files = (listing("_checkpoint"), listing("_metrics"))
+    val rc = run("after-renamed")
+    assert(rc.processed == 0 && rc.skipped == 16)
+    assert((listing("_checkpoint"), listing("_metrics")) == files)
+    assert(collectOut(out) == collectOut(cold))
+
+    // (a) data written, checkpoint missing: only the last unit re-runs
+    assert(lastUnit.delete())
+    val ra = run("after-data")
+    assert(ra.processed == 4 && ra.skipped == 12)
+    assert(collectOut(out) == collectOut(cold))
+
+    // (b) checkpoint written under its hidden temp name, not renamed: the
+    // unit re-runs, and the leftover temp file is neither read nor counted
+    val written = lastUnit
+    val temp = new java.io.File(ckptDir, "." + written.getName)
+    assert(written.renameTo(temp))
+    // (the re-run of (a) committed its 4 buckets as 4 one-bucket units)
+    val rb = run("after-temp")
+    assert(rb.processed == 1 && rb.skipped == 15)
+    assert(collectOut(out) == collectOut(cold))
+    assert(temp.exists())
+    val ckpt = spark.read.parquet(ckptDir.getPath)
+    assert(ckpt.count() == 16)
+    assert(ckpt.agg(org.apache.spark.sql.functions.sum("docs")).as[Long].head() == n)
+  }
+
   test("ExtractJob.run leaves the caller's job description and session conf as it found them") {
     val sc = spark.sparkContext
     val mode = "spark.sql.sources.partitionOverwriteMode"
