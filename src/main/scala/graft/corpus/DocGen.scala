@@ -195,7 +195,7 @@ object DocGen {
 
   case class ADoc(docId: String, pages: Vector[APage])
 
-  /** Page-count distribution with the skew the salting must defeat
+  /** Page-count distribution with the skew the routing must balance
     * (FIXTURES.md §2): 80% 1-3 pages, 15% 4-12, 5% 13-64. */
   private def nPages(r: SplitMix64): Int = {
     val roll = r.nextDouble()
@@ -204,9 +204,7 @@ object DocGen {
     else 13 + r.nextInt(52)
   }
 
-  /** Page count of a doc without generating it (replays the first draws) —
-    * lets the job salt-repartition the doc_id stream before materializing
-    * any heavy rows. */
+  /** Page count of a doc without generating it (replays the first draws). */
   def pageCount(docId: String): Int = nPages(Rng.stream("gen", docId))
 
   def authored(docId: String): ADoc = {

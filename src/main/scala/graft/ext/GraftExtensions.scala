@@ -69,12 +69,12 @@ object GraftExtensions {
     ("matched_chars", "matched_chars(s, pattern) - total chars covered by regex matches",
       args => MatchedChars(args(0), litPattern(args(1), "matched_chars"))))
 
-  /** Register the engine's SQL functions into an EXISTING session (idempotent;
-    * createOrReplace semantics). Queries that emit SQL text with these
+  /** Register the engine's SQL functions into an EXISTING session (a name
+    * it already has is left as it is). Queries that emit SQL text with these
     * functions call this first, so Verify/Bench sessions built without
     * `spark.sql.extensions` still resolve them. */
   def install(spark: SparkSession): Unit =
     functions.foreach { case (name, _, builder) =>
-      GraftShim.registerFn(spark, name, builder)
+      if (!spark.catalog.functionExists(name)) GraftShim.registerFn(spark, name, builder)
     }
 }

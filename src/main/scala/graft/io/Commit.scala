@@ -6,7 +6,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -49,13 +49,14 @@ object Commit {
   /** Commits `extract` over `input` into `outDir`: the buckets not yet
     * done run in `groups` sequential units, and `failAfterGroups` stops
     * after that many units (the resume specs' crash hook). `extract` maps
-    * a bucket-filtered slice of the input to a frame with a `doc_id`
-    * column (and `spans`, whose sizes the checkpoint counts, when it has
-    * one); bucketing hashes `doc_id` without deserializing `T`. `metrics`
-    * gives the caller's own `(stage, key, value)` rows; it is evaluated
-    * after the last unit, so it may read accumulators the units filled. */
+    * a unit's slice and each row's [[slice]] placement to a frame with a
+    * `doc_id` column (and `spans`, whose sizes the checkpoint counts, when
+    * it has one); routed by the placement, a unit writes at most
+    * `unitSize + partitions - 1` part files. `metrics` gives the caller's
+    * own `(stage, key, value)` rows; it is evaluated after the last unit,
+    * so it may read accumulators the units filled. */
   def runWith[T](spark: SparkSession, input: Dataset[T],
-      extract: Dataset[T] => DataFrame, outDir: String,
+      extract: (Dataset[T], Column) => DataFrame, outDir: String,
       buckets: Int, groups: Int, runId: String,
       failAfterGroups: Int = Int.MaxValue,
       metrics: => Seq[(String, String, Double)] = Nil): JobReport = {
@@ -69,13 +70,10 @@ object Commit {
     var totDocs = 0L
     var totSpans = 0L
     val t0 = System.nanoTime()
-    val bucketOf = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
 
     units.take(failAfterGroups).foreach { unit =>
-      // a unit spanning every bucket (fresh single-unit run) needs no
-      // bucket filter — skip the per-row hash predicate (r6)
-      val in = if (unit.size == buckets) input else input.filter(bucketOf.isin(unit: _*))
-      val res = extract(in).withColumn("bucket", bucketOf)
+      val (in, place) = slice(input, unit, buckets)
+      val res = extract(in, place).withColumn("bucket", bucketOf(buckets))
       // per-bucket lineage, counted by the write itself (an Iceberg
       // deployment reads these from commit metrics instead); non-span
       // stages (the dedup chain's pair/label tables) record rows only
@@ -120,6 +118,21 @@ object Commit {
     }
     JobReport(runId, buckets, processedBuckets, done.size, totDocs, totSpans, wallMs)
   }
+
+  /** The rows of `input` in `unit`'s buckets (ascending), and each row's
+    * placement in `[0, 1)`: its bucket's rank in `unit` plus
+    * [[graft.pipeline.Extract.hashFraction]], over the unit size. */
+  private[graft] def slice[T](input: Dataset[T], unit: Seq[Int],
+      buckets: Int): (Dataset[T], Column) = {
+    // a unit spanning every bucket (fresh single-unit run) needs no
+    // bucket filter — skip the per-row hash predicate (r6)
+    val in = if (unit.size == buckets) input else input.filter(bucketOf(buckets).isin(unit: _*))
+    val rank = array_position(lit(unit.toArray), bucketOf(buckets)) - 1
+    (in, (rank + graft.pipeline.Extract.hashFraction) / unit.size)
+  }
+
+  private def bucketOf(buckets: Int): Column =
+    pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
 
   /** Re-opens `stale` buckets of a committed table for the next run.
     * Their data dirs go first: dynamic overwrite replaces only partitions

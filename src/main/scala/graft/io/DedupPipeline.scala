@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.queries.ScaleQueries
@@ -86,7 +86,7 @@ object DedupPipeline {
       lazy val cur = fp
       val stale = if (incremental) Commit.stale(spark, stageOut, cur, nb) else Set.empty[Int]
       Commit.reopen(spark, stageOut, stale)
-      val report = Commit.runWith(spark, input, body, stageOut, nb,
+      val report = Commit.runWith[Row](spark, input, (slice, _) => body(slice), stageOut, nb,
         groups = if (incremental) math.min(2, nb) else 1, runId = name)
       if (stale.nonEmpty) Commit.storeFp(spark, stageOut, cur)
       name -> report

@@ -27,7 +27,7 @@ object ExtractJob {
       sc.longAccumulator("graft.layout.unsolvable"),
       sc.longAccumulator("graft.layout.insert_pages"))
     Commit.runWith[DocRow](spark, docs,
-      d => Extract.run(d, partitions, telemetry = Some(sink)).toDF(),
+      (d, place) => Extract.run(d, partitions, telemetry = Some(sink), place = place).toDF(),
       outDir, buckets, groups, runId, failAfterGroups,
       metrics = Seq(
         ("layout", "authored_away_pages", sink.authoredAway.value.toDouble),
@@ -109,7 +109,7 @@ object ExtractJob {
     // empty-span row and a counted metric, the crawl-ingestion contract
     val failed = spark.sparkContext.longAccumulator("graft.ingest.failed_docs")
     Commit.runWith[org.apache.spark.sql.Row](spark, blobs,
-      in => in.select(col("doc_id"), col("content")).as[(String, Array[Byte])]
+      (in, _) => in.select(col("doc_id"), col("content")).as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
             try (id, Sniff.convert(id, bytes).spans)

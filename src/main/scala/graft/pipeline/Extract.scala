@@ -9,16 +9,16 @@ import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
 /** End-to-end extraction job (SURVEY.md §3.1 Spark shape):
   *
   *   input docs table
-  *     -> salted repartition on doc-size buckets   (defeats page-count skew)
-  *     -> mapPartitions kernel stage               (per-partition model session)
+  *     -> repartitionById on each doc's placement   (contiguous, balanced tasks)
+  *     -> mapPartitions kernel stage                (per-partition model session)
   *     -> page ops + doc assembly (fused — docs stay whole, zero extra shuffle)
   *     -> result Dataset[DocResult]
   *
   * Keeping each document whole through one mapPartitions fuses kernel,
   * page processing and doc-level folds into a single stage: the only
-  * shuffle in the job is the skew-balancing repartition. At the
-  * reference's 64-page windows a whole doc is far below task granularity,
-  * so a page-level fan-out would buy a second shuffle for nothing. */
+  * shuffle in the job is the routing repartition. At the reference's
+  * 64-page windows a whole doc is far below task granularity, so a
+  * page-level fan-out would buy a second shuffle for nothing. */
 object Extract {
 
   /** Pure per-document extraction — unit-testable without Spark. */
@@ -52,57 +52,45 @@ object Extract {
     docs.map(d => extractDoc(d, model))
   }
 
-  /** Salted repartition on a size bucket (0 small, 1 mid, 2 monster; the
-    * skew axis — 5% of docs have 13-64 pages). The salt space must be
-    * FINE-GRAINED (~64 salts per partition per bucket): with only a few
-    * (bucket, salt) combos per partition, combo-level hash clumping
-    * re-creates the very imbalance salting is meant to remove (measured:
-    * 2.1x max/mean pages at 6 combos/partition vs 1.1x at 192/partition,
-    * BASELINE.md). Monster-doc buckets get a 4x-wider space so several
-    * monsters can never share a (bucket, salt) cell. */
-  private def salted(df: DataFrame, sizeBucket: Column, partitions: Int): DataFrame =
-    df.withColumn("size_bucket", sizeBucket)
-      .withColumn("salt",
-        pmod(xxhash64(col("doc_id")),
-          when(col("size_bucket") === 2, lit(partitions * 256))
-            .otherwise(lit(partitions * 64))))
-      .repartition(partitions, col("size_bucket"), col("salt"))
+  /** A document's placement in `[0, 1)` by a hash of its id independent
+    * of the commit bucket's `xxhash64(doc_id)`, so a unit's bucket filter
+    * leaves it uniform. An odd multiple of 2^-21, it never sits on a task
+    * boundary of [[route]]. */
+  def hashFraction: Column =
+    (pmod(xxhash64(lit(1), col("doc_id")), lit(1L << 20)) * 2 + 1) / (1L << 21)
 
-  /** Salted repartition of whole documents: span count proxies page count. */
-  def saltRepartition(docs: Dataset[DocRow], partitions: Int): Dataset[DocRow] = {
-    import docs.sparkSession.implicits._
-    val spans = size(col("spans"))
-    salted(docs.toDF(),
-      when(spans <= 32, lit(0)).when(spans <= 128, lit(1)).otherwise(lit(2)), partitions)
-      .select(col("doc_id"), col("spans"))
-      .as[DocRow]
-  }
+  /** The one shuffle of an extraction: row to task `floor(place × partitions)`,
+    * one contiguous run of placements per task; a uniform placement spreads
+    * page-count skew as evenly as the documents (BalanceSpec). A placement
+    * `(k + hashFraction) / n` with `n × partitions < 2^31` is at least
+    * `2^-21 / n` off every task boundary, far above the double error. */
+  private[graft] def route[T](ds: Dataset[T], partitions: Int, place: Column): Dataset[T] =
+    ds.repartitionById(partitions, floor(place * partitions).cast("int"))
 
   /** The extraction job. `model` defaults to the deterministic stub; a real
     * deployment swaps in an ONNX-backed DocModel with the same contract.
     * `telemetry`: driver-registered layout-validation accumulators,
     * installed per partition (task threads) so the counters reach the
-    * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]). */
+    * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]).
+    * `place`: each document's placement in `[0, 1)`, see [[route]]. */
   def run(docs: Dataset[DocRow], partitions: Int = 32,
       model: DocModel = StubModel,
-      telemetry: Option[LayoutTelemetry.Sink] = None): Dataset[DocResult] = {
+      telemetry: Option[LayoutTelemetry.Sink] = None,
+      place: Column = hashFraction): Dataset[DocResult] = {
     import docs.sparkSession.implicits._
-    saltRepartition(docs, partitions)
+    route(docs, partitions, place)
       .mapPartitions(it => extractPartition(it, model, telemetry))
   }
 
-  /** Generation-fused variant: salt-repartition the doc_id STREAM (the size
-    * bucket is derivable from the id), then generate + extract inside one
-    * mapPartitions. The only shuffle moves bare id strings — the pattern a
-    * real deployment gets from a bucket-partitioned input table, where the
-    * heavy rows never cross the wire either. */
+  /** Generation-fused variant: route the doc_id STREAM, then generate +
+    * extract inside one mapPartitions. The only shuffle moves bare id
+    * strings — the pattern a real deployment gets from a
+    * bucket-partitioned input table, where the heavy rows never cross the
+    * wire either. */
   def runFromIds(ids: Dataset[String], partitions: Int = 32,
       model: DocModel = StubModel): Dataset[DocResult] = {
     import ids.sparkSession.implicits._
-    val pages = col("pages")
-    salted(ids.map(id => (id, DocGen.pageCount(id))).toDF("doc_id", "pages"),
-      when(pages <= 3, lit(0)).when(pages <= 12, lit(1)).otherwise(lit(2)), partitions)
-      .select(col("doc_id")).as[String]
+    route(ids.toDF("doc_id").as[String], partitions, hashFraction)
       .mapPartitions(it => extractPartition(it.map(DocGen.docRow), model))
   }
 

@@ -46,7 +46,7 @@ class CommitRetrySpec extends AnyFunSuite {
         sc.longAccumulator("graft.layout.insert_pages"))
       FailsOnce.thrown.set(0)
       Commit.runWith[DocRow](spark, docs,
-        d => Extract.run(d, 4, FailsOnce, Some(sink)).toDF(),
+        (d, place) => Extract.run(d, 4, FailsOnce, Some(sink), place).toDF(),
         retried, buckets = 16, groups = 2, runId = "retried",
         metrics = Seq(
           ("layout", "authored_away_pages", sink.authoredAway.value.toDouble),
@@ -54,12 +54,12 @@ class CommitRetrySpec extends AnyFunSuite {
           ("layout", "insert_pages", sink.insertPages.value.toDouble)))
       assert(FailsOnce.thrown.get == 2, "each unit's write must have retried one task")
 
-      def ckpt(dir: String) = spark.read.parquet(s"$dir/_checkpoint")
+      def ckpt(dir: String) = SideTable.read(spark, s"$dir/_checkpoint")
         .select("bucket", "docs", "spans").as[(Int, Long, Long)].collect().sorted.toSeq
       assert(ckpt(retried) == ckpt(cold))
       assert(ckpt(cold).map(_._2).sum == 300L)
 
-      def counters(dir: String) = spark.read.parquet(s"$dir/_metrics")
+      def counters(dir: String) = SideTable.read(spark, s"$dir/_metrics")
         .filter(col("stage") === "layout" || col("key").isin("docs", "spans"))
         .select("key", "value").as[(String, Double)].collect().toMap
       val want = counters(cold)

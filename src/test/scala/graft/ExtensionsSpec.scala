@@ -60,13 +60,20 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions.install is idempotent and coexists with the extension path") {
-    // install() targets Verify/Bench's bare sessions (createOrReplaceTemp
-    // semantics); here it must also be a safe no-op-like overlay on a
-    // session that ALREADY has the functions via spark.sql.extensions —
-    // classifyRouterV2 calls it unconditionally on whatever session it gets
+    // install() targets Verify/Bench's bare sessions; here it must also be
+    // a no-op on a session that ALREADY has the functions via
+    // spark.sql.extensions — classifyRouterV2 calls it unconditionally on
+    // whatever session it gets
     val s = spark.newSession()
+    // each registration gets a fresh ExpressionInfo: the same object after
+    // both calls means neither replaced the extension's
+    def entry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .functionRegistry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("count_matches"))
+    val first = entry
     graft.ext.GraftExtensions.install(s)
-    graft.ext.GraftExtensions.install(s) // twice: createOrReplace, no conflict
+    graft.ext.GraftExtensions.install(s) // twice: the first registration stays
+    assert(first.isDefined && entry.get.eq(first.get))
     import s.implicits._
     assert(s.sql("SELECT count_matches('aXbXc', 'X') AS n").as[Int].head() == 2)
     assert(s.sql("SELECT matched_chars('..mm....', '\\\\.{2,}') AS n").as[Int].head() == 6)

@@ -77,6 +77,11 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       spark.sparkContext.removeSparkListener(labels)
     }
     assert(writes.size == 2, "the two units' write plans never arrived")
+    // routed by bucket range: a 2-bucket unit over 2 tasks puts one whole
+    // bucket in each task, so each bucket is one part file
+    val parts = (0 until 4).map(b => new java.io.File(s"$out/data/bucket=$b")
+      .list().count(f => f.startsWith("part-") && f.endsWith(".parquet")))
+    assert(parts == Seq(1, 1, 1, 1), s"part files per bucket: $parts")
     // no bookkeeping job: no stats, checkpoint, metrics or side-table read
     assert(jobs.toArray.toSet == Set("plan:write"), s"jobs: $jobs")
 

@@ -68,13 +68,13 @@ class ResumeSpec extends AnyFunSuite {
 
     // lineage: every bucket has exactly one done row, doc counts add up
     import spark.implicits._
-    val ckpt = spark.read.parquet(s"$warm/_checkpoint")
+    val ckpt = SideTable.read(spark, s"$warm/_checkpoint")
     assert(ckpt.count() == 16)
     assert(ckpt.agg(org.apache.spark.sql.functions.sum("docs")).as[Long].head() == n)
 
     // layout-validation invariant rides the _metrics table (accumulator
     // channel): rows exist for every run and are ZERO on the clean corpus
-    val m = spark.read.parquet(s"$cold/_metrics")
+    val m = SideTable.read(spark, s"$cold/_metrics")
       .filter(org.apache.spark.sql.functions.col("stage") === "layout")
       .select("key", "value").as[(String, Double)].collect().toMap
     assert(m.contains("authored_away_pages") && m.contains("unsolvable_pages"),
@@ -93,14 +93,14 @@ class ResumeSpec extends AnyFunSuite {
     assert(inserts > 0, "no insert-layout page in the corpus")
     assert(m("insert_pages") == inserts, s"cold insert_pages ${m("insert_pages")} != $inserts")
     // the two warm attempts each count only their own buckets
-    val warmInserts = spark.read.parquet(s"$warm/_metrics")
+    val warmInserts = SideTable.read(spark, s"$warm/_metrics")
       .filter("stage = 'layout' AND key = 'insert_pages'")
       .select("run_id", "value").as[(String, Double)].collect()
     assert(warmInserts.map(_._1).sorted.toSeq == Seq("attempt-1", "attempt-2"))
     assert(warmInserts.map(_._2).sum == inserts,
       s"warm insert_pages ${warmInserts.toSeq} do not sum to $inserts")
     // one `_metrics` append per attempt carries the layout rows too
-    assert(spark.read.parquet(s"$warm/_metrics")
+    assert(SideTable.read(spark, s"$warm/_metrics")
       .select(org.apache.spark.sql.functions.input_file_name()).distinct().count() == 2)
   }
 
@@ -117,7 +117,7 @@ class ResumeSpec extends AnyFunSuite {
     val ckptDir = new java.io.File(s"$out/_checkpoint")
     def listing(table: String) = new java.io.File(s"$out/$table").list().toSet
     // the checkpoint file of the last unit (buckets 12-15)
-    def lastUnit = new java.io.File(new java.net.URI(spark.read.parquet(ckptDir.getPath)
+    def lastUnit = new java.io.File(new java.net.URI(SideTable.read(spark, ckptDir.getPath)
       .where("bucket = 15").select(org.apache.spark.sql.functions.input_file_name())
       .as[String].head()))
 
@@ -144,7 +144,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(rb.processed == 1 && rb.skipped == 15)
     assert(collectOut(out) == collectOut(cold))
     assert(temp.exists())
-    val ckpt = spark.read.parquet(ckptDir.getPath)
+    val ckpt = SideTable.read(spark, ckptDir.getPath)
     assert(ckpt.count() == 16)
     assert(ckpt.agg(org.apache.spark.sql.functions.sum("docs")).as[Long].head() == n)
   }
@@ -223,7 +223,7 @@ class ResumeSpec extends AnyFunSuite {
       .selectExpr("doc_id", "size(spans) AS n").as[(String, Int)].collect().toMap
     assert(spans("doc-bad-zip") == 0 && spans("doc-bad-pdf") == 0)
     assert(spans("doc-000000000000") > 0 && spans("doc-000000000001") > 0)
-    val failed = spark.read.parquet(s"$out/_metrics")
+    val failed = SideTable.read(spark, s"$out/_metrics")
       .filter(org.apache.spark.sql.functions.col("key") === "failed_docs")
       .selectExpr("value").as[Double].collect().sum
     assert(failed == 2.0, s"failed_docs metric = $failed")

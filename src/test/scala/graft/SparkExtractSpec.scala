@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.corpus.DocGen
 import graft.pipeline.Extract
 
-/** End-to-end Spark run of the extraction job (salted repartition + kernel
+/** End-to-end Spark run of the extraction job (routing repartition + kernel
   * mapPartitions + assembly) against the golden oracle — the distributed
   * path must agree with the pure per-doc path regardless of partitioning. */
 class SparkExtractSpec extends AnyFunSuite {
