@@ -204,6 +204,11 @@ object DocGen {
     else 13 + r.nextInt(52)
   }
 
+  /** The doc id of corpus index `i`: `doc-` and `i` in 12 zero-padded
+    * digits. The one place the id format lives in Scala; the DuckDB oracles
+    * spell it once too (`Oracles.docIdSql`). */
+  def docId(i: Long): String = f"doc-$i%012d"
+
   /** Page count of a doc without generating it (replays the first draws). */
   def pageCount(docId: String): Int = nPages(Rng.stream("gen", docId))
 

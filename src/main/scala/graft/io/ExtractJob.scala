@@ -104,18 +104,16 @@ object ExtractJob {
       outDir: String, buckets: Int = 64, groups: Int = 8,
       runId: String = "run-1", failAfterGroups: Int = Int.MaxValue): Commit.JobReport = {
     import spark.implicits._
-    // per-DOCUMENT error isolation: a corrupt crawl blob (truncated zip,
-    // garbage xref, binary noise) must not kill the task — it becomes an
-    // empty-span row and a counted metric, the crawl-ingestion contract
+    // a corrupt crawl blob becomes an empty-span row and a counted
+    // metric, the crawl-ingestion contract ([[Sniff.guarded]])
     val failed = spark.sparkContext.longAccumulator("graft.ingest.failed_docs")
     Commit.runWith[org.apache.spark.sql.Row](spark, blobs,
       (in, _) => in.select(col("doc_id"), col("content")).as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
-            try (id, Sniff.convert(id, bytes).spans)
-            catch { case scala.util.control.NonFatal(_) =>
-              failed.add(1L)
-              (id, Seq.empty[graft.schema.OutSpan])
+            Sniff.guarded(id, bytes) match {
+              case Some(res) => (id, res.spans)
+              case None => failed.add(1L); (id, Seq.empty[OutSpan])
             }
           }
         }.toDF("doc_id", "spans"),

@@ -43,4 +43,12 @@ object Sniff {
         }
       else graft.html.HtmlConvert.result(id, bytes)
     }
+
+  /** Per-document isolation for every raw-blob path: [[convert]]'s
+    * result, or None when the blob is corrupt (truncated zip, garbage
+    * xref, binary noise) and the converter throws a non-fatal error. One
+    * bad blob must not kill the task that holds it. */
+  def guarded(id: String, bytes: Array[Byte]): Option[DocResult] =
+    try Some(convert(id, bytes))
+    catch { case scala.util.control.NonFatal(_) => None }
 }

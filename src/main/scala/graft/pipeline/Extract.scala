@@ -33,10 +33,10 @@ object Extract {
     ids.map(DocGen.docRow _)
   }
 
-  /** Synthesize n doc ids "doc-%012d". */
+  /** Synthesize the doc ids of indexes `0 until n` ([[DocGen.docId]]). */
   def idRange(spark: SparkSession, n: Long): Dataset[String] = {
     import spark.implicits._
-    spark.range(n).map(i => f"doc-$i%012d")
+    spark.range(n).map(i => DocGen.docId(i))
   }
 
   /** THE per-partition body of every Spark extraction path (`run`,
@@ -120,9 +120,10 @@ object Extract {
   def extractDocs(spark: SparkSession, dir: String): Dataset[graft.schema.DocResult] =
     run(corpus(docIds(spark, dir)))
 
-  private def docIds(spark: SparkSession, dir: String): Dataset[String] = {
+  /** The ids of the documents table in `dir`. */
+  private[graft] def docIds(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
     spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id")).as[Long].map(i => f"doc-$i%012d")
+      .select(col("doc_id")).as[Long].map(DocGen.docId _)
   }
 }

@@ -23,27 +23,35 @@ object Oracles {
       |    WHEN 11 THEN 'abandon' ELSE 'text' END AS cat
       |  FROM words)""".stripMargin
 
+  /** [[graft.corpus.DocGen.docId]] in DuckDB SQL, over a `documents` row. */
+  private val docIdSql = "'doc-' || lpad(doc_id::VARCHAR, 12, '0')"
+
+  /** The committed golden tables' dir, relative to the checkout
+    * ([[graft.tools.GoldenDump]] freezes them). */
+  val GoldenDir = "src/test/resources/golden"
+
+  /** The committed golden table `name` as the oracle SQL reads it. DuckDB
+    * runs that SQL outside the checkout, so the path is absolute: the one
+    * fixed checkout location the oracles are run against. */
+  def goldenPath(name: String): String = s"/root/repo/$GoldenDir/$name.parquet"
+
+  /** A span table's oracle: the rows of the committed golden `name`
+    * (doc ids 0..4999) for the ids the sf dir contains. */
+  private def goldenSpans(name: String): String =
+    s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
+       |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
+       |FROM read_parquet('${goldenPath(name)}') g
+       |JOIN ids ON g.doc_id = ids.did
+       |ORDER BY g.doc_id, g.ord""".stripMargin
+
   val all: Map[String, String] = Map(
     // Full value-level oracle for the extraction pipeline: the committed
-    // golden parquet is addressed by the driver-protocol checkout path
-    // (/root/repo — the only filesystem layout the driver runs);
-    // golden parquet holds the renderer-side expected span sequences
-    // (graft.tools.OracleDump, independent of the pipeline code) for doc
-    // ids 0..4999; join restricts to whichever ids the sf dir contains.
-    "extract_pipeline" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    // extract_golden holds the renderer-side expected span sequences
+    // (graft.tools.GoldenDump, independent of the pipeline code)
+    "extract_pipeline" -> goldenSpans("extract_golden"),
 
     // the whole-operator exec variant shares the extraction golden
-    "extract_exec" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    "extract_exec" -> goldenSpans("extract_golden"),
 
     "det_low_conf_filter" ->
       s"""$detsCte
@@ -178,8 +186,8 @@ object Oracles {
     // verifies generation determinism, the regex measurements and the
     // ladder together
     "classify_router_v2" ->
-      s"""WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
-         |rp AS (SELECT g.* FROM read_parquet('/root/repo/src/test/resources/golden/classify_raw.parquet') g
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents),
+         |rp AS (SELECT g.* FROM read_parquet('${goldenPath("classify_raw")}') g
          |  JOIN ids ON g.doc_id = ids.did),
          |wp AS (SELECT *, count(*) OVER (PARTITION BY doc_id) AS pc FROM rp),
          |sampled AS (SELECT * FROM wp WHERE ${ClassifySignals.samplePredicate(spark = false)}),
@@ -249,8 +257,8 @@ object Oracles {
         s"""sum(len(regexp_extract_all(text, '$words')) +
            |      len(regexp_extract_all(text, '$marks')))::BIGINT AS $lang""".stripMargin
       }.mkString(",\n  ")
-      s"""WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
-         |rp AS (SELECT g.* FROM read_parquet('/root/repo/src/test/resources/golden/classify_raw.parquet') g
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents),
+         |rp AS (SELECT g.* FROM read_parquet('${goldenPath("classify_raw")}') g
          |  JOIN ids ON g.doc_id = ids.did),
          |c AS (SELECT doc_id,
          |  sum(len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')))::BIGINT AS han,
@@ -283,8 +291,8 @@ object Oracles {
       val scriptCases = Queries.ScriptLangs.map { case (name, lang) =>
         s"WHEN 2 * $name > cl THEN '$lang'"
       }.mkString("\n    ")
-      s"""WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
-         |rp AS (SELECT g.* FROM read_parquet('/root/repo/src/test/resources/golden/classify_raw.parquet') g
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents),
+         |rp AS (SELECT g.* FROM read_parquet('${goldenPath("classify_raw")}') g
          |  JOIN ids ON g.doc_id = ids.did),
          |c AS (SELECT doc_id,
          |  sum(len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')))::BIGINT AS han,
@@ -423,9 +431,9 @@ object Oracles {
         |ORDER BY doc_id, chunk_id""".stripMargin,
 
     "chunk_locate" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents),
         |g AS (SELECT g.doc_id, g.ord, g.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |  FROM read_parquet('${goldenPath("extract_golden")}') g
         |  JOIN ids ON g.doc_id = ids.did),
         |t AS (SELECT doc_id, ord,
         |  CASE WHEN text = '' THEN 0 ELSE len(string_split(text, ' ')) END AS toks FROM g),
@@ -448,9 +456,9 @@ object Oracles {
     // to the FIRST >0.95 block; expansion is the maximal contiguous
     // substring-contained run around the anchor (empty texts break it).
     "chunk_locate_fuzzy" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents),
         |g AS (SELECT g.doc_id, g.ord::INT AS ord, g.kind, g.media_ref, g.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |  FROM read_parquet('${goldenPath("extract_golden")}') g
         |  JOIN ids ON g.doc_id = ids.did),
         |t AS (SELECT doc_id, ord, kind, media_ref, text,
         |  CASE WHEN text = '' THEN 0 ELSE len(string_split(text, ' ')) END AS toks FROM g),
@@ -496,73 +504,53 @@ object Oracles {
         |ORDER BY b.doc_id, a.chunk_id, b.ord""".stripMargin,
 
     "table_classify" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
         |SELECT g.doc_id, g.ord,
         |  CASE WHEN g.text LIKE '<table border%' THEN 'wired' ELSE 'wireless' END AS cls
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |FROM read_parquet('${goldenPath("extract_golden")}') g
         |JOIN ids ON g.doc_id = ids.did
         |WHERE g.kind = 'table'
         |ORDER BY g.doc_id, g.ord""".stripMargin,
 
     "checkbox_state" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
         |SELECT g.doc_id, g.ord,
         |  CASE WHEN g.text LIKE '☑%' THEN 'Ticked' ELSE 'Unticked' END AS state
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |FROM read_parquet('${goldenPath("extract_golden")}') g
         |JOIN ids ON g.doc_id = ids.did
         |WHERE g.kind = 'checkbox'
         |ORDER BY g.doc_id, g.ord""".stripMargin,
 
     "hyperlink_spans" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
         |SELECT g.doc_id, g.ord, g.text, g.media_ref AS url
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |FROM read_parquet('${goldenPath("extract_golden")}') g
         |JOIN ids ON g.doc_id = ids.did
         |WHERE g.kind = 'hyperlink'
         |ORDER BY g.doc_id, g.ord""".stripMargin,
 
     "seal_texts" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
         |SELECT g.doc_id, g.ord, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |FROM read_parquet('${goldenPath("extract_golden")}') g
         |JOIN ids ON g.doc_id = ids.did
         |WHERE g.kind = 'seal'
         |ORDER BY g.doc_id, g.ord""".stripMargin,
 
-    "office_extract" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/office_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    "office_extract" -> goldenSpans("office_golden"),
 
-    "html_extract" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/html_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    "html_extract" -> goldenSpans("html_golden"),
 
-    "pdf_extract" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/pdf_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    "pdf_extract" -> goldenSpans("pdf_golden"),
 
     // the windowed slicing loop must reproduce the whole-file parse, so
     // its oracle IS the pdf_extract golden replay
-    "pdf_page_slice" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
-        |SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |FROM read_parquet('/root/repo/src/test/resources/golden/pdf_golden.parquet') g
-        |JOIN ids ON g.doc_id = ids.did
-        |ORDER BY g.doc_id, g.ord""".stripMargin,
+    "pdf_page_slice" -> goldenSpans("pdf_golden"),
 
     "pdf_hyperlinks" ->
-      """WITH ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT $docIdSql AS did FROM documents)
         |SELECT g.doc_id, g.ord, g.text, g.media_ref AS url
-        |FROM read_parquet('/root/repo/src/test/resources/golden/pdf_golden.parquet') g
+        |FROM read_parquet('${goldenPath("pdf_golden")}') g
         |JOIN ids ON g.doc_id = ids.did
         |WHERE g.kind = 'hyperlink'
         |ORDER BY g.doc_id, g.ord""".stripMargin,
@@ -570,26 +558,26 @@ object Oracles {
     // the raw router: doc index mod 5 -> office / html / pdf / image /
     // legacy-office golden; a mis-route in any direction breaks the compare
     "ingest_raw" ->
-      """WITH ids AS (SELECT doc_id AS i, 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents)
+      s"""WITH ids AS (SELECT doc_id AS i, $docIdSql AS did FROM documents)
         |SELECT * FROM (
         |  SELECT g.doc_id, g.ord, g.kind, g.media_ref, g.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/office_golden.parquet') g
+        |  FROM read_parquet('${goldenPath("office_golden")}') g
         |  JOIN ids ON g.doc_id = ids.did AND ids.i % 5 = 0
         |  UNION ALL
         |  SELECT h.doc_id, h.ord, h.kind, h.media_ref, h.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/html_golden.parquet') h
+        |  FROM read_parquet('${goldenPath("html_golden")}') h
         |  JOIN ids ON h.doc_id = ids.did AND ids.i % 5 = 1
         |  UNION ALL
         |  SELECT p.doc_id, p.ord, p.kind, p.media_ref, p.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/pdf_golden.parquet') p
+        |  FROM read_parquet('${goldenPath("pdf_golden")}') p
         |  JOIN ids ON p.doc_id = ids.did AND ids.i % 5 = 2
         |  UNION ALL
         |  SELECT m.doc_id, m.ord, m.kind, m.media_ref, m.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/image_golden.parquet') m
+        |  FROM read_parquet('${goldenPath("image_golden")}') m
         |  JOIN ids ON m.doc_id = ids.did AND ids.i % 5 = 3
         |  UNION ALL
         |  SELECT o.doc_id, o.ord, o.kind, o.media_ref, o.text
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/ole_golden.parquet') o
+        |  FROM read_parquet('${goldenPath("ole_golden")}') o
         |  JOIN ids ON o.doc_id = ids.did AND ids.i % 5 = 4
         |) ORDER BY doc_id, ord""".stripMargin,
 
@@ -598,11 +586,11 @@ object Oracles {
     // golden spans — an independent implementation of the same splitter
     // semantics the Spark side walks in Scala
     "chunk_blocks" ->
-      """WITH RECURSIVE ids AS (SELECT 'doc-' || lpad(doc_id::VARCHAR, 12, '0') AS did FROM documents),
+      s"""WITH RECURSIVE ids AS (SELECT $docIdSql AS did FROM documents),
         |g AS (SELECT g.doc_id, g.ord::INT AS ord, g.kind,
         |    CASE WHEN g.text = '' THEN 0 ELSE len(string_split(g.text, ' ')) END AS toks,
         |    row_number() OVER (PARTITION BY g.doc_id ORDER BY g.ord) AS rn
-        |  FROM read_parquet('/root/repo/src/test/resources/golden/extract_golden.parquet') g
+        |  FROM read_parquet('${goldenPath("extract_golden")}') g
         |  JOIN ids ON g.doc_id = ids.did),
         |walk AS (
         |  SELECT doc_id, rn, ord, toks, 1 AS chunk_id, toks AS cum FROM g WHERE rn = 1

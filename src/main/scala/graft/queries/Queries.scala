@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.corpus.DocGen
+import graft.schema.OutSpan
 
 /** SQL-checkable operator queries over the driver testdata tables.
   *
@@ -28,12 +30,32 @@ object Queries {
     * partition count keeps AQE from coalescing the tiny exchange back to
     * one partition; hash-on-doc_id (not round-robin) stays deterministic
     * under retries and skips the sort-before-repartition pass. */
-  private def converterIds(spark: SparkSession, dir: String): org.apache.spark.sql.Dataset[String] = {
+  private def converterIds(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
     tbl(spark, dir, "documents")
       .select(col("doc_id"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .as[Long].map(i => f"doc-$i%012d")
+      .as[Long].map(DocGen.docId _)
+  }
+
+  /** The span-row frame every span table shares: each id's spans from
+    * `spans`, exploded inside the partition to ordered `(doc_id, ord,
+    * kind, media_ref, text)` rows, `ord` being the span's `order`. The
+    * converter queries and their committed goldens
+    * ([[graft.tools.GoldenDump]]) are both this frame. */
+  private[graft] def spanRows(ids: Dataset[String])(spans: String => Seq[OutSpan]): DataFrame = {
+    import ids.sparkSession.implicits._
+    ids.mapPartitions(_.flatMap { id =>
+      spans(id).map(s => (id, s.order, s.kind, s.media_ref, s.text))
+    }).toDF("doc_id", "ord", "kind", "media_ref", "text")
+      .orderBy("doc_id", "ord")
+  }
+
+  /** Each document's raw text layer ([[DocGen.rawPages]]), generated
+    * live; the classify_raw golden is its frozen copy. */
+  private def rawPages(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    graft.pipeline.Extract.docIds(spark, dir).flatMap(DocGen.rawPages).toDF()
   }
 
   /** Deterministic synthetic layout-det table derived from `documents`:
@@ -291,12 +313,8 @@ object Queries {
     * runs (dot-leader TOC lines exempted). High image coverage alone does
     * NOT flip to ocr (pdf_classify.py:219-232) — `img_cov_pct` shows it. */
   def classifyRouterV2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     graft.ext.GraftExtensions.install(spark) // count_matches / matched_chars
-    val ids = tbl(spark, dir, "documents")
-      .select(col("doc_id")).as[Long].map(i => f"doc-$i%012d")
-    val raw = ids.flatMap(id => graft.corpus.DocGen.rawPages(id)).toDF()
-    val sampled = raw
+    val sampled = rawPages(spark, dir)
       .withColumn("pc", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .filter(expr(ClassifySignals.samplePredicate(spark = true)))
     sampled.createOrReplaceTempView("graft_classify_pages")
@@ -510,10 +528,7 @@ object Queries {
     * pages live; DuckDB recomputes the same regex tallies from the
     * committed classify_raw.parquet. */
   def langIdV2(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = tbl(spark, dir, "documents")
-      .select(col("doc_id")).as[Long].map(i => f"doc-$i%012d")
-    val raw = ids.flatMap(id => graft.corpus.DocGen.rawPages(id)).toDF()
+    val raw = rawPages(spark, dir)
     // latin stopword/diacritic profiles (r4): marker + diacritic tallies
     // per language from the SHARED pattern table
     val profiled = graft.queries.ClassifySignals.LatinMarkers
@@ -575,10 +590,7 @@ object Queries {
     * matching v2), then each script by majority over the cleaned length,
     * then the latin stopword/diacritic cascade. */
   def langIdV3(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = tbl(spark, dir, "documents")
-      .select(col("doc_id")).as[Long].map(i => f"doc-$i%012d")
-    val raw = ids.flatMap(id => graft.corpus.DocGen.rawPages(id)).toDF()
+    val raw = rawPages(spark, dir)
     val base = ScriptRanges.foldLeft(raw
       .withColumn("han", graft.functions.TextFns.countMatches(col("text"), """[\x{4E00}-\x{9FFF}]"""))
       .withColumn("kana", graft.functions.TextFns.countMatches(col("text"), """[\x{3040}-\x{30FF}]"""))
@@ -1050,34 +1062,20 @@ object Queries {
     * converter inside the partition — zip + DOM parse + relationship
     * resolution end to end — emitting the same span contract as the PDF
     * pipeline. Value-checked against the committed office golden parquet. */
-  def officeExtract(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = converterIds(spark, dir)
-    ids.mapPartitions { it =>
-      it.flatMap { id =>
-        val res = graft.office.OfficeConvert.convert(id, graft.corpus.OfficeGen.bytes(id))
-        res.spans.map(s => (id, s.order, s.kind, s.media_ref, s.text))
-      }
-    }.toDF("doc_id", "ord", "kind", "media_ref", "text")
-      .orderBy("doc_id", "ord")
-  }
+  def officeExtract(spark: SparkSession, dir: String): DataFrame =
+    spanRows(converterIds(spark, dir)) { id =>
+      graft.office.OfficeConvert.convert(id, graft.corpus.OfficeGen.bytes(id)).spans
+    }
 
   /** HTML main-content extraction (the north rule's "HTML boilerplate
     * strip + DOM heuristics" input tier): the engine generates each page's
     * XHTML live and runs the real DOM walk + tag/link-density strip
     * in-partition; DuckDB replays from the committed html_golden.parquet —
     * the compare covers generation determinism + the strip heuristics. */
-  def htmlExtract(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = converterIds(spark, dir)
-    ids.mapPartitions { it =>
-      it.flatMap { id =>
-        val spans = graft.html.HtmlConvert.convert(id, graft.corpus.HtmlGen.bytes(id))
-        spans.map(s => (id, s.order, s.kind, s.media_ref, s.text))
-      }
-    }.toDF("doc_id", "ord", "kind", "media_ref", "text")
-      .orderBy("doc_id", "ord")
-  }
+  def htmlExtract(spark: SparkSession, dir: String): DataFrame =
+    spanRows(converterIds(spark, dir)) { id =>
+      graft.html.HtmlConvert.convert(id, graft.corpus.HtmlGen.bytes(id))
+    }
 
   /** PDF byte-parse extraction (the reference's PRIMARY input tier,
     * main.py:604-636): the engine authors each doc's REAL PDF file live
@@ -1085,17 +1083,10 @@ object Queries {
     * parses it back from bytes in-partition; DuckDB replays from the
     * committed pdf_golden.parquet. Zero shuffles before the ordered dump
     * — the same narrow-map plan shape as office/html. */
-  def pdfExtract(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = converterIds(spark, dir)
-    ids.mapPartitions { it =>
-      it.flatMap { id =>
-        graft.pdf.PdfConvert.spans(id, graft.corpus.PdfGen.bytes(id))
-          .map(s => (id, s.order, s.kind, s.media_ref, s.text))
-      }
-    }.toDF("doc_id", "ord", "kind", "media_ref", "text")
-      .orderBy("doc_id", "ord")
-  }
+  def pdfExtract(spark: SparkSession, dir: String): DataFrame =
+    spanRows(converterIds(spark, dir)) { id =>
+      graft.pdf.PdfConvert.spans(id, graft.corpus.PdfGen.bytes(id))
+    }
 
   /** Byte-level page-range slicing driven through the reference's
     * 64-page windowed batching loop (main.py:296-368 over
@@ -1107,26 +1098,19 @@ object Queries {
     * pdf_golden replay as `pdf_extract` — the windowed loop must be
     * indistinguishable from the whole-file parse, which is exactly the
     * reference's contract for its batching loop. */
-  def pdfPageSlice(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ids = converterIds(spark, dir)
-    ids.mapPartitions { it =>
-      it.flatMap { id =>
-        val bytes = graft.corpus.PdfGen.bytes(id)
-        // parse-once windowing: the source xref walks once, every window
-        // re-serializes from the shared object model. An EMPTY window is
-        // PdfSlice's documented degrade value (a window that failed to
-        // serialize) — it contributes no spans rather than aborting the
-        // task on a parse of zero bytes.
-        graft.pdf.PdfSlice.windows(bytes, batch = 2)
-          .filter(_.nonEmpty)
-          .flatMap(wb => graft.pdf.PdfConvert.spans(id, wb))
-          .zipWithIndex
-          .map { case (s, ord) => (id, ord, s.kind, s.media_ref, s.text) }
-      }
-    }.toDF("doc_id", "ord", "kind", "media_ref", "text")
-      .orderBy("doc_id", "ord")
-  }
+  def pdfPageSlice(spark: SparkSession, dir: String): DataFrame =
+    spanRows(converterIds(spark, dir)) { id =>
+      // parse-once windowing: the source xref walks once, every window
+      // re-serializes from the shared object model. An EMPTY window is
+      // PdfSlice's documented degrade value (a window that failed to
+      // serialize) — it contributes no spans rather than aborting the
+      // task on a parse of zero bytes.
+      graft.pdf.PdfSlice.windows(graft.corpus.PdfGen.bytes(id), batch = 2)
+        .filter(_.nonEmpty)
+        .flatMap(wb => graft.pdf.PdfConvert.spans(id, wb))
+        .zipWithIndex
+        .map { case (s, ord) => s.copy(order = ord) }
+    }
 
   /** PDF-tier hyperlink spans: /Annots /Link rects bound to their anchor
     * lines by the byte-level parser (PDF 32000 §12.5.6.5; reference
@@ -1159,28 +1143,18 @@ object Queries {
     * single router `ExtractJob.runRaw` also uses). The oracle unions the
     * five committed goldens by index mod 5, so a routing mistake in any
     * direction breaks the compare. */
-  def ingestRaw(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // same single-row-group fan-out as converterIds (guide §2.5)
-    val ids = tbl(spark, dir, "documents").select(col("doc_id"))
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .as[Long]
-    ids.mapPartitions { it =>
-      it.flatMap { i =>
-        val id = f"doc-$i%012d"
-        val bytes = (i % 5) match {
-          case 0 => graft.corpus.OfficeGen.bytes(id)
-          case 1 => graft.corpus.HtmlGen.bytes(id)
-          case 2 => graft.corpus.PdfGen.bytes(id)
-          case 3 => graft.corpus.ImgGen.bytes(id)
-          case _ => graft.corpus.OleGen.bytes(id)
-        }
-        graft.io.Sniff.convert(id, bytes)
-          .spans.map(s => (id, s.order, s.kind, s.media_ref, s.text))
+  def ingestRaw(spark: SparkSession, dir: String): DataFrame =
+    spanRows(converterIds(spark, dir)) { id =>
+      // an index's last digit fixes its residue mod 5
+      val bytes = ((id.last - '0') % 5) match {
+        case 0 => graft.corpus.OfficeGen.bytes(id)
+        case 1 => graft.corpus.HtmlGen.bytes(id)
+        case 2 => graft.corpus.PdfGen.bytes(id)
+        case 3 => graft.corpus.ImgGen.bytes(id)
+        case _ => graft.corpus.OleGen.bytes(id)
       }
-    }.toDF("doc_id", "ord", "kind", "media_ref", "text")
-      .orderBy("doc_id", "ord")
-  }
+      graft.io.Sniff.convert(id, bytes).spans
+    }
 
   // ---------------------------------------------------------------------
   // Relational headliners over the TPC-H-ish tables

@@ -301,8 +301,9 @@ object ScaleQueries {
     * GROUPS stage body). */
   def dedupGroupsFrom(cands: DataFrame, docs: DataFrame): DataFrame = {
     val spark = cands.sparkSession
-    val pairs = cands
-      .select(col("doc_id"), col("b_id")).persist()
+    // pairs feeds only `edges`, which is cached itself; a cached `pairs`
+    // block is computed by both union branches' tasks at once
+    val pairs = cands.select(col("doc_id"), col("b_id"))
     val edges = pairs.select(col("doc_id").as("v"), col("b_id").as("u"))
       .unionByName(pairs.select(col("b_id").as("v"), col("doc_id").as("u")))
       .persist()
@@ -352,7 +353,7 @@ object ScaleQueries {
     val out = docs.select(col("doc_id"))
       .join(labels.select(col("v").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("group_id"))
-    pairs.unpersist(); edges.unpersist()
+    edges.unpersist()
     out
   }
 

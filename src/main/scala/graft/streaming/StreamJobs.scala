@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.{DocRow, DocResult}
@@ -12,13 +12,8 @@ import graft.pipeline.Extract
   * files, and watermarked event-rate monitoring. */
 object StreamJobs {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("spans", ArrayType(StructType(Seq(
-      StructField("kind", StringType),
-      StructField("text", StringType),
-      StructField("media_ref", StringType),
-      StructField("offset", IntegerType)))))))
+  /** The `DocRow` schema, as its encoder derives it. */
+  val docSchema: StructType = Encoders.product[DocRow].schema
 
   /** Continuous extraction over a parquet landing directory: each
     * micro-batch runs the same per-partition kernel + assembly as the batch
@@ -59,12 +54,8 @@ object StreamJobs {
             case -1 => base
             case dot => base.substring(0, dot)
           }
-          // per-document isolation, like the batch runRaw: a corrupt
-          // landed blob becomes an empty result, not a dead stream
-          try graft.io.Sniff.convert(id, bytes)
-          catch { case scala.util.control.NonFatal(_) =>
-            DocResult(id, Seq.empty, "")
-          }
+          // a corrupt landed blob becomes an empty result, not a dead stream
+          graft.io.Sniff.guarded(id, bytes).getOrElse(DocResult(id, Seq.empty, ""))
         }
       }
   }

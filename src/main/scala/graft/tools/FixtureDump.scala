@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * would still pass the live golden compare). */
 object FixtureDump {
   val fixtureIds: Seq[String] =
-    Seq(0, 3, 7, 31, 42, 77, 123, 199).map(i => f"doc-$i%012d")
+    Seq(0L, 3L, 7L, 31L, 42L, 77L, 123L, 199L).map(DocGen.docId)
 
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""

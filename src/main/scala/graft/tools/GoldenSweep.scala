@@ -19,13 +19,13 @@ object GoldenSweep {
     }
   }
 
-  /** The ids `doc-%012d` of `ids` whose extraction differs from the golden
+  /** The doc ids of the indexes `ids` whose extraction differs from the golden
     * in spans or markdown, or throws; sorted. One thread per core. */
   def mismatches(ids: IndexedSeq[Long]): Seq[String] = {
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val n = Runtime.getRuntime.availableProcessors
     val threads = (0 until n).map { t =>
-      new Thread(() => (t until ids.size by n).map(k => f"doc-${ids(k)}%012d").foreach { id =>
+      new Thread(() => (t until ids.size by n).map(k => DocGen.docId(ids(k))).foreach { id =>
         val same = scala.util.Try {
           val (got, want) = (Extract.extractDoc(DocGen.docRow(id)), DocGen.golden(id))
           got.spans == want.spans && got.markdown == want.markdown

@@ -15,14 +15,7 @@ import graft.pipeline.Extract
   * 13-64 pages, so a task's time follows its pages, not its documents. */
 class BalanceSpec extends AnyFunSuite {
 
-  // the extensions too: specs share one JVM, and the first session built
-  // is the one ExtensionsSpec and PlanSpec get
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   /** Pages per task (max/mean) and each task's buckets, for the ids of
     * `unit`'s buckets routed at 32 partitions. */

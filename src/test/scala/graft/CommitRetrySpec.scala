@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.io.{Commit, ExtractJob}
 import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
@@ -20,16 +19,8 @@ import java.util.concurrent.atomic.AtomicInteger
 class CommitRetrySpec extends AnyFunSuite {
 
   test("a task that fails once and is retried leaves the counts of a cold run") {
-    // a context of its own, with 2 task attempts: stop the shared one
-    // first (specs run one after another in the forked JVM)
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master("local[4,2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    // a context of its own, with 2 task attempts
+    TestSpark.withMaster("local[4,2]") { spark =>
       import spark.implicits._
       val docs = Extract.corpus(Extract.idRange(spark, 300L))
       val cold = Files.createTempDirectory("graft_retry_cold").toString
@@ -65,10 +56,6 @@ class CommitRetrySpec extends AnyFunSuite {
       val want = counters(cold)
       assert(want("insert_pages") > 0, "no insert-layout page in the corpus")
       assert(counters(retried) == want)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 }

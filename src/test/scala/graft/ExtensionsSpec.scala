@@ -5,12 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("native expressions are SQL-callable via SparkSessionExtensions") {
     import spark.implicits._

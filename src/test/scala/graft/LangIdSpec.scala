@@ -9,11 +9,7 @@ import org.apache.spark.sql.SparkSession
   * never fire on plain English documents. */
 class LangIdSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("eight language classes, each non-vacuous at sf0.01") {
     import spark.implicits._

@@ -15,11 +15,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
   * this way). */
 class ObserveSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("Dataset.observe emits metrics to a QueryExecutionListener") {
     import spark.implicits._

@@ -17,12 +17,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * the custom operator, and its results must equal the Dataset path's. */
 class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("DocExtractExec appears in the physical plan and matches the Dataset path") {
     import spark.implicits._

@@ -13,11 +13,7 @@ import java.nio.file.Files
   * cold full run — and already-done buckets must be skipped, not redone. */
 class ResumeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private def collectOut(dir: String): Map[String, Seq[(String, String, String, Int)]] = {
     import spark.implicits._

@@ -98,9 +98,7 @@ class SizingSpec extends AnyFunSuite {
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { dir =>
       val f = new java.io.File(s"$dir/documents.parquet")
       assume(f.exists())
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
-      val mx = spark.read.parquet(f.getPath)
+      val mx = TestSpark.session.read.parquet(f.getPath)
         .selectExpr("max(array_max(transform(split(text, ' '), w -> length(w)))) AS m")
         .collect()(0).getInt(0)
       assert(mx <= 13, s"max word length $mx in $dir breaks the slot-key proof")

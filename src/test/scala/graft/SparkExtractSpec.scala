@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.corpus.DocGen
@@ -8,13 +9,18 @@ import graft.pipeline.Extract
 /** End-to-end Spark run of the extraction job (routing repartition + kernel
   * mapPartitions + assembly) against the golden oracle — the distributed
   * path must agree with the pure per-doc path regardless of partitioning. */
-class SparkExtractSpec extends AnyFunSuite {
+class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "7") // deliberately odd
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
+
+  // a deliberately odd shuffle width for this spec's tests only
+  private val Partitions = "spark.sql.shuffle.partitions"
+  private var saved = ""
+  override def beforeAll(): Unit = {
+    saved = spark.conf.get(Partitions)
+    spark.conf.set(Partitions, "7")
+  }
+  override def afterAll(): Unit = spark.conf.set(Partitions, saved)
 
   test("Spark extraction equals golden on a 96-doc corpus") {
     import spark.implicits._

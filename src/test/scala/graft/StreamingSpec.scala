@@ -10,11 +10,7 @@ import java.nio.file.Files
 
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("streaming extraction over a landing dir matches golden") {
     import spark.implicits._

@@ -9,11 +9,7 @@ import graft.io.{DataWriter, FileWriter, MemoryWriter, FanoutWriter, ExtractJob}
   * null-filtering, and the per-document output dump through them. */
 class WritersSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("fanout mirrors every write to all non-null members") {
     val m1 = new MemoryWriter; val m2 = new MemoryWriter
