@@ -1,6 +1,10 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
@@ -38,8 +42,32 @@ import graft.schema.CheckpointRow
   * operation goes through the Hadoop `FileSystem` the path resolves to,
   * so plain paths, `file:` URIs and remote filesystems behave alike. A
   * cluster deployment swaps the directory commit for an Iceberg table
-  * with the same bucket column; the checkpoint schema is unchanged. */
+  * with the same bucket column; the checkpoint schema is unchanged.
+  *
+  * Local paths go through [[LocalFs]]: without the native libhadoop,
+  * Hadoop's stock local filesystem forks one `chmod` process for every
+  * directory, file and `.crc` it creates. The protocol names it in the
+  * Hadoop conf of its own operations only (the data write as writer
+  * options, which reach the executors in the job's conf), never in the
+  * session's, so the caller's other writes are untouched. Those confs
+  * also turn off the `file:` instance cache, which is keyed by scheme
+  * and user, not by conf, and would serve the session's instance. */
 object Commit {
+
+  /** Hadoop's checksummed local filesystem, whose raw layer sets the nine
+    * rwx bits with java.nio instead of a forked `chmod`; a mode with the
+    * sticky bit takes Hadoop's own path. Same files, same modes. */
+  class LocalFs extends LocalFileSystem(new RawLocalFileSystem {
+    override def setPermission(p: Path, perm: FsPermission): Unit =
+      if (perm.getStickyBit) super.setPermission(p, perm)
+      else Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(perm.toString))
+  })
+
+  /** The Hadoop keys that route the protocol's own `file:` operations to
+    * [[LocalFs]]. */
+  private val localFs = Map("fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   case class JobReport(run_id: String, buckets: Int, processed: Int,
       skipped: Int, docs: Long, spans: Long, wall_ms: Long)
@@ -87,6 +115,7 @@ object Commit {
       labeled(spark, s"$runId:write") {
         res.observe(obs, counts.head, counts.tail: _*)
           .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+          .options(localFs)
           .partitionBy("bucket").parquet(s"$outDir/data")
       }
       val wallMs = (System.nanoTime() - tU) / 1000000
@@ -207,7 +236,7 @@ object Commit {
     val nullable = StructType(schema.map(_.copy(nullable = true)))
     val parquetSchema = new SparkToParquetSchemaConverter().convert(nullable)
     val out = ExampleParquetWriter.builder(tmp).withType(parquetSchema)
-      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withConf(conf(spark))
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withExtraMetaData(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", nullable.json))
       .build()
@@ -234,14 +263,20 @@ object Commit {
     files.listStatus(dir, (p: Path) => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
       .toSeq.flatMap { st =>
         val in = ParquetReader.builder(new GroupReadSupport, st.getPath)
-          .withConf(spark.sparkContext.hadoopConfiguration).build()
+          .withConf(conf(spark)).build()
         try Iterator.continually(in.read()).takeWhile(_ != null).map(st.getPath -> _).toVector
         finally in.close()
       }
   }
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, p: Path): FileSystem = p.getFileSystem(conf(spark))
+
+  /** A copy of the session's Hadoop conf with [[localFs]] set. */
+  private def conf(spark: SparkSession): Configuration = {
+    val c = new Configuration(spark.sparkContext.hadoopConfiguration)
+    localFs.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 
   private def delete(spark: SparkSession, p: Path): Unit = fs(spark, p).delete(p, true): Unit
 }

@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.corpus.DocGen
 import graft.pipeline.Extract
-import graft.io.ExtractJob
+import graft.io.{Commit, ExtractJob}
 import graft.kernel.LayoutTelemetry
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 
 /** Kill-at-50% resume idempotency (FIXTURES.md §4): a run that commits only
   * half its bucket groups, resumed, must produce exactly the output of a
@@ -150,16 +152,55 @@ class ResumeSpec extends AnyFunSuite {
     val mode = "spark.sql.sources.partitionOverwriteMode"
     val docs = Extract.corpus(Extract.idRange(spark, 20L))
     val out = Files.createTempDirectory("graft_label").toString
+    val fsImpl = sc.hadoopConfiguration.get("fs.file.impl")
     spark.conf.set(mode, "static")
     sc.setJobDescription("outer")
     try {
       ExtractJob.run(spark, docs, out, buckets = 4, groups = 2, partitions = 2)
       assert(sc.getLocalProperty("spark.job.description") == "outer")
       assert(spark.conf.get(mode) == "static")
+      assert(sc.hadoopConfiguration.get("fs.file.impl") == fsImpl)
       // under a static session mode, the second unit's write still
       // replaces only its own buckets
       assert(spark.read.parquet(s"$out/data").count() == 20)
     } finally sc.setJobDescription(null)
+  }
+
+  // without libhadoop, Hadoop's local filesystem forks `chmod` for every
+  // dir, part file and `.crc` it makes; the protocol's writes must not
+  test("a commit forks no chmod process for the files it writes") {
+    val docs = Extract.corpus(Extract.idRange(spark, 40L))
+    val out = Files.createTempDirectory("graft_nofork").toRealPath().toString
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try ExtractJob.run(spark, docs, out, buckets = 4, groups = 2, partitions = 2)
+    finally rec.stop()
+    val dump = Files.createTempFile("graft_nofork", ".jfr")
+    try {
+      rec.dump(dump)
+      val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).filter(c => c.startsWith("chmod") && c.contains(out))
+      assert(chmods.size == 0, s"chmod forks, the first: ${chmods.headOption}")
+    } finally { rec.close(); Files.delete(dump) }
+  }
+
+  test("a commit leaves Hadoop's default modes: rwxr-xr-x dirs, rw-r--r-- files") {
+    val docs = Extract.corpus(Extract.idRange(spark, 40L))
+    val out = Files.createTempDirectory("graft_modes")
+    ExtractJob.run(spark, docs, out.toString, buckets = 4, groups = 2, partitions = 2)
+    Commit.storeFp(spark, out.toString, Map(0 -> 1L))
+    val walk = Files.walk(out)
+    val all = try walk.iterator.asScala.filter(_ != out).toVector finally walk.close()
+    def mode(p: Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (dirs, files) = all.partition(Files.isDirectory(_))
+    val names = files.map(f => out.relativize(f).toString)
+    Seq("data/bucket=0/part-", "data/bucket=0/.part-", "_checkpoint/part-",
+      "_checkpoint/.part-", "_metrics/part-", "_input_fp/part-").foreach { prefix =>
+      assert(names.exists(_.startsWith(prefix)), s"no $prefix* file in $names")
+    }
+    val wrong = dirs.filter(mode(_) != "rwxr-xr-x") ++ files.filter(mode(_) != "rw-r--r--")
+    assert(wrong.isEmpty, wrong.map(p => s"${out.relativize(p)} ${mode(p)}").mkString("\n"))
   }
 
   test("raw-blob ingestion (office + html + pdf + image + ole interleaved) under the same protocol") {

@@ -22,12 +22,19 @@ object TestSpark {
     try body(spark) finally stop()
   }
 
-  private def build(master: String): SparkSession = SparkSession.builder()
-    .master(master)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def build(master: String): SparkSession = {
+    // ResumeSpec records JFR events. JFR's first start in a JVM
+    // re-instruments JDK classes: started there, in a warm JVM, it slowed
+    // the specs after it by seconds (LangIdSpec 2 s -> 6 s); started
+    // here, before Spark warms up, it costs a fraction of a second.
+    jdk.jfr.FlightRecorder.getFlightRecorder()
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 
   private def stop(): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
