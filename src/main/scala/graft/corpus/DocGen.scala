@@ -2,7 +2,6 @@ package graft.corpus
 
 import graft.schema._
 import graft.util.{Rng, SplitMix64}
-import java.security.MessageDigest
 
 /** Deterministic synthetic corpus of interleaved text+media documents
   * (FIXTURES.md §2). Every document is generated from its doc_id hash alone,
@@ -159,26 +158,8 @@ object DocGen {
     s"$$$$ \\lambda_{$i} = \\frac{a_{$i}}{\\bar{x}} $$$$".replace("$$$$", "$$")
   }
 
-  private val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("SHA-256")
-  }
-  private val hexChars = "0123456789abcdef".toCharArray
-
-  def sha256Hex(s: String): String = sha256HexBytes(s.getBytes("UTF-8"))
-
-  def sha256HexBytes(data: Array[Byte]): String = {
-    val md = digest.get()
-    md.reset()
-    val bytes = md.digest(data)
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      out(i * 2) = hexChars((bytes(i) >> 4) & 0xf)
-      out(i * 2 + 1) = hexChars(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
+  /** Hex SHA-256 of the string's UTF-8 bytes (the media_ref hash). */
+  def sha256Hex(s: String): String = graft.util.Sha256.hex(s)
 
   // -- authoring structure -------------------------------------------------
 

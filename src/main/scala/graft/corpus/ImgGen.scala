@@ -41,7 +41,7 @@ object ImgGen {
 
   /** Expected span: ONE figure whose media_ref hashes the full blob. */
   def golden(docId: String): Vector[OutSpan] = {
-    val ref = "img://" + DocGen.sha256HexBytes(bytes(docId))
+    val ref = "img://" + graft.util.Sha256.hex(bytes(docId))
     Vector(OutSpan(Kinds.Figure, "", ref, 0))
   }
 }

@@ -2,7 +2,7 @@ package graft.html
 
 import graft.office.Ooxml
 import graft.pipeline.TableMerge
-import graft.schema.{DocResult, Kinds, OrderedBlock, OutSpan}
+import graft.schema.{DocResult, Kinds, OrderedBlock}
 import org.w3c.dom.Element
 
 /** HTML main-content extraction: DOM walk + boilerplate strip into the
@@ -100,21 +100,9 @@ object HtmlConvert {
     else Good
   }
 
-  def convert(docId: String, bytes: Array[Byte]): Vector[OutSpan] =
-    blocks(bytes).zipWithIndex.map { case ((k, t, m, _), ord) =>
-      OutSpan(k, t, m, ord)
-    }
-
-  /** The full result contract (spans + rendered markdown), heading levels
-    * carried from the hN tags. */
-  def result(docId: String, bytes: Array[Byte]): DocResult = {
-    val ordered = blocks(bytes).zipWithIndex.map { case ((k, t, m, lvl), ord) =>
-      OrderedBlock(k, t, m, 0, ord, lvl)
-    }
-    DocResult(docId,
-      ordered.map(b => OutSpan(b.kind, b.text, b.media_ref, b.index)),
-      graft.pipeline.Assemble.renderMarkdown(ordered))
-  }
+  /** Spans + markdown of one page; heading levels come from the hN tags. */
+  def convert(docId: String, bytes: Array[Byte]): DocResult =
+    graft.pipeline.Assemble.result(docId, blocks(bytes))
 
   /** Context-free classes (jusText shape, density-based classifiers). */
   private final val Good = 0
@@ -124,8 +112,8 @@ object HtmlConvert {
   /** Below this a text block cannot be classified alone. */
   private final val ShortLen = 25
 
-  /** (kind, text, media_ref, headingLevel) in document order. */
-  private def blocks(bytes: Array[Byte]): Vector[(String, String, String, Int)] = {
+  /** The kept blocks in document order. */
+  private def blocks(bytes: Array[Byte]): Vector[OrderedBlock] = {
     val cand = candidates(bytes)
     // context revision sweep: shorts inherit from nearest non-short
     // neighbors, edges are bad
@@ -147,10 +135,10 @@ object HtmlConvert {
       }
       i += 1
     }
-    val out = Vector.newBuilder[(String, String, String, Int)]
+    val out = Vector.newBuilder[OrderedBlock]
     i = 0
     while (i < n) {
-      if (keep(i)) out += ((cand(i)._1, cand(i)._2, cand(i)._3, cand(i)._4))
+      if (keep(i)) out += OrderedBlock.flow(cand(i)._1, cand(i)._2, cand(i)._3, cand(i)._4)
       i += 1
     }
     out.result()

@@ -1,6 +1,6 @@
 package graft.image
 
-import graft.schema.{Kinds, OutSpan, DocResult, OrderedBlock}
+import graft.schema.{Kinds, DocResult, OrderedBlock}
 
 /** Image-bytes input tier: a bare JPEG/PNG/GIF/WebP/BMP blob arriving at
   * the raw router becomes a one-page media document. The reference wraps
@@ -38,10 +38,7 @@ object ImageDoc {
 
   def isImage(bytes: Array[Byte]): Boolean = imageKind(bytes).isDefined
 
-  def convert(docId: String, bytes: Array[Byte]): DocResult = {
-    val ref = "img://" + graft.pdf.PdfConvert.sha256Hex(bytes)
-    val block = OrderedBlock(Kinds.Figure, "", ref, 0, 0)
-    DocResult(docId, Vector(OutSpan(Kinds.Figure, "", ref, 0)),
-      graft.pipeline.Assemble.renderMarkdown(Vector(block)))
-  }
+  def convert(docId: String, bytes: Array[Byte]): DocResult =
+    graft.pipeline.Assemble.result(docId,
+      Vector(OrderedBlock.flow(Kinds.Figure, "", "img://" + graft.util.Sha256.hex(bytes))))
 }

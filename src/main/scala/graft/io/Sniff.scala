@@ -3,8 +3,10 @@ package graft.io
 import graft.schema.DocResult
 
 /** THE raw-blob router: one magic-byte sniff shared by
-  * [[ExtractJob.runRaw]] and the `ingest_raw` driver query (two copies
-  * drifted once — r3 review; now a single function). Mirrors the
+  * [[ExtractJob.runRaw]], the `ingest_raw` driver query and
+  * [[graft.streaming.StreamJobs.rawStream]] (two copies drifted once — r3
+  * review; now a single function). Each tier has one `convert(id, bytes)`,
+  * and each ends in [[graft.pipeline.Assemble.result]]. Mirrors the
   * reference's byte-sniff dispatch (`utils/guess_suffix_or_lang.py`:
   * PDF_SIG_BYTES `%PDF` :12, OOXML zip probing :13-38, magika raster /
   * legacy-office classes :174-193; routed from `main.py:604-636` — image
@@ -39,9 +41,9 @@ object Sniff {
       else if (off > 0)
         try graft.pdf.PdfConvert.convert(id, bytes)
         catch { case scala.util.control.NonFatal(_) =>
-          graft.html.HtmlConvert.result(id, bytes)
+          graft.html.HtmlConvert.convert(id, bytes)
         }
-      else graft.html.HtmlConvert.result(id, bytes)
+      else graft.html.HtmlConvert.convert(id, bytes)
     }
 
   /** Per-document isolation for every raw-blob path: [[convert]]'s

@@ -1,15 +1,15 @@
 package graft.office
 
-import graft.schema.{Kinds, OutSpan, DocResult, OrderedBlock}
+import graft.schema.{Kinds, OrderedBlock}
 import org.w3c.dom.Element
 import scala.collection.mutable
 
-/** DOCX -> span-contract converter: the model-free office input path
-  * (reference office_analyze.py:9-36 -> model/docx/docx_converter.py,
-  * scoped to the WordprocessingML surface the corpus authors). Reads the
-  * real OOXML package (zip), parses word/document.xml with the JDK DOM
-  * parser, resolves drawing/hyperlink relationships from the rels part,
-  * and emits the SAME (kind, text, media_ref, order) contract as the PDF
+/** DOCX block walk: the model-free office input path (reference
+  * office_analyze.py:9-36 -> model/docx/docx_converter.py, scoped to the
+  * WordprocessingML surface the corpus authors). Over the package parts
+  * [[OfficeConvert.convert]] unzipped, it parses word/document.xml with
+  * the JDK DOM parser, resolves drawing/hyperlink relationships from the
+  * rels part, and hands its blocks to the SAME result builder as the PDF
   * pipeline: Heading styles -> leveled titles, Caption style -> caption,
   * multi-run paragraphs joined (xml:space preserved), consecutive
   * numbered paragraphs -> one list block, w:tbl -> the engine's table
@@ -19,7 +19,7 @@ import scala.collection.mutable
   * contract; a namespace-URI walk would be the production hardening. */
 object DocxConvert {
 
-  import Ooxml.{readZip, parseXml, children, descendants}
+  import Ooxml.{parseXml, children, descendants}
 
   /** Concatenated run text of a paragraph-ish element, in DOCUMENT ORDER:
     * `w:t` runs verbatim; an OMML equation (`m:oMath`, the reference's
@@ -52,23 +52,19 @@ object DocxConvert {
   private def styleOf(p: Element): String =
     descendants(p, "w:pStyle").headOption.map(_.getAttribute("w:val")).getOrElse("")
 
-  private case class Block(kind: String, text: String, mediaRef: String = "",
-      level: Int = 0)
-
-
   /** The block walk over w:body children in document order — document
-    * order IS the reading order for flow documents (no geometry pass). */
-  def blocks(bytes: Array[Byte]): Vector[(String, String, String, Int)] = {
-    val parts = readZip(bytes)
+    * order IS the reading order for flow documents (no geometry pass).
+    * `parts` is the unzipped package ([[Ooxml.readZip]]). */
+  def blocks(parts: Map[String, String]): Vector[OrderedBlock] = {
     val doc = parseXml(parts("word/document.xml"))
     val rels = Ooxml.relMap(parts.get("word/_rels/document.xml.rels"))
     val body = descendants(doc, "w:body").head
-    val out = mutable.ArrayBuffer.empty[Block]
+    val out = mutable.ArrayBuffer.empty[OrderedBlock]
     var listItems = Vector.empty[String]
     var listNumId = "" // consecutive items of the SAME numbering instance
     def flushList(): Unit =
       if (listItems.nonEmpty) {
-        out += Block(Kinds.ListK, listItems.mkString("\n"))
+        out += OrderedBlock.flow(Kinds.ListK, listItems.mkString("\n"))
         listItems = Vector.empty
         listNumId = ""
       }
@@ -112,7 +108,7 @@ object DocxConvert {
             rows += cellsB.result()
           }
           val html = graft.pipeline.TableMerge.render(rows.toVector)
-          out += Block(Kinds.Table,
+          out += OrderedBlock.flow(Kinds.Table,
             if (bordered) "<table border=\"1\">" + html.stripPrefix("<table>") else html)
         case "w:p" =>
           val style = styleOf(el)
@@ -134,41 +130,31 @@ object DocxConvert {
             val isImage = drawing.exists(d => descendants(d, "a:blip").nonEmpty)
             if (drawing.isDefined && !isImage) {
               val t = textOf(el)
-              if (t.nonEmpty) out += Block(Kinds.Text, t)
+              if (t.nonEmpty) out += OrderedBlock.flow(Kinds.Text, t)
             } else if (isImage) {
               val embed = descendants(drawing.get, "a:blip").headOption
                 .map(_.getAttribute("r:embed")).getOrElse("")
               val target = rels.getOrElse(embed, "")
               val hash = target.stripPrefix("media/").stripSuffix(".png")
-              out += Block(Kinds.Figure, "", s"img://$hash")
+              out += OrderedBlock.flow(Kinds.Figure, "", s"img://$hash")
             } else if (hyper.isDefined) {
               val url = rels.getOrElse(hyper.get.getAttribute("r:id"), "")
-              out += Block(Kinds.Hyperlink, textOf(hyper.get), url)
+              out += OrderedBlock.flow(Kinds.Hyperlink, textOf(hyper.get), url)
             } else if (style.startsWith("Heading")) {
               val lvl = style.stripPrefix("Heading").toIntOption.getOrElse(1)
-              out += Block(Kinds.Title, textOf(el), level = math.min(6, math.max(1, lvl)))
+              out += OrderedBlock.flow(Kinds.Title, textOf(el),
+                level = math.min(6, math.max(1, lvl)))
             } else if (style == "Caption") {
-              out += Block(Kinds.Caption, textOf(el))
+              out += OrderedBlock.flow(Kinds.Caption, textOf(el))
             } else {
               val t = textOf(el)
-              if (t.nonEmpty) out += Block(Kinds.Text, t)
+              if (t.nonEmpty) out += OrderedBlock.flow(Kinds.Text, t)
             }
           }
         case _ =>
       }
     }
     flushList()
-    out.toVector.map(b => (b.kind, b.text, b.mediaRef, b.level))
-  }
-
-  /** Full conversion to the engine's result contract (spans + markdown —
-    * the same renderer as the PDF path; title levels come from the
-    * Heading style names). */
-  def convert(docId: String, bytes: Array[Byte]): DocResult = {
-    val ordered = blocks(bytes).zipWithIndex.map { case ((kind, text, ref, lvl), ord) =>
-      OrderedBlock(kind, text, ref, 0, ord, lvl)
-    }
-    val spans = ordered.map(b => OutSpan(b.kind, b.text, b.media_ref, b.index))
-    DocResult(docId, spans, graft.pipeline.Assemble.renderMarkdown(ordered))
+    out.toVector
   }
 }

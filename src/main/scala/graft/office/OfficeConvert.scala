@@ -1,6 +1,6 @@
 package graft.office
 
-import graft.schema.{Kinds, OutSpan, DocResult, OrderedBlock}
+import graft.schema.{Kinds, DocResult, OrderedBlock}
 import org.w3c.dom.Element
 import Ooxml._
 
@@ -19,7 +19,7 @@ object OfficeConvert {
   /** Built-in date/time number formats (ECMA-376 §18.8.30). */
   private val DateNumFmts: Set[Int] = ((14 to 22) ++ (45 to 47)).toSet
 
-  def xlsxBlocks(parts: Map[String, String]): Vector[(String, String, String, Int)] = {
+  def xlsxBlocks(parts: Map[String, String]): Vector[OrderedBlock] = {
     val wb = parseXml(parts("xl/workbook.xml"))
     val rels = relMap(parts.get("xl/_rels/workbook.xml.rels"))
     val sst: Vector[String] = parts.get("xl/sharedStrings.xml").map { xml =>
@@ -91,8 +91,8 @@ object OfficeConvert {
           }
         }.mkString("<tr>", "", "</tr>")
       }.mkString("<table>", "", "</table>")
-      Vector((Kinds.Title, sh.getAttribute("name"), "", 1),
-        (Kinds.Table, html, "", 0))
+      Vector(OrderedBlock.flow(Kinds.Title, sh.getAttribute("name"), level = 1),
+        OrderedBlock.flow(Kinds.Table, html))
     }
   }
 
@@ -101,7 +101,7 @@ object OfficeConvert {
     * order); title placeholders -> titles, other text bodies -> one text
     * block per a:p, pictures resolve through the slide's own rels
     * (pptx_converter.py surface). */
-  def pptxBlocks(parts: Map[String, String]): Vector[(String, String, String, Int)] = {
+  def pptxBlocks(parts: Map[String, String]): Vector[OrderedBlock] = {
     val pres = parseXml(parts("ppt/presentation.xml"))
     val rels = relMap(parts.get("ppt/_rels/presentation.xml.rels"))
     descendants(pres, "p:sldId").flatMap { sid =>
@@ -117,14 +117,14 @@ object OfficeConvert {
             val isTitle = descendants(el, "p:ph").exists(_.getAttribute("type") == "title")
             val paras = descendants(el, "a:p").map(p =>
               descendants(p, "a:t").map(_.getTextContent).mkString)
-            if (isTitle) paras.map(t => (Kinds.Title, t, "", 1))
-            else paras.filter(_.nonEmpty).map(t => (Kinds.Text, t, "", 0))
+            if (isTitle) paras.map(t => OrderedBlock.flow(Kinds.Title, t, level = 1))
+            else paras.filter(_.nonEmpty).map(t => OrderedBlock.flow(Kinds.Text, t))
           case "p:pic" =>
             val embed = descendants(el, "a:blip").headOption
               .map(_.getAttribute("r:embed")).getOrElse("")
             val target = slideRels.getOrElse(embed, "")
             val hash = target.stripPrefix("../media/").stripSuffix(".png")
-            Vector((Kinds.Figure, "", s"img://$hash", 0))
+            Vector(OrderedBlock.flow(Kinds.Figure, "", s"img://$hash"))
           case "p:graphicFrame" =>
             // slide table (a:tbl inside the graphic frame)
             descendants(el, "a:tbl").headOption.toVector.map { tbl =>
@@ -133,7 +133,7 @@ object OfficeConvert {
                   s"<td>${descendants(tc, "a:t").map(_.getTextContent).mkString}</td>"
                 }.mkString("<tr>", "", "</tr>")
               }.mkString("<table>", "", "</table>")
-              (Kinds.Table, html, "", 0)
+              OrderedBlock.flow(Kinds.Table, html)
             }
           case _ => Vector.empty
         }
@@ -156,7 +156,7 @@ object OfficeConvert {
             else descendants(sp, "a:p")
               .map(p => descendants(p, "a:t").map(_.getTextContent).mkString)
               .filter(_.nonEmpty)
-              .map(t => (Kinds.Footnote, t, "", 0))
+              .map(t => OrderedBlock.flow(Kinds.Footnote, t))
           }
         }
       slideBlocks ++ notes
@@ -164,18 +164,14 @@ object OfficeConvert {
   }
 
   /** Sniff the format from the package parts and convert
-    * (guess_suffix_by_bytes analogue). */
+    * (guess_suffix_by_bytes analogue). The package unzips once; every
+    * format's walk reads the same part map. */
   def convert(docId: String, bytes: Array[Byte]): DocResult = {
     val parts = readZip(bytes)
-    val bs =
-      if (parts.contains("word/document.xml")) DocxConvert.blocks(bytes)
+    graft.pipeline.Assemble.result(docId,
+      if (parts.contains("word/document.xml")) DocxConvert.blocks(parts)
       else if (parts.contains("xl/workbook.xml")) xlsxBlocks(parts)
       else if (parts.contains("ppt/presentation.xml")) pptxBlocks(parts)
-      else throw new IllegalArgumentException("unknown office package")
-    val ordered = bs.zipWithIndex.map { case ((kind, text, ref, lvl), ord) =>
-      OrderedBlock(kind, text, ref, 0, ord, lvl)
-    }
-    DocResult(docId, ordered.map(b => OutSpan(b.kind, b.text, b.media_ref, b.index)),
-      graft.pipeline.Assemble.renderMarkdown(ordered))
+      else throw new IllegalArgumentException("unknown office package"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.office
 
-import graft.schema.{Kinds, OutSpan, DocResult, OrderedBlock}
+import graft.schema.{Kinds, DocResult, OrderedBlock}
 
 /** Legacy binary-Office tier: OLE2 compound files (`.doc`/`.xls`/`.ppt`,
   * magic `D0 CF 11 E0`). The reference routes these through a
@@ -196,23 +196,22 @@ object OleConvert {
       case Some(wd) =>
         val paras = wordText(wd).split('\r').toVector
           .map(_.filter(c => c >= 0x20 || c == '\t')).filter(_.nonEmpty)
-        val out = Vector.newBuilder[(String, String)]
+        val out = Vector.newBuilder[OrderedBlock]
         var i = 0
         while (i < paras.length) {
           if (paras(i).startsWith("- ")) {
             // consecutive "- " paragraphs form one list block (the same
             // convention the PDF text tier uses)
             val run = paras.drop(i).takeWhile(_.startsWith("- "))
-            out += ((Kinds.ListK, run.map(_.stripPrefix("- ")).mkString("\n")))
+            out += OrderedBlock.flow(Kinds.ListK, run.map(_.stripPrefix("- ")).mkString("\n"))
             i += run.length
           } else {
-            out += ((if (i == 0) Kinds.Title else Kinds.Text, paras(i)))
+            out += (if (i == 0) OrderedBlock.flow(Kinds.Title, paras(i), level = 1)
+              else OrderedBlock.flow(Kinds.Text, paras(i)))
             i += 1
           }
         }
-        out.result().zipWithIndex.map { case ((k, t), ord) =>
-          OrderedBlock(k, t, "", 0, ord, if (k == Kinds.Title) 1 else 0)
-        }
+        out.result()
       case None =>
         // .xls / .ppt: recognized (classified) but not text-extracted —
         // an empty document, never a soup-parse of binary bytes
@@ -221,8 +220,6 @@ object OleConvert {
         require(known || cfb.streamNames.nonEmpty, "empty compound file")
         Vector.empty
     }
-    DocResult(docId,
-      blocks.map(b => OutSpan(b.kind, b.text, b.media_ref, b.index)),
-      graft.pipeline.Assemble.renderMarkdown(blocks))
+    graft.pipeline.Assemble.result(docId, blocks)
   }
 }

@@ -1,7 +1,6 @@
 package graft.pdf
 
-import graft.schema.{Kinds, OutSpan, DocResult, OrderedBlock}
-import java.security.MessageDigest
+import graft.schema.{Kinds, DocResult, OrderedBlock}
 
 /** PDF byte parser + text-layer extraction for the raw-blob router — the
   * Spark-side analogue of the reference's pdfium parse of its primary
@@ -1249,7 +1248,7 @@ object PdfConvert {
                     if (math.abs(ctm.a) >= math.abs(ctm.b)) { if (ctm.a >= 0) 0 else 180 }
                     else { if (ctm.b >= 0) 90 else 270 }
                   val (ux, uy) = upright(rot, x0, math.max(y0, y1))
-                  out += Img(rot, ux, uy, math.abs(y1 - y0), "img://" + sha256Hex(data))
+                  out += Img(rot, ux, uy, math.abs(y1 - y0), "img://" + graft.util.Sha256.hex(data))
                 }
                 case _ => ()
               }
@@ -1313,9 +1312,9 @@ object PdfConvert {
   /** Group positioned lines into blocks and classify by the font-size
     * ladder; elements arrive y-sorted (descending) within a rotation
     * class, classes in first-appearance order. */
-  private def toBlocks(elems: Vector[Elem]): Vector[(String, String, String, Int)] = {
+  private def toBlocks(elems: Vector[Elem]): Vector[OrderedBlock] = {
     val rotOrder = elems.map(_.rot).distinct
-    val out = Vector.newBuilder[(String, String, String, Int)]
+    val out = Vector.newBuilder[OrderedBlock]
     rotOrder.foreach { rot =>
       val here = elems.filter(_.rot == rot)
       val lines = toLines(here.collect { case f: Frag => f })
@@ -1331,14 +1330,14 @@ object PdfConvert {
         val g = group
         group = Vector.empty
         val size = g.head.size
-        if (g.head.link.nonEmpty)
-          out += ((Kinds.Hyperlink, g.map(_.text).mkString(" "), g.head.link, 0))
+        val text = g.map(_.text).mkString(" ")
+        if (g.head.link.nonEmpty) out += OrderedBlock.flow(Kinds.Hyperlink, text, g.head.link)
         else if (g.forall(_.text.startsWith("- ")))
-          out += ((Kinds.ListK, g.map(_.text.stripPrefix("- ")).mkString("\n"), "", 0))
-        else if (size >= 20) out += ((Kinds.Title, g.map(_.text).mkString(" "), "", 1))
-        else if (size >= 15) out += ((Kinds.Title, g.map(_.text).mkString(" "), "", 2))
-        else if (size <= 9.5) out += ((Kinds.Caption, g.map(_.text).mkString(" "), "", 0))
-        else out += ((Kinds.Text, g.map(_.text).mkString(" "), "", 0))
+          out += OrderedBlock.flow(Kinds.ListK, g.map(_.text.stripPrefix("- ")).mkString("\n"))
+        else if (size >= 20) out += OrderedBlock.flow(Kinds.Title, text, level = 1)
+        else if (size >= 15) out += OrderedBlock.flow(Kinds.Title, text, level = 2)
+        else if (size <= 9.5) out += OrderedBlock.flow(Kinds.Caption, text)
+        else out += OrderedBlock.flow(Kinds.Text, text)
       }
       all.foreach {
         case Left(l) =>
@@ -1355,7 +1354,7 @@ object PdfConvert {
           group = group :+ l
         case Right(img) =>
           flush()
-          out += ((Kinds.Figure, "", img.ref, 0))
+          out += OrderedBlock.flow(Kinds.Figure, "", img.ref)
       }
       flush()
     }
@@ -1415,34 +1414,6 @@ object PdfConvert {
         toBlocks(elems)
       } catch { case scala.util.control.NonFatal(_) => Vector.empty }
     }
-    val ordered = blocks.zipWithIndex.map { case ((k, t, m, lvl), ord) =>
-      OrderedBlock(k, t, m, 0, ord, lvl)
-    }
-    DocResult(docId,
-      ordered.map(b => OutSpan(b.kind, b.text, b.media_ref, b.index)),
-      graft.pipeline.Assemble.renderMarkdown(ordered))
-  }
-
-  def spans(docId: String, bytes: Array[Byte]): Vector[OutSpan] =
-    convert(docId, bytes).spans.toVector
-
-  private val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("SHA-256")
-  }
-  private val hexChars = "0123456789abcdef".toCharArray
-
-  /** sha-256 over raw bytes (the media_ref contract). */
-  def sha256Hex(bytes: Array[Byte]): String = {
-    val md = digest.get()
-    md.reset()
-    val out = md.digest(bytes)
-    val chars = new Array[Char](out.length * 2)
-    var i = 0
-    while (i < out.length) {
-      chars(i * 2) = hexChars((out(i) >> 4) & 0xf)
-      chars(i * 2 + 1) = hexChars(out(i) & 0xf)
-      i += 1
-    }
-    new String(chars)
+    graft.pipeline.Assemble.result(docId, blocks)
   }
 }

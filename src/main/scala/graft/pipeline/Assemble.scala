@@ -4,8 +4,9 @@ import graft.schema._
 
 /** Document-level assembly: the ordered fold that runs after page-parallel
   * processing (SURVEY.md §2.11) — formula-number attach, cross-page
-  * paragraph merge (space and hyphen joins), final span numbering and
-  * markdown rendering. Pure and deterministic. */
+  * paragraph merge (space and hyphen joins), then [[result]]: span
+  * numbering and markdown rendering, shared with every converter tier.
+  * Pure and deterministic. */
 object Assemble {
 
   /** para_split's own LINE_STOP_FLAG tuple (para_split.py:6) — the set the
@@ -99,13 +100,19 @@ object Assemble {
       else { merged += cur; cur = b }
     }
     if (cur != null) merged += cur
-    val blocks = merged.result()
-
-    val spans = blocks.zipWithIndex.map { case (b, ord) =>
-      OutSpan(b.kind, b.text, b.media_ref, ord)
-    }
-    DocResult(docId, spans, renderMarkdown(blocks))
+    result(docId, merged.result())
   }
+
+  /** THE result builder of every input tier (the mkcontent contract,
+    * union_make, pipeline_middle_json_mkcontent.py:320-352; office:
+    * office_analyze.py:9-36): a span's order is its position in
+    * `blocks`, and the markdown renders from the same blocks. The kernel
+    * path hands over its assembled blocks, each converter its walk's
+    * blocks in reading order. */
+  def result(docId: String, blocks: Seq[OrderedBlock]): DocResult =
+    DocResult(docId,
+      blocks.zipWithIndex.map { case (b, ord) => OutSpan(b.kind, b.text, b.media_ref, ord) },
+      renderMarkdown(blocks))
 
   /** Configurable latex delimiters (get_latex_delimiter_config,
     * config_reader.py:111-121; consumed at

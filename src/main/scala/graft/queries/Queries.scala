@@ -671,15 +671,8 @@ object Queries {
     //    (the Exchange on g is reused); the final size joins stay
     //    planner-chosen — sizes is per-doc, the wrong side to pin as a
     //    broadcast at corpus scale.
-    val ex = tbl(spark, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 3)
-      // gram array built inside the explode (see ScaleQueries.shinglesFrom:
-      // a named intermediate column gets substituted into the Generate's
-      // inferred filter and pays the interpreted transform ~3x per row)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(w) - 2), i -> concat_ws(' ', w[i-1], w[i], w[i+1])))")).as("gs"))
-      .select(col("doc_id"), expr("CAST(conv(substring(md5(gs), 1, 8), 16, 10) AS BIGINT)").as("g"))
+    val ex = ScaleQueries.shinglesFrom(tbl(spark, dir, "documents"))
+      .select(col("doc_id"), col("g32").as("g"))
     val byG = ex.groupBy(col("g"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) <= ShingleDfCap)
@@ -1074,7 +1067,7 @@ object Queries {
     * the compare covers generation determinism + the strip heuristics. */
   def htmlExtract(spark: SparkSession, dir: String): DataFrame =
     spanRows(converterIds(spark, dir)) { id =>
-      graft.html.HtmlConvert.convert(id, graft.corpus.HtmlGen.bytes(id))
+      graft.html.HtmlConvert.convert(id, graft.corpus.HtmlGen.bytes(id)).spans
     }
 
   /** PDF byte-parse extraction (the reference's PRIMARY input tier,
@@ -1085,7 +1078,7 @@ object Queries {
     * — the same narrow-map plan shape as office/html. */
   def pdfExtract(spark: SparkSession, dir: String): DataFrame =
     spanRows(converterIds(spark, dir)) { id =>
-      graft.pdf.PdfConvert.spans(id, graft.corpus.PdfGen.bytes(id))
+      graft.pdf.PdfConvert.convert(id, graft.corpus.PdfGen.bytes(id)).spans
     }
 
   /** Byte-level page-range slicing driven through the reference's
@@ -1107,7 +1100,7 @@ object Queries {
       // task on a parse of zero bytes.
       graft.pdf.PdfSlice.windows(graft.corpus.PdfGen.bytes(id), batch = 2)
         .filter(_.nonEmpty)
-        .flatMap(wb => graft.pdf.PdfConvert.spans(id, wb))
+        .flatMap(wb => graft.pdf.PdfConvert.convert(id, wb).spans)
         .zipWithIndex
         .map { case (s, ord) => s.copy(order = ord) }
     }
@@ -1128,7 +1121,7 @@ object Queries {
     val ids = converterIds(spark, dir)
     ids.mapPartitions { it =>
       it.flatMap { id =>
-        graft.pdf.PdfConvert.spans(id, graft.corpus.PdfGen.bytes(id))
+        graft.pdf.PdfConvert.convert(id, graft.corpus.PdfGen.bytes(id)).spans
           .withFilter(_.kind == graft.schema.Kinds.Hyperlink)
           .map(s => (id, s.order, s.text, s.media_ref))
       }
@@ -1244,9 +1237,7 @@ object Queries {
     // UnsafeRows, via SparkSessionExtensions) — must reproduce the same
     // golden oracle as the Dataset path
     "extract_exec" -> ((s: SparkSession, d: String) => {
-      val ids = s.read.parquet(s"$d/documents.parquet")
-        .select(expr("concat('doc-', lpad(CAST(doc_id AS STRING), 12, '0'))")
-          .as("doc_id"))
+      val ids = graft.pipeline.Extract.docIds(s, d).toDF("doc_id")
         .repartition(32, col("doc_id"))
       graft.plans.DocExtract(ids).orderBy("doc_id", "ord")
     }),

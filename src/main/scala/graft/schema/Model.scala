@@ -170,6 +170,14 @@ case class OrderedBlock(
     /** last text line right-flush (see [[Det.lastFlush]]). */
     lastFlush: Boolean = true)
 
+object OrderedBlock {
+  /** A block of a flow document (the converter tiers): no page geometry,
+    * and its reading-order position is its place in the tier's block
+    * list, numbered by [[graft.pipeline.Assemble.result]]. */
+  def flow(kind: String, text: String, mediaRef: String = "",
+      level: Int = 0): OrderedBlock = OrderedBlock(kind, text, mediaRef, 0, 0, level)
+}
+
 /** Checkpoint-table row for resumable partition-grain lineage
   * (FIXTURES.md §4). */
 case class CheckpointRow(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.schema.Kinds
 import graft.html.HtmlConvert
-import graft.office.{OfficeConvert, DocxConvert}
+import graft.office.OfficeConvert
 
 /** Mutation-robustness fixtures for the HTML strip rules and the office
   * converters (VERDICT r3 task 2): every fixture is HAND-AUTHORED bytes
@@ -20,7 +20,7 @@ class ConverterFixtureSpec extends AnyFunSuite {
       .getBytes("UTF-8")
 
   private def spans(body: String): Vector[(String, String)] =
-    HtmlConvert.convert("t", page(body)).map(s => (s.kind, s.text))
+    HtmlConvert.convert("t", page(body)).spans.toVector.map(s => (s.kind, s.text))
 
   // ---- rule 2: link density (2·anchorChars > chars) -----------------------
 
@@ -117,7 +117,7 @@ class ConverterFixtureSpec extends AnyFunSuite {
         "<H2>Results Section</H2>" +
         "<ul compact><li>Alpha beta<li>Gamma delta</ul>" +
         "</MAIN></body></html>").getBytes("UTF-8")
-    assert(HtmlConvert.convert("t", soup).map(s => (s.kind, s.text)) == Vector(
+    assert(HtmlConvert.convert("t", soup).spans.map(s => (s.kind, s.text)) == Vector(
       (Kinds.Title, "Doc Title"),
       (Kinds.Text, "First paragraph of plenty readable content words here."),
       (Kinds.Text, "Second paragraph also carrying plenty of readable words."),
@@ -153,7 +153,7 @@ class ConverterFixtureSpec extends AnyFunSuite {
         |<w:p><w:pPr><w:numPr><w:ilvl w:val="0"/><w:numId w:val="3"/></w:numPr></w:pPr><w:r><w:t>three a</w:t></w:r></w:p>
         |<w:p><w:pPr><w:numPr><w:ilvl w:val="0"/><w:numId w:val="3"/></w:numPr></w:pPr><w:r><w:t>three b</w:t></w:r></w:p>
         |</w:body></w:document>""".stripMargin
-    val res = DocxConvert.convert("t", zipOf("word/document.xml" -> doc))
+    val res = OfficeConvert.convert("t", zipOf("word/document.xml" -> doc))
     assert(res.spans.map(s => (s.kind, s.text)) == Vector(
       (Kinds.ListK, "one a\none b"),
       (Kinds.ListK, "two a"),
@@ -269,7 +269,7 @@ class ConverterFixtureSpec extends AnyFunSuite {
     val body =
       """<figure><img loading="lazy" data-src="img://lazyhash"/><figcaption>Figure 1: Lazy</figcaption></figure>""" +
         """<img src="img://realhash" data-src="img://decoy"/>"""
-    val got = HtmlConvert.convert("t", page(body)).map(s => (s.kind, s.media_ref))
+    val got = HtmlConvert.convert("t", page(body)).spans.map(s => (s.kind, s.media_ref))
     assert(got == Vector(
       (Kinds.Figure, "img://lazyhash"), (Kinds.Caption, ""),
       (Kinds.Figure, "img://realhash")))

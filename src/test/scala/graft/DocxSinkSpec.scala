@@ -14,7 +14,7 @@ class DocxSinkSpec extends AnyFunSuite {
     val blocks = res.spans.map(s => OrderedBlock(s.kind, s.text, s.media_ref, 0, s.order,
       if (s.kind == Kinds.Title) 2 else 0))
     val bytes = DocxSink.render(blocks)
-    val back = graft.office.DocxConvert.convert("rt", bytes).spans
+    val back = graft.office.OfficeConvert.convert("rt", bytes).spans
     // representable kinds survive exactly; the rest degrade to text with
     // the same content
     val want = res.spans.map { s =>

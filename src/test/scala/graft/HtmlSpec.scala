@@ -14,7 +14,7 @@ class HtmlSpec extends AnyFunSuite {
 
   test("500-page golden equality through the real DOM round trip") {
     (0 until 500).foreach { i =>
-      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i)))
+      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i))).spans
       val want = HtmlGen.golden(id(i))
       assert(got == want, s"doc ${id(i)}")
     }
@@ -26,7 +26,7 @@ class HtmlSpec extends AnyFunSuite {
     // boilerplate AUTHORING and diff. Here: every emitted span text must
     // appear in the golden verbatim — nothing extra survives the walk.
     (0 until 300).foreach { i =>
-      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i)))
+      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i))).spans
       val wantTexts = HtmlGen.golden(id(i)).map(s => (s.kind, s.text)).toSet
       got.foreach { s =>
         assert(wantTexts((s.kind, s.text)), s"leaked span in ${id(i)}: $s")
@@ -49,7 +49,7 @@ class HtmlSpec extends AnyFunSuite {
       HtmlGen.golden(id(i)).exists(s => s.kind == Kinds.Text && s.text.contains("\n")))
     assert(brDocs.nonEmpty, "br paragraph reaches golden")
     brDocs.take(3).foreach { i =>
-      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i)))
+      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i))).spans
       assert(got.exists(s => s.kind == Kinds.Text && s.text.contains("\n")),
         s"br newline lost in ${id(i)}")
     }
@@ -58,7 +58,7 @@ class HtmlSpec extends AnyFunSuite {
       HtmlGen.golden(id(i)).exists(s => s.kind == Kinds.Text && s.text.endsWith(" holds.")))
     assert(shortDocs.nonEmpty, "short content sentence authored")
     shortDocs.take(5).foreach { i =>
-      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i)))
+      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i))).spans
       assert(got.exists(s => s.text.endsWith(" holds.")),
         s"short content sentence kept by context in ${id(i)}")
       assert(!got.exists(_.text == "More stories below."), s"chrome short leaked in ${id(i)}")
@@ -73,7 +73,7 @@ class HtmlSpec extends AnyFunSuite {
       new String(HtmlGen.bytes(id(i)), "UTF-8").contains("""<a href="/a/"""))
     assert(anchoredDocs.nonEmpty, "inline-anchor paragraph authored")
     anchoredDocs.take(5).foreach { i =>
-      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i)))
+      val got = HtmlConvert.convert(id(i), HtmlGen.bytes(id(i))).spans
       assert(got.exists(s => s.kind == Kinds.Text && s.text.contains(" See ")),
         s"inline-anchor paragraph kept in ${id(i)}")
     }
@@ -88,7 +88,7 @@ class HtmlSpec extends AnyFunSuite {
         |<ul><li>Alpha beta gamma</li><li>Delta epsilon zeta</li></ul>
         |<ul><li><a href="/1">alpha link</a></li><li><a href="/2">beta link</a></li></ul>
         |</main></body></html>""".stripMargin.getBytes("UTF-8")
-    val spans = HtmlConvert.convert("t", html)
+    val spans = HtmlConvert.convert("t", html).spans
     assert(spans.map(_.kind) == Vector(Kinds.Text, Kinds.ListK))
     assert(spans.head.text.contains("tiny link"))
     assert(spans(1).text == "Alpha beta gamma\nDelta epsilon zeta")
@@ -105,7 +105,7 @@ class HtmlSpec extends AnyFunSuite {
         |<div class="share-tools">Share this with your friends today</div>
         |<div id="comments"><h3>Comments</h3><p>A comment that reads like content.</p></div>
         |</main></body></html>""".stripMargin.getBytes("UTF-8")
-    val spans = HtmlConvert.convert("t", html)
+    val spans = HtmlConvert.convert("t", html).spans
     assert(spans.map(_.kind) == Vector(Kinds.Text, Kinds.Text))
     assert(spans.head.text == "A real paragraph of readable content words here.")
     assert(spans(1).text == "A quoted passage kept as content text.")
@@ -126,9 +126,9 @@ class HtmlSpec extends AnyFunSuite {
       """<ul><li><a href="/1">one</a></li><li><a href="/2">two</a></li></ul>""" +
         shortP +
         """<p><a href="/3">all link</a></p>""")
-    val kept = HtmlConvert.convert("t", goodCtx)
+    val kept = HtmlConvert.convert("t", goodCtx).spans
     assert(kept.exists(_.text == "It simply holds."), "short kept in good context")
-    val dropped = HtmlConvert.convert("t", badCtx)
+    val dropped = HtmlConvert.convert("t", badCtx).spans
     assert(dropped.isEmpty, s"short dropped between link farms, got $dropped")
   }
 }

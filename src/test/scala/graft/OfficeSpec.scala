@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.DocxGen
-import graft.office.DocxConvert
+import graft.office.OfficeConvert
 import graft.schema.Kinds
 
 /** Office path: the zip + OOXML round trip must recover the authored span
@@ -62,7 +62,7 @@ class OfficeSpec extends AnyFunSuite {
     val zip = new java.util.zip.ZipOutputStream(bos)
     zip.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
     zip.write(doc.getBytes("UTF-8")); zip.closeEntry(); zip.close()
-    val res = DocxConvert.convert("t", bos.toByteArray)
+    val res = OfficeConvert.convert("t", bos.toByteArray)
     assert(res.spans.map(s => (s.kind, s.text)) == Vector(
       (Kinds.Title, "T & U <V>"),
       (Kinds.Text, "alpha beta gamma.")))
@@ -72,7 +72,7 @@ class OfficeSpec extends AnyFunSuite {
   test("consecutive numbered paragraphs fold into one list block") {
     val id = (0 until 200).map(i => f"doc-$i%012d")
       .find(id => DocxGen.golden(id).exists(_.kind == Kinds.ListK)).get
-    val got = DocxConvert.convert(id, DocxGen.docxBytes(id)).spans
+    val got = OfficeConvert.convert(id, DocxGen.docxBytes(id)).spans
     val lists = got.filter(_.kind == Kinds.ListK)
     assert(lists.nonEmpty)
     assert(lists.forall(_.text.contains("\n")), "items joined into one block")
@@ -90,7 +90,7 @@ class OfficeSpec extends AnyFunSuite {
         if (xml.contains("<w:txbxContent>")) tbxDocs += 1
         // headers authored in every package, never leaked
         assert(xml.contains("headerReference") && parts.contains("word/header1.xml"))
-        val got = DocxConvert.convert(id, graft.corpus.DocxGen.docxBytes(id)).spans
+        val got = OfficeConvert.convert(id, graft.corpus.DocxGen.docxBytes(id)).spans
         assert(got == graft.corpus.DocxGen.golden(id), s"docx r4 round trip $id")
         assert(!got.exists(_.text.contains("RUNNING HEAD")), s"header leaked in $id")
       }
@@ -111,7 +111,7 @@ class OfficeSpec extends AnyFunSuite {
     val zip = new java.util.zip.ZipOutputStream(bos)
     zip.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
     zip.write(doc.getBytes("UTF-8")); zip.closeEntry(); zip.close()
-    val res = DocxConvert.convert("t", bos.toByteArray)
+    val res = OfficeConvert.convert("t", bos.toByteArray)
     assert(res.spans.map(_.text) == Vector("energy $E=mc^2$ holds.", "boxed note"))
   }
 }

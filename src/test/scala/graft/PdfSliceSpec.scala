@@ -31,10 +31,10 @@ class PdfSliceSpec extends AnyFunSuite {
     val ids = multiPageIds ++ (0 until 60).map(i => f"doc-$i%012d")
     ids.foreach { id =>
       val bytes = graft.corpus.PdfGen.bytes(id)
-      val full = PdfConvert.spans(id, bytes)
+      val full = PdfConvert.convert(id, bytes).spans
       val n = PdfSlice.pageCount(bytes)
       val parts = (0 until n).map(k =>
-        PdfConvert.spans(id, PdfSlice.slice(bytes, k, k)))
+        PdfConvert.convert(id, PdfSlice.slice(bytes, k, k)).spans.toVector)
       assert(rebase(parts) == full, s"slice concat mismatch for $id")
     }
   }
@@ -43,13 +43,13 @@ class PdfSliceSpec extends AnyFunSuite {
     val ids = multiPageIds ++ (0 until 30).map(i => f"doc-$i%012d")
     ids.foreach { id =>
       val bytes = graft.corpus.PdfGen.bytes(id)
-      val full = PdfConvert.spans(id, bytes)
+      val full = PdfConvert.convert(id, bytes).spans
       val parts = Vector.newBuilder[Vector[OutSpan]]
       var start = 0
       var fileEnd = false
       while (!fileEnd) {
         val (wb, fe) = PdfSlice.window(bytes, start, batch = 2)
-        parts += PdfConvert.spans(id, wb)
+        parts += PdfConvert.convert(id, wb).spans.toVector
         fileEnd = fe
         start += 2
       }
@@ -60,14 +60,14 @@ class PdfSliceSpec extends AnyFunSuite {
   test("end clamp, inclusive range, and out-of-range semantics") {
     val id = "doc-000000000007"
     val bytes = graft.corpus.PdfGen.bytes(id)
-    val full = PdfConvert.spans(id, bytes)
+    val full = PdfConvert.convert(id, bytes).spans
     // end beyond the last page clamps (common.py get_end_page_id)
-    assert(PdfConvert.spans(id, PdfSlice.slice(bytes, 0, 10000)) == full)
+    assert(PdfConvert.convert(id, PdfSlice.slice(bytes, 0, 10000)).spans == full)
     // negative end → whole document
-    assert(PdfConvert.spans(id, PdfSlice.slice(bytes, 0)) == full)
+    assert(PdfConvert.convert(id, PdfSlice.slice(bytes, 0)).spans == full)
     // windowed: huge batch → one window, file_end true on the first call
     val (wb, fe) = PdfSlice.window(bytes, 0, batch = 999)
-    assert(fe && PdfConvert.spans(id, wb) == full)
+    assert(fe && PdfConvert.convert(id, wb).spans == full)
   }
 
   test("parse-once windows equal the per-call window loop") {
@@ -75,13 +75,13 @@ class PdfSliceSpec extends AnyFunSuite {
     ids.foreach { id =>
       val bytes = graft.corpus.PdfGen.bytes(id)
       val once = PdfSlice.windows(bytes, batch = 2)
-        .flatMap(wb => PdfConvert.spans(id, wb))
+        .flatMap(wb => PdfConvert.convert(id, wb).spans)
       val loop = Vector.newBuilder[OutSpan]
       var start = 0
       var fileEnd = false
       while (!fileEnd) {
         val (wb, fe) = PdfSlice.window(bytes, start, batch = 2)
-        loop ++= PdfConvert.spans(id, wb)
+        loop ++= PdfConvert.convert(id, wb).spans
         fileEnd = fe
         start += 2
       }
@@ -107,12 +107,12 @@ class PdfSliceSpec extends AnyFunSuite {
     (0 until 200).foreach { i =>
       val id = f"doc-$i%012d"
       val bytes = graft.corpus.PdfGen.bytes(id)
-      val refs = PdfConvert.spans(id, bytes).filter(_.media_ref.nonEmpty)
+      val refs = PdfConvert.convert(id, bytes).spans.filter(_.media_ref.nonEmpty)
         .map(_.media_ref).toSet
       if (refs.nonEmpty) {
         checked += 1
         val sliced = (0 until PdfSlice.pageCount(bytes)).iterator.flatMap { k =>
-          PdfConvert.spans(id, PdfSlice.slice(bytes, k, k))
+          PdfConvert.convert(id, PdfSlice.slice(bytes, k, k)).spans
             .filter(_.media_ref.nonEmpty).map(_.media_ref)
         }.toSet
         assert(refs.subsetOf(sliced), s"media_ref lost in slice for $id")
@@ -125,14 +125,14 @@ class PdfSliceSpec extends AnyFunSuite {
     val f = new java.io.File("/root/reference/tests/unittest/pdfs/test.pdf")
     assume(f.exists(), "reference tree not present")
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-    val full = PdfConvert.spans("test.pdf", bytes)
+    val full = PdfConvert.convert("test.pdf", bytes).spans
     assume(full.nonEmpty)
     val parts = Vector.newBuilder[Vector[OutSpan]]
     var start = 0
     var fileEnd = false
     while (!fileEnd) {
       val (wb, fe) = PdfSlice.window(bytes, start, batch = 1)
-      parts += PdfConvert.spans("test.pdf", wb)
+      parts += PdfConvert.convert("test.pdf", wb).spans.toVector
       fileEnd = fe
       start += 1
     }
@@ -151,10 +151,10 @@ class PdfSliceSpec extends AnyFunSuite {
         val in = new java.io.FileInputStream(f)
         try in.readAllBytes() finally in.close()
       }
-      val full = PdfConvert.spans(f.getName, bytes)
+      val full = PdfConvert.convert(f.getName, bytes).spans
       val once = PdfSlice.windows(bytes, batch = 3)
         .filter(_.nonEmpty)
-        .flatMap(wb => PdfConvert.spans(f.getName, wb))
+        .flatMap(wb => PdfConvert.convert(f.getName, wb).spans)
       assert(rebase(Seq(once)) == full,
         s"${f.getName}: window concat diverged (${once.length} vs ${full.length} spans)")
     }

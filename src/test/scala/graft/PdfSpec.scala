@@ -12,7 +12,7 @@ class PdfSpec extends AnyFunSuite {
   test("round trip: 500 docs, spans equal the authored golden") {
     (0 until 500).foreach { i =>
       val id = f"doc-$i%012d"
-      val got = PdfConvert.spans(id, PdfGen.bytes(id))
+      val got = PdfConvert.convert(id, PdfGen.bytes(id)).spans
       val want = PdfGen.golden(id)
       assert(got == want, s"pdf round trip mismatch for $id:\n got=$got\nwant=$want")
     }
@@ -89,7 +89,7 @@ class PdfSpec extends AnyFunSuite {
   }
 
   private def texts(bytes: Array[Byte]): Vector[(String, String)] =
-    PdfConvert.spans("t", bytes).map(s => (s.kind, s.text))
+    PdfConvert.convert("t", bytes).spans.toVector.map(s => (s.kind, s.text))
 
   test("literal-string escapes: parens, backslash, octal, nested parens") {
     val c = "BT /F1 11 Tf 72 700 Td (a \\(b\\) c \\\\ d \\145nd (nested)) Tj ET"
@@ -177,7 +177,7 @@ class PdfSpec extends AnyFunSuite {
     val withFig = (0 until 50).map(i => f"doc-$i%012d").find { d =>
       PdfGen.golden(d).exists(_.kind == "figure")
     }.get
-    val spans = PdfConvert.spans(withFig, PdfGen.bytes(withFig))
+    val spans = PdfConvert.convert(withFig, PdfGen.bytes(withFig)).spans
     val figs = spans.filter(_.kind == "figure")
     assert(figs.nonEmpty)
     figs.zipWithIndex.foreach { case (f, i) =>
@@ -189,7 +189,7 @@ class PdfSpec extends AnyFunSuite {
     // find a doc whose layout spills to 2+ pages: many blocks
     val id = (0 until 200).map(i => f"doc-$i%012d")
       .maxBy(d => PdfGen.golden(d).length)
-    assert(PdfConvert.spans(id, PdfGen.bytes(id)) == PdfGen.golden(id))
+    assert(PdfConvert.convert(id, PdfGen.bytes(id)).spans == PdfGen.golden(id))
   }
 
   test("modern form (xref stream + ObjStm) and incremental form are non-vacuous and round-trip") {
@@ -203,7 +203,7 @@ class PdfSpec extends AnyFunSuite {
       if (!txt.contains("trailer")) modern += 1
       else if (txt.indexOf("%%EOF") != txt.lastIndexOf("%%EOF")) incremental += 1
       else classic += 1
-      assert(PdfConvert.spans(id, bytes) == PdfGen.golden(id), s"form round trip $id")
+      assert(PdfConvert.convert(id, bytes).spans == PdfGen.golden(id), s"form round trip $id")
     }
     assert(modern > 30 && incremental > 20 && classic > 80,
       s"form mix degenerate: modern=$modern incremental=$incremental classic=$classic")
@@ -215,13 +215,13 @@ class PdfSpec extends AnyFunSuite {
       t.contains("trailer") && t.indexOf("%%EOF") != t.lastIndexOf("%%EOF")
     }.get
     val bytes = PdfGen.bytes(id)
-    assert(PdfConvert.spans(id, bytes) == PdfGen.golden(id))
+    assert(PdfConvert.convert(id, bytes).spans == PdfGen.golden(id))
     // truncate after the FIRST revision: a reader of that state sees the
     // decoy catalog with an empty page tree
     val txt = new String(bytes, "ISO-8859-1")
     val cut = txt.indexOf("%%EOF") + 6
     val truncated = java.util.Arrays.copyOfRange(bytes, 0, cut)
-    assert(PdfConvert.spans(id, truncated).isEmpty,
+    assert(PdfConvert.convert(id, truncated).spans.isEmpty,
       "the first revision must be the decoy - otherwise /Prev handling is untested")
   }
 

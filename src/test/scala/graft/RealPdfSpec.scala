@@ -19,7 +19,7 @@ class RealPdfSpec extends AnyFunSuite {
 
   private def spansOf(f: java.io.File) = {
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-    PdfConvert.spans(f.getName, bytes)
+    PdfConvert.convert(f.getName, bytes).spans
   }
 
   /** rapidfuzz-style indel ratio in [0,100]: 100·(1 − dist/(|a|+|b|)),
@@ -117,7 +117,7 @@ class RealPdfSpec extends AnyFunSuite {
       val in = new java.io.FileInputStream(f)
       try in.readAllBytes() finally in.close()
     }
-    val spans = PdfConvert.spans("report.pdf", bytes)
+    val spans = PdfConvert.convert("report.pdf", bytes).spans
     assert(spans.length > 30, s"text layer lost again: ${spans.length} spans")
     val text = spans.map(_.text).mkString(" ")
     assert(text.contains("盈 利 承 压"), "CJK body text missing")

@@ -10,7 +10,7 @@ import graft.schema.Kinds
 class SoupSpec extends AnyFunSuite {
 
   private def texts(html: String): Vector[(String, String)] =
-    HtmlConvert.convert("t", html.getBytes("UTF-8")).map(s => (s.kind, s.text))
+    HtmlConvert.convert("t", html.getBytes("UTF-8")).spans.toVector.map(s => (s.kind, s.text))
 
   test("implied end tags: p closed by block open, li by li") {
     val soup =
@@ -37,7 +37,7 @@ class SoupSpec extends AnyFunSuite {
         |</MAIN></BODY></HTML>""".stripMargin
     val got = texts(soup)
     assert(got(0) == (Kinds.Title, "Mixed Case Heading"))
-    val spans = HtmlConvert.convert("t", soup.getBytes("UTF-8"))
+    val spans = HtmlConvert.convert("t", soup.getBytes("UTF-8")).spans
     assert(spans.exists(s => s.kind == Kinds.Figure && s.media_ref == "img://abc"))
   }
 
