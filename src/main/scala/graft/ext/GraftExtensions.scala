@@ -38,9 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
     e.injectOptimizerRule(_ => FoldSelfCosine)
-    // the whole-operator extraction node (preference tier c): logical
-    // plan -> strategy -> fused physical exec emitting UnsafeRows
-    e.injectPlannerStrategy(_ => graft.plans.DocExtractStrategy)
   }
 }
 

@@ -123,6 +123,4 @@ object TextFns {
   def deligature(c: Column): Column = GraftShim.column(Deligature(GraftShim.expr(c)))
   def countMatches(c: Column, pattern: String): Column =
     GraftShim.column(CountMatches(GraftShim.expr(c), pattern))
-  def matchedChars(c: Column, pattern: String): Column =
-    GraftShim.column(MatchedChars(GraftShim.expr(c), pattern))
 }

@@ -3,7 +3,9 @@ package graft.io
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema._
+import graft.kernel.StubModel
 import graft.pipeline.Extract
+import graft.plans.DocExtract
 
 /** Resumable extraction jobs with per-partition lineage (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics"):
@@ -49,8 +51,8 @@ object ExtractJob {
   def writeOutputs(spark: SparkSession, docs: Dataset[DocRow],
       writer: DataWriter): Long = {
     val n = spark.sparkContext.longAccumulator("graft.outputs.docs")
-    docs.foreachPartition { (it: Iterator[DocRow]) =>
-      Extract.extractPartition(it).foreach { res =>
+    DocExtract(docs, StubModel, None).foreachPartition { (it: Iterator[DocResult]) =>
+      it.foreach { res =>
         writer.writeString(s"${res.doc_id}.md", res.markdown)
         writer.writeString(s"${res.doc_id}_content_list.json",
           contentListJson(res))

@@ -12,14 +12,16 @@ import org.apache.spark.util.LongAccumulator
   * its own thread, extract, read the accumulators.
   *
   * The counters are EXACT where extraction runs in a result stage, as in
-  * `ExtractJob.run`: Spark applies a result task's accumulator updates
-  * once per partition. In a map stage, a re-run task would re-add.
+  * `ExtractJob.run`, whose write plans one [[graft.plans.DocExtractExec]]
+  * in its result stage (PlanSpec): Spark applies a result task's
+  * accumulator updates once per partition. In a map stage, a re-run task
+  * would re-add.
   *
-  * The sink is installed per PARTITION by
-  * [[graft.pipeline.Extract.extractPartition]] (a Spark task runs its whole
-  * iterator on one thread, so ThreadLocal scoping is exact; re-installing
-  * at every partition start makes executor thread reuse safe). With no
-  * sink installed the bumps are no-ops. */
+  * The sink is installed per PARTITION by [[graft.plans.DocExtractExec]]
+  * (a Spark task runs its whole iterator on one thread, so ThreadLocal
+  * scoping is exact; re-installing at every partition start makes
+  * executor thread reuse safe). With no sink installed the bumps are
+  * no-ops. */
 object LayoutTelemetry {
 
   /** Driver-registered accumulators, captured by the extraction closure:

@@ -24,6 +24,8 @@ trait DocModel extends Serializable {
   * numbers, and a scrambled emission order. Everything derives from
   * Rng.stream("kernel", doc_id): reproducible on any executor. */
 object StubModel extends DocModel {
+  // the extraction operator's plan string names its model: keep it stable
+  override def toString: String = "StubModel"
   val PageW = 612.0
   val PageH = 792.0
   private val MarginX = 36.0

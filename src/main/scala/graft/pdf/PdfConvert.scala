@@ -78,8 +78,6 @@ object PdfConvert {
       }
     }
 
-    def peekByte(): Int = { skipWs(); if (pos < end) buf(pos) & 0xff else -1 }
-
     def next(): Tok = {
       skipWs()
       require(pos < end, "unexpected end of PDF data")

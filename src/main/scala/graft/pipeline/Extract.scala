@@ -5,20 +5,23 @@ import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.corpus.DocGen
 import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
+import graft.plans.DocExtract
 
 /** End-to-end extraction job (SURVEY.md §3.1 Spark shape):
   *
   *   input docs table
   *     -> repartitionById on each doc's placement   (contiguous, balanced tasks)
-  *     -> mapPartitions kernel stage                (per-partition model session)
+  *     -> DocExtractExec                            (per-partition model session)
   *     -> page ops + doc assembly (fused — docs stay whole, zero extra shuffle)
   *     -> result Dataset[DocResult]
   *
-  * Keeping each document whole through one mapPartitions fuses kernel,
-  * page processing and doc-level folds into a single stage: the only
-  * shuffle in the job is the routing repartition. At the reference's
-  * 64-page windows a whole doc is far below task granularity, so a
-  * page-level fan-out would buy a second shuffle for nothing. */
+  * Keeping each document whole through one operator fuses kernel, page
+  * processing and doc-level folds into a single stage: the only shuffle
+  * in the job is the routing repartition. At the reference's 64-page
+  * windows a whole doc is far below task granularity, so a page-level
+  * fan-out would buy a second shuffle for nothing. Every Spark path here
+  * and in `StreamJobs`/`ExtractJob` plans through the one operator,
+  * [[graft.plans.DocExtract]]. */
 object Extract {
 
   /** Pure per-document extraction — unit-testable without Spark. */
@@ -37,19 +40,6 @@ object Extract {
   def idRange(spark: SparkSession, n: Long): Dataset[String] = {
     import spark.implicits._
     spark.range(n).map(i => DocGen.docId(i))
-  }
-
-  /** THE per-partition body of every Spark extraction path (`run`,
-    * `runFromIds`, `DocExtractExec`, `StreamJobs.extractStream`,
-    * `ExtractJob.writeOutputs`). It owns the per-partition model scope —
-    * a real model lazily creates its ONNX session here and reuses it
-    * across the iterator — and installs the layout-telemetry sink for the
-    * task thread (clearing a sink a previous task left on a reused
-    * executor thread; see [[graft.kernel.LayoutTelemetry]]). */
-  def extractPartition(docs: Iterator[DocRow], model: DocModel = StubModel,
-      telemetry: Option[LayoutTelemetry.Sink] = None): Iterator[DocResult] = {
-    LayoutTelemetry.install(telemetry)
-    docs.map(d => extractDoc(d, model))
   }
 
   /** A document's placement in `[0, 1)` by a hash of its id independent
@@ -76,40 +66,39 @@ object Extract {
   def run(docs: Dataset[DocRow], partitions: Int = 32,
       model: DocModel = StubModel,
       telemetry: Option[LayoutTelemetry.Sink] = None,
-      place: Column = hashFraction): Dataset[DocResult] = {
-    import docs.sparkSession.implicits._
-    route(docs, partitions, place)
-      .mapPartitions(it => extractPartition(it, model, telemetry))
-  }
+      place: Column = hashFraction): Dataset[DocResult] =
+    DocExtract(route(docs, partitions, place), model, telemetry)
 
-  /** Generation-fused variant: route the doc_id STREAM, then generate +
-    * extract inside one mapPartitions. The only shuffle moves bare id
+  /** Generation-fused variant: route the doc_id STREAM, then generate
+    * each row in the extraction stage. The only shuffle moves bare id
     * strings — the pattern a real deployment gets from a
     * bucket-partitioned input table, where the heavy rows never cross the
-    * wire either. */
+    * wire either. The id-to-row map feeds the operator object to object. */
   def runFromIds(ids: Dataset[String], partitions: Int = 32,
       model: DocModel = StubModel): Dataset[DocResult] = {
     import ids.sparkSession.implicits._
-    route(ids.toDF("doc_id").as[String], partitions, hashFraction)
-      .mapPartitions(it => extractPartition(it.map(DocGen.docRow), model))
+    val docs = route(ids.toDF("doc_id").as[String], partitions, hashFraction)
+      .map(DocGen.docRow _)
+    DocExtract(docs, model, None)
   }
 
   /** Exploded span view of the extraction output (one row per span) —
     * the driver query and the shape golden compares run on; the global
     * sort exists only for the deterministic oracle dump. */
-  def extractSpans(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+  def extractSpans(spark: SparkSession, dir: String): DataFrame =
     extractSpansUnordered(spark, dir).orderBy("doc_id", "ord")
 
   /** The same view WITHOUT the dump sort — consumers that regroup or
     * window by doc (the chunkers) would pay the global sort shuffle for
     * nothing. */
-  def extractSpansUnordered(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    run(corpus(docIds(spark, dir)))
-      .select(col("doc_id"), explode(col("spans")).as("s"))
+  def extractSpansUnordered(spark: SparkSession, dir: String): DataFrame =
+    spanView(extractDocs(spark, dir))
+
+  /** One row per span of `results`: `(doc_id, ord, kind, media_ref, text)`. */
+  private[graft] def spanView(results: Dataset[DocResult]): DataFrame =
+    results.select(col("doc_id"), explode(col("spans")).as("s"))
       .select(col("doc_id"), col("s.order").as("ord"), col("s.kind"),
         col("s.media_ref"), col("s.text"))
-  }
 
   /** Whole-document extraction results for the given corpus dir — the
     * per-doc consumers (the chunkers) fold inside the extraction
@@ -117,8 +106,8 @@ object Extract {
     * documents are already WHOLE in the kernel stage; a
     * groupByKey(doc_id) downstream re-shuffles every span for an
     * aggregation the map side can do for free). */
-  def extractDocs(spark: SparkSession, dir: String): Dataset[graft.schema.DocResult] =
-    run(corpus(docIds(spark, dir)))
+  def extractDocs(spark: SparkSession, dir: String): Dataset[DocResult] =
+    runFromIds(docIds(spark, dir))
 
   /** The ids of the documents table in `dir`. */
   private[graft] def docIds(spark: SparkSession, dir: String): Dataset[String] = {

@@ -342,10 +342,6 @@ object TableMerge {
     open + render(rows1 ++ body2).stripPrefix("<table>")
   }
 
-  /** Legacy structural probe (kept for specs): both tables share an
-    * identical first row. */
-  def headerOf(html: String): Option[Row] = parse(html).headOption
-
   // -- stream-level pass ----------------------------------------------------
 
   /** The cross-page merge pass over a flat reading-order block stream,

@@ -1232,15 +1232,11 @@ object Queries {
     // additionally pins span equality per document
     "extract_pipeline" -> ((s: SparkSession, d: String) =>
       graft.pipeline.Extract.extractSpans(s, d)),
-    // the same pipeline as a WHOLE-OPERATOR Catalyst node (custom
-    // LogicalPlan -> SparkStrategy -> fused SparkPlan emitting
-    // UnsafeRows, via SparkSessionExtensions) — must reproduce the same
-    // golden oracle as the Dataset path
-    "extract_exec" -> ((s: SparkSession, d: String) => {
-      val ids = graft.pipeline.Extract.docIds(s, d).toDF("doc_id")
-        .repartition(32, col("doc_id"))
-      graft.plans.DocExtract(ids).orderBy("doc_id", "ord")
-    }),
+    // the same explode-and-sort over the one extraction operator
+    // (`plans.DocExtract`) as extract_pipeline; the name stays in the
+    // registry, checked against the same golden oracle
+    "extract_exec" -> ((s: SparkSession, d: String) =>
+      graft.pipeline.Extract.extractSpans(s, d)),
     "det_low_conf_filter" -> detLowConfFilter _,
     "det_iou_dedup" -> detIouDedup _,
     "page_median_height" -> pageMedianHeight _,

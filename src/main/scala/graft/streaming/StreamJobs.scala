@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.{DocRow, DocResult}
-import graft.pipeline.Extract
+import graft.kernel.StubModel
+import graft.pipeline.Assemble
 
 /** Structured Streaming surface. The reference is pure batch (SURVEY.md
   * §2.10) — these jobs are the streaming-ingest counterparts a production
@@ -16,15 +17,12 @@ object StreamJobs {
   val docSchema: StructType = Encoders.product[DocRow].schema
 
   /** Continuous extraction over a parquet landing directory: each
-    * micro-batch runs the same per-partition kernel + assembly as the batch
-    * job (stateless, so exactly-once with any replayable source/sink). */
+    * micro-batch runs the same extraction operator as the batch job
+    * (stateless, so exactly-once with any replayable source/sink). */
   def extractStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
     import spark.implicits._
-    spark.readStream
-      .schema(docSchema)
-      .parquet(landingDir)
-      .as[DocRow]
-      .mapPartitions(it => Extract.extractPartition(it))
+    val docs = spark.readStream.schema(docSchema).parquet(landingDir).as[DocRow]
+    graft.plans.DocExtract(docs, StubModel, None)
   }
 
   /** Continuous ingestion of landed blobs (.pdf/.ooxml/.html/images/OLE —
@@ -55,7 +53,7 @@ object StreamJobs {
             case dot => base.substring(0, dot)
           }
           // a corrupt landed blob becomes an empty result, not a dead stream
-          graft.io.Sniff.guarded(id, bytes).getOrElse(DocResult(id, Seq.empty, ""))
+          graft.io.Sniff.guarded(id, bytes).getOrElse(Assemble.result(id, Nil))
         }
       }
   }

@@ -78,13 +78,4 @@ object TextNorm {
     }
     out
   }
-
-  /** CR/LF scrub inside spans (span_pre_proc.py:136-138). */
-  def stripNewlines(s: String): String =
-    if (s.indexOf('\r') < 0 && s.indexOf('\n') < 0) s
-    else s.replace("\r", "").replace("\n", "")
-
-  /** Escape markdown-active chars (pipeline_middle_json_mkcontent.py:372). */
-  def escapeMarkdown(s: String): String =
-    s.replace("*", "\\*").replace("`", "\\`").replace("~", "\\~")
 }

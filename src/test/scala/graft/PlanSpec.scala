@@ -3,26 +3,31 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, MapPartitionsExec, QueryExecution,
+  SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
   QueryStageExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.util.concurrent.ConcurrentLinkedQueue
+import graft.pipeline.Extract
+import graft.plans.DocExtractExec
 
-/** The whole-operator Catalyst form (builder preference tier c): custom
-  * LogicalPlan -> injected SparkStrategy -> fused physical DocExtractExec
-  * emitting UnsafeRows directly. The physical plan must actually contain
-  * the custom operator, and its results must equal the Dataset path's. */
+/** The one extraction operator: a custom LogicalPlan -> SparkStrategy ->
+  * physical DocExtractExec that every Spark extraction path plans
+  * through. The physical plan must actually contain the custom operator,
+  * where the paths need it, and its results must equal the golden. */
 class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = TestSpark.session
 
+  private def shuffles(p: SparkPlan) = collect(p) { case s: ShuffleExchangeExec => s }.size
+
   test("DocExtractExec appears in the physical plan and matches the Dataset path") {
     import spark.implicits._
     val ids = spark.createDataset((0 until 48).map(i => f"doc-$i%012d")).toDF("doc_id")
-    val df = graft.plans.DocExtract(ids)
+    val df = Extract.spanView(Extract.runFromIds(ids.as[String]))
     val physical = df.queryExecution.executedPlan.toString
     assert(physical.contains("DocExtract"), s"operator missing:\n$physical")
     val got = df.orderBy("doc_id", "ord").collect().toVector
@@ -37,7 +42,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("projection and filter compose above the custom node") {
     import spark.implicits._
     val ids = spark.createDataset(Seq("doc-000000000003")).toDF("doc_id")
-    val df = graft.plans.DocExtract(ids)
+    val df = Extract.spanView(Extract.runFromIds(ids.as[String]))
       .where("kind = 'title'").select("kind", "text")
     val rows = df.collect()
     assert(rows.nonEmpty && rows.forall(_.getString(0) == "title"))
@@ -90,9 +95,29 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     assert(resultStage(write).exists(_.isInstanceOf[CollectMetricsExec]),
       s"the row counts are not in the write's result stage:\n$write")
+    // extraction runs in the result stage, once: the layout counters are exact
+    assert(resultStage(write).count(_.isInstanceOf[DocExtractExec]) == 1,
+      s"the write's result stage does not hold one extraction operator:\n$write")
     // the writer's local sort by bucket adds no Exchange
-    def shuffles(p: SparkPlan) = collect(p) { case s: ShuffleExchangeExec => s }.size
     val alone = graft.pipeline.Extract.run(docs, 2).queryExecution.executedPlan
     assert(shuffles(alone) == 1 && shuffles(write) == shuffles(alone), s"write plan:\n$write")
+  }
+
+  test("ids cross one shuffle into the operator, and the chunker reads its objects directly") {
+    import spark.implicits._
+    val ids = spark.createDataset((0 until 8).map(i => f"doc-$i%012d"))
+    val plan = Extract.runFromIds(ids, 2).queryExecution.executedPlan
+    val ops = collect(plan) { case e: DocExtractExec => e }
+    assert(shuffles(plan) == 1 && ops.size == 1 && shuffles(ops.head) == 1,
+      s"runFromIds plan:\n$plan")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_docs").toString
+    spark.range(8).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val chunks = graft.queries.Queries.all("chunk_blocks")(spark, dir).queryExecution.executedPlan
+    // the chunker's MapPartitions sits right on the operator: no
+    // SerializeFromObject/DeserializeToObject between them
+    val fed = collect(chunks) {
+      case m: MapPartitionsExec if m.child.isInstanceOf[DocExtractExec] => m }
+    assert(fed.size == 1, s"chunk_blocks plan:\n$chunks")
   }
 }
