@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Extra benchmark main (guide §1.4): per-query isolation OUTSIDE the frozen
   * Bench harness. For each named query it
-  *   - dumps `.explain("formatted")` to plans/r06/<name>_<tag>.txt,
+  *   - dumps `.explain("formatted")` to `<java.io.tmpdir>/graft-plans/<name>_<tag>.txt`,
   *   - times the bench action (`.count()`, same session shape as Bench) and
   *     a noop-sink write (full row computation incl. the dump sort),
   * printing min-of-N for each. Usage:
@@ -39,8 +39,9 @@ object BenchExtra {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val planDir = new java.io.File("plans/r06")
+    val planDir = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-plans")
     planDir.mkdirs()
+    println(s"plans: $planDir")
 
     qs.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -48,7 +49,7 @@ object BenchExtra {
       val df = fn(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      val pw = new java.io.PrintWriter(s"plans/r06/${name}_$tag.txt", "UTF-8")
+      val pw = new java.io.PrintWriter(new java.io.File(planDir, s"${name}_$tag.txt"), "UTF-8")
       try pw.write(plan) finally pw.close()
       // timed count (bench action)
       spark.sparkContext.setJobDescription(s"bench-extra count $name")

@@ -10,10 +10,11 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.AccumulatorV2
 import graft.schema.CheckpointRow
 
 /** The bucketed commit protocol: Iceberg-snapshot semantics over plain
@@ -27,13 +28,14 @@ import graft.schema.CheckpointRow
   *   - `out/_input_fp/`: the per-bucket input fingerprint `(bucket, h)`
   *     of an incremental stage, stored after the stage committed.
   *
-  * A unit is ONE Spark job, `<runId>:write`: it writes its buckets with
-  * dynamic partition overwrite (re-running a unit replaces exactly its
-  * partitions) and counts each bucket's rows and spans with
-  * `Dataset.observe`, exactly, since Spark applies a result task's
-  * accumulator updates once per partition. Then the driver writes the
-  * unit's checkpoint file. Resume = re-run: buckets with a `done` row are
-  * skipped, the buckets of a crashed unit are overwritten. Output is
+  * A run routes its rows in one map job; each unit is then one job that
+  * skips it and reads the unit's range of the shuffle, all `<runId>:write`.
+  * A unit writes its buckets with dynamic partition overwrite (re-running
+  * a unit replaces exactly its partitions) and counts each bucket's rows
+  * and spans in one per-task pass, exactly, since Spark applies a result
+  * task's accumulator updates once per partition. Then the driver writes
+  * the unit's checkpoint file. Resume = re-run: buckets with a `done` row
+  * are skipped, the buckets of a crashed unit are overwritten. Output is
   * byte-stable because the per-unit work is deterministic per `doc_id`.
   *
   * The driver reads and writes the side tables itself (parquet-hadoop),
@@ -77,14 +79,15 @@ object Commit {
   /** Commits `extract` over `input` into `outDir`: the buckets not yet
     * done run in `groups` sequential units, and `failAfterGroups` stops
     * after that many units (the resume specs' crash hook). `extract` maps
-    * a unit's slice and each row's [[slice]] placement to a frame with a
-    * `doc_id` column (and `spans`, whose sizes the checkpoint counts, when
-    * it has one); routed by the placement, a unit writes at most
-    * `unitSize + partitions - 1` part files. `metrics` gives the caller's
-    * own `(stage, key, value)` rows; it is evaluated after the last unit,
-    * so it may read accumulators the units filled. */
+    * the run's rows to a frame with a `doc_id` column (and `spans`, whose
+    * sizes the checkpoint counts, when it has one); its `route(ds, p)`
+    * sends each row by its [[slice]] placement to `p` reducers of its
+    * unit, so a unit writes at most `unitSize + p - 1` part files. A run
+    * of several units must route. `metrics` gives the caller's own
+    * `(stage, key, value)` rows; it is evaluated after the last unit, so
+    * it may read accumulators the units filled. */
   def runWith[T](spark: SparkSession, input: Dataset[T],
-      extract: (Dataset[T], Column) => DataFrame, outDir: String,
+      extract: (Dataset[T], (Dataset[T], Int) => Dataset[T]) => DataFrame, outDir: String,
       buckets: Int, groups: Int, runId: String,
       failAfterGroups: Int = Int.MaxValue,
       metrics: => Seq[(String, String, Double)] = Nil): JobReport = {
@@ -99,29 +102,42 @@ object Commit {
     var totSpans = 0L
     val t0 = System.nanoTime()
 
-    units.take(failAfterGroups).foreach { unit =>
-      val (in, place) = slice(input, unit, buckets)
-      val res = extract(in, place).withColumn("bucket", bucketOf(buckets))
-      // per-bucket lineage, counted by the write itself (an Iceberg
-      // deployment reads these from commit metrics instead); non-span
-      // stages (the dedup chain's pair/label tables) record rows only
-      val spanCount = if (res.columns.contains("spans")) size(col("spans")) else lit(0)
-      val counts = unit.flatMap(b => Seq(count(when(col("bucket") === b, 1)).as(s"docs$b"),
-        coalesce(sum(when(col("bucket") === b, spanCount)), lit(0L)).as(s"spans$b")))
-      val obs = Observation()
+    var width = 0
+    lazy val res = {
+      val (in, place) = slice(input, units, buckets)
+      extract(in, (ds, p) => { width = p; graft.pipeline.Extract.route(ds, units.size * p, place) })
+        .withColumn("bucket", bucketOf(buckets))
+    }
+    // the run's one map job, held for the whole loop: its shuffle outlives every unit
+    lazy val rdd = labeled(spark, s"$runId:write")(res.queryExecution.toRdd)
+    val counts = new Counts(2 * buckets)
+    spark.sparkContext.register(counts)
+
+    units.take(failAfterGroups).zipWithIndex.foreach { case (unit, k) =>
       val tU = System.nanoTime()
+      val n = rdd.getNumPartitions
+      require(units.size == 1 || n == units.size * width, s"$n partitions, not ${units.size} × $width")
+      val (bi, si, mine) = (res.schema.fieldIndex("bucket"), res.columns.indexOf("spans"), unit.toSet)
+      // unit k's reducers, counted per bucket (an Iceberg deployment reads
+      // commit metrics instead) and checked against the routing
+      val part = org.apache.spark.rdd.PartitionPruningRDD.create(rdd, _ / (n / units.size) == k)
+        .mapPartitions(_.map { r =>
+          val b = r.getInt(bi)
+          if (!mine(b)) throw new IllegalStateException(s"unit $k's range holds bucket $b")
+          counts.value(2 * b) += 1
+          if (si >= 0 && !r.isNullAt(si)) counts.value(2 * b + 1) += r.getArray(si).numElements
+          r
+        })
       // the writer option, not the session conf: later writes in the
       // session keep their own overwrite mode
       labeled(spark, s"$runId:write") {
-        res.observe(obs, counts.head, counts.tail: _*)
+        GraftBridge.ofInternalRows(spark, part, res.schema)
           .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-          .options(localFs)
-          .partitionBy("bucket").parquet(s"$outDir/data")
+          .options(localFs).partitionBy("bucket").parquet(s"$outDir/data")
       }
       val wallMs = (System.nanoTime() - tU) / 1000000
-      val stats = obs.get
       val rows = unit.map(b => CheckpointRow(runId, b, "done",
-        stats(s"docs$b").asInstanceOf[Long], stats(s"spans$b").asInstanceOf[Long], wallMs))
+        counts.value(2 * b), counts.value(2 * b + 1), wallMs))
       writeTable(spark, s"$outDir/_checkpoint", checkpointSchema, rows)
       processedBuckets += unit.size
       totDocs += rows.map(_.docs).sum
@@ -148,16 +164,28 @@ object Commit {
     JobReport(runId, buckets, processedBuckets, done.size, totDocs, totSpans, wallMs)
   }
 
-  /** The rows of `input` in `unit`'s buckets (ascending), and each row's
-    * placement in `[0, 1)`: its bucket's rank in `unit` plus
-    * [[graft.pipeline.Extract.hashFraction]], over the unit size. */
-  private[graft] def slice[T](input: Dataset[T], unit: Seq[Int],
+  /** The rows of `input` in `units`' buckets (ascending), and each row's
+    * placement in `[0, 1)`: its bucket's rank in the run plus
+    * [[graft.pipeline.Extract.hashFraction]], over `U × unitSize` for `U`
+    * units, so unit k owns `[k/U, (k+1)/U)` (a short last unit fills the
+    * front of its range). */
+  private[graft] def slice[T](input: Dataset[T], units: Seq[Seq[Int]],
       buckets: Int): (Dataset[T], Column) = {
-    // a unit spanning every bucket (fresh single-unit run) needs no
-    // bucket filter — skip the per-row hash predicate (r6)
-    val in = if (unit.size == buckets) input else input.filter(bucketOf(buckets).isin(unit: _*))
-    val rank = array_position(lit(unit.toArray), bucketOf(buckets)) - 1
-    (in, (rank + graft.pipeline.Extract.hashFraction) / unit.size)
+    // a fresh run needs no bucket filter: skip the per-row hash predicate (r6)
+    val todo = units.flatten
+    val in = if (todo.size == buckets) input else input.filter(bucketOf(buckets).isin(todo: _*))
+    val rank = array_position(lit(todo.toArray), bucketOf(buckets)) - 1
+    (in, (rank + graft.pipeline.Extract.hashFraction) / (units.size * units.head.size))
+  }
+
+  /** A bucket b's rows at `2b` and spans at `2b + 1`. */
+  private class Counts(n: Int) extends AccumulatorV2[Array[Long], Array[Long]] {
+    val value = new Array[Long](n)
+    def isZero: Boolean = value.forall(_ == 0)
+    def copy(): Counts = { val c = new Counts(n); c.add(value); c }
+    def reset(): Unit = java.util.Arrays.fill(value, 0L)
+    def add(v: Array[Long]): Unit = v.indices.foreach(i => value(i) += v(i))
+    def merge(o: AccumulatorV2[Array[Long], Array[Long]]): Unit = add(o.value)
   }
 
   private def bucketOf(buckets: Int): Column =
@@ -208,8 +236,8 @@ object Commit {
     spark.read.schema(schema).parquet(s"$outDir/data").drop("bucket")
 
   /** Runs `body` under the job description `desc`, then restores the
-    * caller's. Traces attribute jobs by these labels; the protocol's one
-    * job per unit is `<runId>:write`. */
+    * caller's. Traces attribute jobs by these labels; the protocol's map
+    * job and unit jobs are `<runId>:write`. */
   def labeled[A](spark: SparkSession, desc: String)(body: => A): A = {
     val sc = spark.sparkContext
     val outer = sc.getLocalProperty("spark.job.description")

@@ -69,9 +69,9 @@ object DedupPipeline {
     * `failAfterStages` stops the job after N completed stages — the
     * resume spec's crash hook. `incremental = false` is the one-shot
     * run into a fresh dir that nothing re-runs (pipelineQuery): it
-    * computes no fingerprints, and commits each stage as one unit, since
-    * there is nothing to resume (2 units per stage only doubled the job
-    * count). Returns the per-stage job reports. */
+    * computes no fingerprints. Each stage commits as one unit, in both
+    * modes: skip and re-open work per bucket, so a stage body needs no
+    * routing. Returns the per-stage job reports. */
   def run(spark: SparkSession, dir: String, outDir: String,
       buckets: Int = 8,
       failAfterStages: Int = Int.MaxValue,
@@ -86,8 +86,7 @@ object DedupPipeline {
       lazy val cur = fp
       val stale = if (incremental) Commit.stale(spark, stageOut, cur, nb) else Set.empty[Int]
       Commit.reopen(spark, stageOut, stale)
-      val report = Commit.runWith[Row](spark, input, (slice, _) => body(slice), stageOut, nb,
-        groups = if (incremental) math.min(2, nb) else 1, runId = name)
+      val report = Commit.runWith[Row](spark, input, (in, _) => body(in), stageOut, nb, 1, name)
       if (stale.nonEmpty) Commit.storeFp(spark, stageOut, cur)
       name -> report
     }

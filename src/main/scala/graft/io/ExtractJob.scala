@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.kernel.StubModel
-import graft.pipeline.Extract
 import graft.plans.DocExtract
 
 /** Resumable extraction jobs with per-partition lineage (north rule:
@@ -21,15 +20,16 @@ object ExtractJob {
     // that reaches the driver on a multi-executor cluster. Their merged
     // values land in `_metrics`, making "no silently-authored-away
     // layouts" a monitorable job invariant instead of a JVM-local probe.
-    // Per-attempt, EXACT counters (extraction runs in the write's result
-    // stage); a resumed attempt counts only its own buckets.
+    // Per-attempt, EXACT counters: the run routes the documents to
+    // `partitions` reducers per unit, and each unit extracts its range in
+    // its write's result stage; a resumed attempt counts only its buckets.
     val sc = spark.sparkContext
     val sink = graft.kernel.LayoutTelemetry.Sink(
       sc.longAccumulator("graft.layout.authored_away"),
       sc.longAccumulator("graft.layout.unsolvable"),
       sc.longAccumulator("graft.layout.insert_pages"))
     Commit.runWith[DocRow](spark, docs,
-      (d, place) => Extract.run(d, partitions, telemetry = Some(sink), place = place).toDF(),
+      (d, route) => DocExtract(route(d, partitions), StubModel, Some(sink)).toDF(),
       outDir, buckets, groups, runId, failAfterGroups,
       metrics = Seq(
         ("layout", "authored_away_pages", sink.authoredAway.value.toDouble),
@@ -107,10 +107,12 @@ object ExtractJob {
       runId: String = "run-1", failAfterGroups: Int = Int.MaxValue): Commit.JobReport = {
     import spark.implicits._
     // a corrupt crawl blob becomes an empty-span row and a counted
-    // metric, the crawl-ingestion contract ([[Sniff.guarded]])
+    // metric, the crawl-ingestion contract ([[Sniff.guarded]]); blobs are
+    // routed as `run` routes documents, one reducer per core per unit
     val failed = spark.sparkContext.longAccumulator("graft.ingest.failed_docs")
     Commit.runWith[org.apache.spark.sql.Row](spark, blobs,
-      (in, _) => in.select(col("doc_id"), col("content")).as[(String, Array[Byte])]
+      (in, route) => route(in, spark.sparkContext.defaultParallelism)
+        .select(col("doc_id"), col("content")).as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.map { case (id, bytes) =>
             Sniff.guarded(id, bytes) match {

@@ -12,10 +12,10 @@ import org.apache.spark.util.LongAccumulator
   * its own thread, extract, read the accumulators.
   *
   * The counters are EXACT where extraction runs in a result stage, as in
-  * `ExtractJob.run`, whose write plans one [[graft.plans.DocExtractExec]]
-  * in its result stage (PlanSpec): Spark applies a result task's
-  * accumulator updates once per partition. In a map stage, a re-run task
-  * would re-add.
+  * `ExtractJob.run`: its map job only routes the documents, and each
+  * unit's write job extracts its range in its result stage (PlanSpec).
+  * Spark applies a result task's accumulator updates once per partition;
+  * in a map stage, a re-run task would re-add.
   *
   * The sink is installed per PARTITION by [[graft.plans.DocExtractExec]]
   * (a Spark task runs its whole iterator on one thread, so ThreadLocal

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions.col
 import graft.io.{Commit, ExtractJob}
 import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
 import graft.pipeline.Extract
+import graft.plans.DocExtract
 import graft.schema.{DocRow, PageModel}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The commit's counts are exact under task retries: a unit's write job
   * runs the extraction in its result stage, and Spark applies a result
-  * task's accumulator updates (the `observe` counts and the layout
+  * task's accumulator updates (the per-bucket counts and the layout
   * counters alike) once per partition. A failed attempt's updates are
   * dropped, so a run whose tasks fail once and are retried must count
   * exactly what a cold run counts. */
@@ -37,7 +38,7 @@ class CommitRetrySpec extends AnyFunSuite {
         sc.longAccumulator("graft.layout.insert_pages"))
       FailsOnce.thrown.set(0)
       Commit.runWith[DocRow](spark, docs,
-        (d, place) => Extract.run(d, 4, FailsOnce, Some(sink), place).toDF(),
+        (d, route) => DocExtract(route(d, 4), FailsOnce, Some(sink)).toDF(),
         retried, buckets = 16, groups = 2, runId = "retried",
         metrics = Seq(
           ("layout", "authored_away_pages", sink.authoredAway.value.toDouble),

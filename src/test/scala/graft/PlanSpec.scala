@@ -1,12 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CollectMetricsExec, MapPartitionsExec, QueryExecution,
   SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
-  QueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -48,59 +48,69 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rows.nonEmpty && rows.forall(_.getString(0) == "title"))
   }
 
-  test("a commit unit is one write job that counts its rows in the result stage") {
+  test("a commit run is one map job, then one write job per unit that skips it") {
     val writes = new ConcurrentLinkedQueue[SparkPlan]()
-    val jobs = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
     val plans = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
           writes.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val labels = new SparkListener {
+    val events = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")) -> e.stageIds)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
     }
     val docs = graft.pipeline.Extract.corpus(graft.pipeline.Extract.idRange(spark, 40L))
     val out = java.nio.file.Files.createTempDirectory("graft_plan").toString
     spark.listenerManager.register(plans)
-    spark.sparkContext.addSparkListener(labels)
+    spark.sparkContext.addSparkListener(events)
     try {
       graft.io.ExtractJob.run(spark, docs, out, buckets = 4, groups = 2, runId = "plan",
         partitions = 2)
       // both listeners sit on the same bus queue: once the second write's
-      // plan arrived, every job start before it has too
+      // plan arrived, every job and stage event before it has too
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
     } finally {
       spark.listenerManager.unregister(plans)
-      spark.sparkContext.removeSparkListener(labels)
+      spark.sparkContext.removeSparkListener(events)
     }
     assert(writes.size == 2, "the two units' write plans never arrived")
-    // routed by bucket range: a 2-bucket unit over 2 tasks puts one whole
-    // bucket in each task, so each bucket is one part file
+    // routed by bucket range: unit k owns reducers [2k, 2k + 2), so each
+    // of its two buckets is one task and one part file
     val parts = (0 until 4).map(b => new java.io.File(s"$out/data/bucket=$b")
       .list().count(f => f.startsWith("part-") && f.endsWith(".parquet")))
     assert(parts == Seq(1, 1, 1, 1), s"part files per bucket: $parts")
     // no bookkeeping job: no stats, checkpoint, metrics or side-table read
-    assert(jobs.toArray.toSet == Set("plan:write"), s"jobs: $jobs")
+    val js = jobs.toArray(Array.empty[(String, Seq[Int])]).toSeq
+    assert(js.size == 3 && js.forall(_._1 == "plan:write"), s"jobs: $js")
 
-    val write = writes.peek()
-    // the result stage: the plan above the first stage boundary
-    def resultStage(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => resultStage(a.executedPlan)
-      case r: ResultQueryStageExec => resultStage(r.plan)
-      case _: QueryStageExec | _: Exchange => Nil
-      case other => other +: other.children.flatMap(resultStage)
+    // one shuffle map stage runs per run, in the first job; each unit's
+    // job lists a map stage for the same shuffle, finds its output there
+    // and skips it, running only its own result stage
+    val ran = stages.toArray(Array.empty[StageInfo]).toSeq
+    val (maps, results) = ran.partition(_.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+    assert(maps.size == 1 && results.size == 2, s"stages run: ${ran.map(_.name)}")
+    assert(js.head._2 == Seq(maps.head.stageId), s"jobs: $js")
+    assert(js.tail.map(_._2.filter(results.map(_.stageId).contains)) ==
+      results.map(st => Seq(st.stageId)) && js.tail.forall(_._2.size == 2), s"jobs: $js")
+    assert(results.forall(_.taskMetrics.shuffleReadMetrics.recordsRead > 0), "a unit read no shuffle")
+    // extraction runs in the result stages, once per unit: the layout
+    // counters and the bucket counts are exact
+    def extracts(st: StageInfo) = st.rddInfos.exists(_.callSite.contains("DocExtract.scala"))
+    assert(results.forall(extracts) && !extracts(maps.head),
+      s"extraction stages: ${ran.map(st => st.stageId -> st.rddInfos.map(_.callSite))}")
+
+    // a write reads its unit's range of the shuffle: no Exchange of its
+    // own (the writer's local sort by bucket adds none) and no observe
+    writes.forEach { write =>
+      assert(collect(write) { case e: Exchange => e }.isEmpty, s"write plan:\n$write")
+      assert(find(write)(_.isInstanceOf[CollectMetricsExec]).isEmpty, s"write plan:\n$write")
     }
-    assert(resultStage(write).exists(_.isInstanceOf[CollectMetricsExec]),
-      s"the row counts are not in the write's result stage:\n$write")
-    // extraction runs in the result stage, once: the layout counters are exact
-    assert(resultStage(write).count(_.isInstanceOf[DocExtractExec]) == 1,
-      s"the write's result stage does not hold one extraction operator:\n$write")
-    // the writer's local sort by bucket adds no Exchange
-    val alone = graft.pipeline.Extract.run(docs, 2).queryExecution.executedPlan
-    assert(shuffles(alone) == 1 && shuffles(write) == shuffles(alone), s"write plan:\n$write")
   }
 
   test("ids cross one shuffle into the operator, and the chunker reads its objects directly") {
