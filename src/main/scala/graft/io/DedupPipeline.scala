@@ -35,6 +35,9 @@ import graft.queries.ScaleQueries
   * instead of a scan. */
 object DedupPipeline {
 
+  // the corpus columns the chain reads (explicit: no inference job)
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
   // explicit stage schemas: a duplicate-free corpus can legally produce a
   // ZERO-ROW stage, whose partitionBy write leaves no part files — reading
   // it back must not die on schema inference (r4 advice)
@@ -76,7 +79,7 @@ object DedupPipeline {
       buckets: Int = 8,
       failAfterStages: Int = Int.MaxValue,
       incremental: Boolean = true): Vector[(String, Commit.JobReport)] = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
     def table(name: String, schema: StructType) = Commit.read(spark, s"$outDir/$name", schema)
 
     // fingerprint → stale set → re-open → commit → store fingerprint

@@ -61,13 +61,11 @@ object Extract {
     * deployment swaps in an ONNX-backed DocModel with the same contract.
     * `telemetry`: driver-registered layout-validation accumulators,
     * installed per partition (task threads) so the counters reach the
-    * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]).
-    * `place`: each document's placement in `[0, 1)`, see [[route]]. */
+    * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]). */
   def run(docs: Dataset[DocRow], partitions: Int = 32,
       model: DocModel = StubModel,
-      telemetry: Option[LayoutTelemetry.Sink] = None,
-      place: Column = hashFraction): Dataset[DocResult] =
-    DocExtract(route(docs, partitions, place), model, telemetry)
+      telemetry: Option[LayoutTelemetry.Sink] = None): Dataset[DocResult] =
+    DocExtract(route(docs, partitions, hashFraction), model, telemetry)
 
   /** Generation-fused variant: route the doc_id STREAM, then generate
     * each row in the extraction stage. The only shuffle moves bare id

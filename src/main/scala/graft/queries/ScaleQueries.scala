@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -298,15 +299,17 @@ object ScaleQueries {
       .orderBy("doc_id")
 
   /** The live component computation from materialized candidates (the
-    * GROUPS stage body). */
+    * GROUPS stage body). Edges and labels share one `HashPartitioner`, so
+    * a round is one job: its joins are narrow, its one shuffle is the
+    * `reduceByKey` to `v` (AQE would run each DataFrame exchange as a job). */
   def dedupGroupsFrom(cands: DataFrame, docs: DataFrame): DataFrame = {
     val spark = cands.sparkSession
-    // pairs feeds only `edges`, which is cached itself; a cached `pairs`
-    // block is computed by both union branches' tasks at once
-    val pairs = cands.select(col("doc_id"), col("b_id"))
-    val edges = pairs.select(col("doc_id").as("v"), col("b_id").as("u"))
-      .unionByName(pairs.select(col("b_id").as("v"), col("doc_id").as("u")))
-      .persist()
+    import spark.implicits._
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // (u, v) in both directions, keyed by u; a null endpoint joins nothing
+    val edges = cands.select(col("doc_id"), col("b_id")).na.drop()
+      .rdd.flatMap { r => Iterator(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)) }
+      .partitionBy(part).persist()
     // r6 (guide §2.3 — shuffle the proxy, not the corpus): propagation
     // iterates over the CANDIDATE SUBGRAPH only. A doc with no candidate
     // pair is a fixed point of min-label propagation (its closed
@@ -316,8 +319,9 @@ object ScaleQueries {
     // the corpus and its near-dup fringe. Isolated docs re-join once at
     // the end via a left join (labels side is O(2·candidates), the
     // broadcastable side).
-    var labels = edges.select(col("v")).distinct()
-      .withColumn("lbl", col("v")).persist()
+    // (v, (lbl, prev)): the changed-row count filters a round's output
+    var labels = edges.mapPartitions(_.map { case (u, _) => u -> (u, u) }, preservesPartitioning = true)
+      .reduceByKey(part, (a, _) => a).persist()
     var iter = 0
     var changed = 1L
     // run to CONVERGENCE: min-label propagation terminates in component-
@@ -325,33 +329,27 @@ object ScaleQueries {
     // round), while a fixed small cap would silently disagree with the
     // oracle's exact transitive closure on long candidate chains. The
     // generous bound only guards a logic regression. Lineage is truncated
-    // each round: RELIABLY (checkpoint to the configured checkpoint dir —
-    // survives executor loss, the multi-executor deployment shape) when
-    // the session has one, else memory-only localCheckpoint (single-box
-    // local mode has no executor-loss failure domain).
+    // each round: RELIABLY (checkpoint to the configured checkpoint dir,
+    // from the persisted round — survives executor loss, the multi-executor
+    // deployment shape) when the session has one, else localCheckpoint
+    // (single-box local mode has no executor-loss failure domain).
     val reliable = spark.sparkContext.getCheckpointDir.isDefined
     while (changed > 0 && iter < 10000) {
-      val nbrMin = edges
-        .join(labels.select(col("v").as("u"), col("lbl").as("ulbl")), Seq("u"))
-        .groupBy(col("v")).agg(min(col("ulbl")).as("nbr_lbl"))
-      // carry the previous label through the checkpoint so the changed-
-      // row count is a filter over materialized data instead of a second
-      // join against the previous round (r6: one join per round, not two)
-      val next0 = labels.join(nbrMin, Seq("v"), "left")
-        .select(col("v"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
-          col("lbl").as("prev"))
-      val next = graft.io.Commit.labeled(spark, s"labelprop:round$iter") {
-        val cut = if (reliable) next0.checkpoint() else next0.localCheckpoint(true)
-        changed = cut.filter(col("lbl") =!= col("prev")).count()
-        cut
+      val nbrMin = edges.join(labels).values.map { case (v, (l, _)) => v -> l }
+        .reduceByKey(part, math.min(_, _))
+      val next = labels.join(nbrMin).mapValues { case ((l, _), n) => (math.min(l, n), l) }
+      if (reliable) { next.persist(); next.checkpoint() } else next.localCheckpoint()
+      changed = graft.io.Commit.labeled(spark, s"labelprop:round$iter") {
+        next.filter { case (_, (l, prev)) => l != prev }.count()
       }
-      labels.unpersist()
-      labels = next.select(col("v"), col("lbl"))
+      // a local checkpoint's blocks go once unreachable (ContextCleaner):
+      // `unpersist` warns that its truncated lineage cannot be recomputed
+      if (iter == 0 || reliable) labels.unpersist()
+      labels = next
       iter += 1
     }
     val out = docs.select(col("doc_id"))
-      .join(labels.select(col("v").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
+      .join(labels.mapValues(_._1).toDF("doc_id", "lbl"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("group_id"))
     edges.unpersist()
     out
