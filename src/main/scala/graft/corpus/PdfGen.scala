@@ -43,7 +43,9 @@ object PdfGen {
   private case class PDoc(title: String, blocks: Vector[PBlock],
       sidebar: Option[String])
 
-  /** content-level sidebar presence (test non-vacuity probe). */
+  /** content-level sidebar presence (test non-vacuity probe). Only
+    * PdfSpec calls it; it stays because it reads the generator's private
+    * document model, which a spec cannot. */
   private[graft] def hasSidebar(docId: String): Boolean = doc(docId).sidebar.isDefined
 
   private def doc(docId: String): PDoc = {

@@ -68,103 +68,13 @@ object Geo {
     math.sqrt(dx * dx + dy * dy)
   }
 
-  /** Relative position of box1 vs box2 (boxbase.py bbox_relative_pos:19):
-    * (left, right, bottom, top) — each true when box1 is strictly on that
-    * side of box2. */
-  def relativePos(ax0: Double, ay0: Double, ax1: Double, ay1: Double,
-      bx0: Double, by0: Double, bx1: Double, by1: Double)
-      : (Boolean, Boolean, Boolean, Boolean) =
-    (bx1 < ax0, ax1 < bx0, by1 < ay0, ay1 < by0)
-
-  /** Corner/edge distance between two boxes keyed by their relative
-    * position (boxbase.py bbox_distance:41 — NOT the same as [[edgeDist]]:
-    * the reference measures specific corner pairs in the diagonal cases). */
-  def bboxDistance(ax0: Double, ay0: Double, ax1: Double, ay1: Double,
-      bx0: Double, by0: Double, bx1: Double, by1: Double): Double = {
-    @inline def d(x1: Double, y1: Double, x2: Double, y2: Double) =
-      math.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
-    val (left, right, bottom, top) = relativePos(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1)
-    if (top && left) d(ax0, ay1, bx1, by0)
-    else if (left && bottom) d(ax0, ay0, bx1, by1)
-    else if (bottom && right) d(ax1, ay0, bx0, by1)
-    else if (right && top) d(ax1, ay1, bx0, by0)
-    else if (left) ax0 - bx1
-    else if (right) bx0 - ax1
-    else if (bottom) ay0 - by1
-    else if (top) by0 - ay1
-    else 0.0
-  }
-
-  /** Merge adjacent/overlapping text boxes by line-center clustering
-    * (boxbase.py merge_adjacent_bboxes:230-295): boxes cluster into lines
-    * when their y-centers sit within `yTolerance` of the line's running
-    * mean height, then line members sorted by x fuse while the gap stays
-    * under `xGapRatio` of the average font size. Boxes are
-    * (x0, y0, x1, y1, fontSize); returns merged boxes with the member
-    * index lists (the caller joins texts in that order). */
-  def mergeAdjacentBboxes(boxes: IndexedSeq[(Double, Double, Double, Double, Double)],
-      xGapRatio: Double = 0.6, yToleranceRatio: Double = 0.8)
-      : Vector[((Double, Double, Double, Double), Vector[Int])] = {
-    if (boxes.isEmpty) return Vector.empty
-    val order = boxes.indices.sortBy(i => (boxes(i)._2, boxes(i)._1))
-    val lines = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[Int]]
-    order.foreach { i =>
-      val cy = (boxes(i)._2 + boxes(i)._4) / 2
-      val line = lines.find { l =>
-        val avgH = l.map(j => boxes(j)._4 - boxes(j)._2).sum / l.length
-        val lineCy = l.map(j => (boxes(j)._2 + boxes(j)._4) / 2).sum / l.length
-        math.abs(cy - lineCy) < avgH * yToleranceRatio
-      }
-      line match {
-        case Some(l) => l += i
-        case None => lines += scala.collection.mutable.ArrayBuffer(i)
-      }
-    }
-    val out = Vector.newBuilder[((Double, Double, Double, Double), Vector[Int])]
-    lines.foreach { l =>
-      val byX = l.sortBy(j => boxes(j)._1)
-      var cur = boxes(byX.head)
-      var members = Vector(byX.head)
-      byX.tail.foreach { j =>
-        val b = boxes(j)
-        val sizeAvg = (cur._5 + b._5) / 2
-        if (b._1 - cur._3 <= sizeAvg * xGapRatio) {
-          cur = (math.min(cur._1, b._1), math.min(cur._2, b._2),
-            math.max(cur._3, b._3), math.max(cur._4, b._4), cur._5)
-          members :+= j
-        } else {
-          out += (((cur._1, cur._2, cur._3, cur._4), members))
-          cur = b
-          members = Vector(j)
-        }
-      }
-      out += (((cur._1, cur._2, cur._3, cur._4), members))
-    }
-    out.result()
-  }
-
-  /** Merge overlapping/touching 1-D intervals (ocr_utils.py merge_intervals
-    * :144-160). */
-  def mergeIntervals(iv: Seq[(Double, Double)]): Vector[(Double, Double)] = {
-    if (iv.isEmpty) return Vector.empty
-    val sorted = iv.sortBy(_._1)
-    val out = Vector.newBuilder[(Double, Double)]
-    var (lo, hi) = sorted.head
-    sorted.tail.foreach { case (s, e) =>
-      if (s <= hi) { if (e > hi) hi = e }
-      else { out += ((lo, hi)); lo = s; hi = e }
-    }
-    out += ((lo, hi))
-    out.result()
-  }
-
   /** Subtract a set of intervals from [lo, hi] (ocr_utils.py
     * remove_intervals:163-190 — the formula-mask x-range subtraction that
     * punches formula spans out of text-detection boxes). */
   def subtractIntervals(lo: Double, hi: Double,
       cuts: Seq[(Double, Double)]): Vector[(Double, Double)] = {
     var rest = Vector((lo, hi))
-    mergeIntervals(cuts).foreach { case (c0, c1) =>
+    coverage(cuts, 0.0).foreach { case (c0, c1) =>
       rest = rest.flatMap { case (a, b) =>
         if (c1 <= a || c0 >= b) Vector((a, b))
         else {
@@ -179,7 +89,9 @@ object Geo {
 
   /** Merge 1-D intervals into maximal covered segments; gaps narrower than
     * `minGap` are bridged (the XY-cut `min_gap=1` semantics,
-    * xycut_plus.py:5-31). Returns segments sorted ascending. */
+    * xycut_plus.py:5-31; at `minGap` 0, the overlapping/touching merge of
+    * ocr_utils.py merge_intervals:144-160). Returns segments sorted
+    * ascending. */
   def coverage(intervals: Seq[(Double, Double)], minGap: Double): Vector[(Double, Double)] = {
     if (intervals.isEmpty) return Vector.empty
     val sorted = intervals.sortBy(_._1)

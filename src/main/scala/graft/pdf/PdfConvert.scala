@@ -1379,9 +1379,6 @@ object PdfConvert {
     -1
   }
 
-  /** True when the blob is a PDF: `%PDF-` within the first 1024 bytes. */
-  def isPdf(bytes: Array[Byte]): Boolean = sigOffset(bytes) >= 0
-
   def convert(docId: String, bytes: Array[Byte]): DocResult = {
     val pdf = new Pdf(bytes)
     val blocks = pdf.pages().flatMap { page =>

@@ -114,47 +114,14 @@ object Assemble {
       blocks.zipWithIndex.map { case (b, ord) => OutSpan(b.kind, b.text, b.media_ref, ord) },
       renderMarkdown(blocks))
 
-  /** Configurable latex delimiters (get_latex_delimiter_config,
-    * config_reader.py:111-121; consumed at
-    * pipeline_middle_json_mkcontent.py:132-145): the defaults are the
-    * reference's `$$`/`$`; a config may swap in `\[..\]` / `\(..\)`. */
-  case class LatexDelimiters(displayLeft: String = "$$", displayRight: String = "$$",
-      inlineLeft: String = "$", inlineRight: String = "$")
-  val DefaultDelims: LatexDelimiters = LatexDelimiters()
-
-  private val InlineEq = java.util.regex.Pattern.compile("\\$([^$]+)\\$")
-
-  /** Re-wrap stored `$$..$$` / `$..$` math with the configured delimiters
-    * (stored content always uses the default form; the swap happens at
-    * render time, like the reference's mkcontent). */
-  private def reDelimit(text: String, d: LatexDelimiters, display: Boolean): String = {
-    if (d == DefaultDelims) return text
-    if (display && text.startsWith("$$")) {
-      val close = text.indexOf("$$", 2)
-      if (close < 0) text
-      else d.displayLeft + text.substring(2, close) + d.displayRight +
-        text.substring(close + 2)
-    } else {
-      val m = InlineEq.matcher(text)
-      val sb = new java.lang.StringBuilder
-      var last = 0
-      while (m.find()) {
-        sb.append(text, last, m.start())
-          .append(d.inlineLeft).append(m.group(1)).append(d.inlineRight)
-        last = m.end()
-      }
-      sb.append(text, last, text.length).toString
-    }
-  }
-
-  /** Per-document markdown (pipeline_middle_json_mkcontent.py:24-110). */
-  def renderMarkdown(blocks: Seq[OrderedBlock],
-      delims: LatexDelimiters = DefaultDelims): String =
+  /** Per-document markdown (pipeline_middle_json_mkcontent.py:24-110).
+    * Math renders in its stored form, the reference's default `$$`/`$`
+    * delimiters. */
+  def renderMarkdown(blocks: Seq[OrderedBlock]): String =
     blocks.map { b =>
       b.kind match {
         case Kinds.Title => "#" * math.max(1, b.level) + " " + b.text
         case Kinds.Figure => s"![](${b.media_ref})"
-        case Kinds.Formula => reDelimit(b.text, delims, display = true)
         case Kinds.Algorithm =>
           // magika code-lang guess in the reference; a deterministic
           // heuristic here (_merge_algorithm_block:205-237)
@@ -164,7 +131,6 @@ object Assemble {
           s"```$lang\n${b.text}\n```"
         case Kinds.Caption | Kinds.Footnote | Kinds.ImageFootnote => "*" + b.text + "*"
         case Kinds.Hyperlink => s"[${b.text}](${b.media_ref})" // inline_renderer.py:534-566
-        case Kinds.Text => reDelimit(b.text, delims, display = false)
         case _ => b.text
       }
     }.mkString("\n\n")

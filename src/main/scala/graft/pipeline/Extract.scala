@@ -4,13 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.corpus.DocGen
-import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
+import graft.kernel.{DocModel, StubModel}
 import graft.plans.DocExtract
 
 /** End-to-end extraction job (SURVEY.md §3.1 Spark shape):
   *
-  *   input docs table
+  *   input doc ids
   *     -> repartitionById on each doc's placement   (contiguous, balanced tasks)
+  *     -> DocGen.docRow                             (rows generated task-side)
   *     -> DocExtractExec                            (per-partition model session)
   *     -> page ops + doc assembly (fused — docs stay whole, zero extra shuffle)
   *     -> result Dataset[DocResult]
@@ -19,21 +20,15 @@ import graft.plans.DocExtract
   * processing and doc-level folds into a single stage: the only shuffle
   * in the job is the routing repartition. At the reference's 64-page
   * windows a whole doc is far below task granularity, so a page-level
-  * fan-out would buy a second shuffle for nothing. Every Spark path here
-  * and in `StreamJobs`/`ExtractJob` plans through the one operator,
-  * [[graft.plans.DocExtract]]. */
+  * fan-out would buy a second shuffle for nothing. Both Spark paths,
+  * [[runFromIds]] here and the committed `ExtractJob.run`, plan through
+  * the one operator, [[graft.plans.DocExtract]]. */
 object Extract {
 
   /** Pure per-document extraction — unit-testable without Spark. */
   def extractDoc(doc: DocRow, model: DocModel = StubModel): DocResult = {
     val pages = model.analyze(doc)
     Assemble.assemble(doc.doc_id, pages.map(p => PageOps.process(p)))
-  }
-
-  /** Deterministic corpus table from a dataset of doc ids (FIXTURES.md §2). */
-  def corpus(ids: Dataset[String]): Dataset[DocRow] = {
-    import ids.sparkSession.implicits._
-    ids.map(DocGen.docRow _)
   }
 
   /** Synthesize the doc ids of indexes `0 until n` ([[DocGen.docId]]). */
@@ -57,21 +52,14 @@ object Extract {
   private[graft] def route[T](ds: Dataset[T], partitions: Int, place: Column): Dataset[T] =
     ds.repartitionById(partitions, floor(place * partitions).cast("int"))
 
-  /** The extraction job. `model` defaults to the deterministic stub; a real
-    * deployment swaps in an ONNX-backed DocModel with the same contract.
-    * `telemetry`: driver-registered layout-validation accumulators,
-    * installed per partition (task threads) so the counters reach the
-    * driver on a real cluster (see [[graft.kernel.LayoutTelemetry]]). */
-  def run(docs: Dataset[DocRow], partitions: Int = 32,
-      model: DocModel = StubModel,
-      telemetry: Option[LayoutTelemetry.Sink] = None): Dataset[DocResult] =
-    DocExtract(route(docs, partitions, hashFraction), model, telemetry)
-
-  /** Generation-fused variant: route the doc_id STREAM, then generate
-    * each row in the extraction stage. The only shuffle moves bare id
-    * strings — the pattern a real deployment gets from a
+  /** The extraction job over document ids: route the doc_id STREAM, then
+    * generate each row in the extraction stage. The only shuffle moves
+    * bare id strings — the pattern a real deployment gets from a
     * bucket-partitioned input table, where the heavy rows never cross the
-    * wire either. The id-to-row map feeds the operator object to object. */
+    * wire either. The id-to-row map feeds the operator object to object.
+    * `model` defaults to the deterministic stub; a real deployment swaps
+    * in an ONNX-backed DocModel with the same contract. A committed run
+    * over a `DocRow` table is [[graft.io.ExtractJob.run]]. */
   def runFromIds(ids: Dataset[String], partitions: Int = 32,
       model: DocModel = StubModel): Dataset[DocResult] = {
     import ids.sparkSession.implicits._

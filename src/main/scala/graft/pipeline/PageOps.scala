@@ -22,6 +22,11 @@ object PageOps {
     * results land below it; real text lines stay above on both routes. */
   private val RecMinConf = 0.3
 
+  /** Step 1's survivor test: above the model's score floor, and a text
+    * det also above the rec-confidence floor. */
+  @inline private def confident(d: Det): Boolean =
+    d.score > LowConf && !(d.cat == Kinds.Text && d.score < RecMinConf)
+
   private val ListEndFlags = Set('.', '。', ';', '；') // para_split.py:7
 
   /** Geometric list/index block classifier — port of the reference's rule
@@ -154,10 +159,12 @@ object PageOps {
       if (heights.length % 2 == 1) heights(heights.length / 2)
       else (heights(heights.length / 2 - 1) + heights(heights.length / 2)) / 2.0
     val gridSize = math.max(median, 1.0)
-    // candidate spans in y order (the reference pre-sorts, so "first match
-    // wins" means the topmost span); array-indexed grid — this runs for
-    // every txt-route page, so map boxing here is fleet-wide churn
-    val spanIdx = dets.indices.filter(i => dets(i).cat == Kinds.Text)
+    // candidate spans: the EMPTY text spans (one that already has text
+    // keeps it, so chars it won would be lost to its neighbour), in y
+    // order (the reference pre-sorts, so "first match wins" means the
+    // topmost span); array-indexed grid — this runs for every txt-route
+    // page, so map boxing here is fleet-wide churn
+    val spanIdx = dets.indices.filter(i => dets(i).cat == Kinds.Text && dets(i).text.isEmpty)
       .sortBy(i => (dets(i).y0, dets(i).x0, i)).toArray
     var maxCell = 0
     spanIdx.foreach { i => val c = (dets(i).y1 / gridSize).toInt; if (c > maxCell) maxCell = c }
@@ -233,11 +240,12 @@ object PageOps {
     * path skips them, :141-151) and mixed-category pairs involving an
     * image or seal box (:159-166, the background-media exemption; the
     * reference comments 'table' out of that set). Drops are live within
-    * the scan, like the reference's dropped_indexes check. Dets at or
-    * below [[LowConf]] take no part in the pairing: the reference model's
-    * own score threshold removes them before this filter, and here step 1
-    * drops them after it — a larger junk det must not evict a real box
-    * (a formula number) on its way out. */
+    * the scan, like the reference's dropped_indexes check. Dets that
+    * step 1 drops ([[confident]] false: at or below [[LowConf]], or text
+    * under [[RecMinConf]]) take no part in the pairing: the reference
+    * removes them before this filter, and here step 1 drops them after
+    * it — a larger junk det must not evict a real box (a formula number)
+    * on its way out. */
   def filterOverlapBoxes(dets: Vector[Det]): Vector[Det] = {
     val n = dets.length
     val dropped = new Array[Boolean](n)
@@ -250,8 +258,7 @@ object PageOps {
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        if (!dropped(i) && !dropped(j) &&
-            dets(i).score > LowConf && dets(j).score > LowConf) {
+        if (!dropped(i) && !dropped(j) && confident(dets(i)) && confident(dets(j))) {
           val a = dets(i); val b = dets(j)
           val inline =
             a.cat == Kinds.InlineFormula || b.cat == Kinds.InlineFormula
@@ -891,7 +898,7 @@ object PageOps {
     var i = 0
     while (i < nD) {
       val d = arr(i)
-      alive(i) = d.score > LowConf && !(d.cat == Kinds.Text && d.score < RecMinConf)
+      alive(i) = confident(d)
       i += 1
     }
     // 1.5 inline-formula fold: a LABELED inline-equation det reaching this

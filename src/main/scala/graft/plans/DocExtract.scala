@@ -10,9 +10,9 @@ import graft.kernel.{DocModel, LayoutTelemetry}
 import graft.pipeline.Extract
 import graft.schema.{DocResult, DocRow}
 
-/** The extraction operator: every Spark extraction path plans through it
-  * (`Extract.run`, `runFromIds`, `StreamJobs.extractStream`,
-  * `ExtractJob.writeOutputs`). A typed object operator like Spark's own
+/** The extraction operator: both Spark extraction paths plan through it
+  * (`Extract.runFromIds`, which the queries reach through `extractDocs`,
+  * and the committed `ExtractJob.run`). A typed object operator like Spark's own
   * `MapPartitions`: it consumes `DocRow` objects and produces `DocResult`
   * objects, so Catalyst's `EliminateSerialization` drops the serde hop
   * between it and a typed neighbour (`runFromIds`' id-to-row map below,

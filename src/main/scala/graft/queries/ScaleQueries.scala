@@ -139,7 +139,8 @@ object ScaleQueries {
 
   /** The live candidate computation from a documents slice (the
     * materialized chain's CANDIDATES stage body; the view above reads its
-    * output). */
+    * output). Kept as the reference the committed chain is checked
+    * against (DedupPipelineSpec); nothing in the system calls it. */
   def minhashLshPairsFrom(docs: DataFrame): DataFrame =
     minhashLshPairsFromShingles(shinglesFrom(docs))
 
@@ -188,7 +189,9 @@ object ScaleQueries {
 
   /** The live verify computation from materialized candidates + the doc
     * table (the VERIFIED stage body — bucket-incremental under runWith:
-    * a candidate slice only joins the shingles of ITS docs). */
+    * a candidate slice only joins the shingles of ITS docs). Kept as the
+    * reference the committed chain is checked against (DedupPipelineSpec);
+    * nothing in the system calls it. */
   def minhashVerifyFrom(cands: DataFrame, docs: DataFrame): DataFrame =
     minhashVerifyFromShingles(cands, shinglesFrom(docs))
 

@@ -1,29 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.schema.{DocRow, DocResult}
-import graft.kernel.StubModel
+import graft.schema.DocResult
 import graft.pipeline.Assemble
 
 /** Structured Streaming surface. The reference is pure batch (SURVEY.md
-  * §2.10) — these jobs are the streaming-ingest counterparts a production
-  * corpus pipeline needs: continuous extraction of newly-landed document
-  * files, and watermarked event-rate monitoring. */
+  * §2.10) — [[rawStream]] is the streaming-ingest counterpart a
+  * production corpus pipeline needs: continuous conversion of newly
+  * landed document files. */
 object StreamJobs {
-
-  /** The `DocRow` schema, as its encoder derives it. */
-  val docSchema: StructType = Encoders.product[DocRow].schema
-
-  /** Continuous extraction over a parquet landing directory: each
-    * micro-batch runs the same extraction operator as the batch job
-    * (stateless, so exactly-once with any replayable source/sink). */
-  def extractStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
-    import spark.implicits._
-    val docs = spark.readStream.schema(docSchema).parquet(landingDir).as[DocRow]
-    graft.plans.DocExtract(docs, StubModel, None)
-  }
 
   /** Continuous ingestion of landed blobs (.pdf/.ooxml/.html/images/OLE —
     * extension-agnostic): each blob routes through the ONE shared
@@ -57,53 +44,4 @@ object StreamJobs {
         }
       }
   }
-
-  /** Stateful sessionization via flatMapGroupsWithState: per-user sessions
-    * split at 30-minute gaps. Closed sessions are emitted; the open tail
-    * session is carried in GroupState across micro-batches (arrivals are
-    * assumed time-ordered per user across batches — a replayable, ordered
-    * source). The batch formulation of the same semantics is the
-    * `events_sessionize` query. */
-  case class Ev(user_id: Long, ms: Long, event_id: Long)
-  case class OpenSession(start_ms: Long, end_ms: Long, n_events: Long)
-  case class SessionOut(user_id: Long, start_ms: Long, end_ms: Long, n_events: Long)
-
-  val SessionGapMs: Long = 30L * 60000L
-
-  def sessionizeStateful(events: Dataset[Ev]): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, it: Iterator[Ev], state: GroupState[OpenSession]) => {
-          val evs = it.toVector.sortBy(e => (e.ms, e.event_id))
-          val closed = Vector.newBuilder[SessionOut]
-          var open: Option[OpenSession] = state.getOption
-          evs.foreach { e =>
-            open match {
-              case Some(s) if e.ms - s.end_ms <= SessionGapMs =>
-                open = Some(OpenSession(s.start_ms, e.ms, s.n_events + 1))
-              case Some(s) =>
-                closed += SessionOut(user, s.start_ms, s.end_ms, s.n_events)
-                open = Some(OpenSession(e.ms, e.ms, 1))
-              case None =>
-                open = Some(OpenSession(e.ms, e.ms, 1))
-            }
-          }
-          open.foreach(state.update)
-          closed.result().iterator
-        })
-  }
-
-  /** Watermarked sliding-window event counts (late data tolerated 10 min;
-    * append mode emits only finalized windows). */
-  def eventsWindowed(events: DataFrame): DataFrame =
-    events
-      .withColumn("ts", col("ts").cast("timestamp")) // NTZ parquet -> event time
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("total"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("cnt"), col("total"))
 }

@@ -93,6 +93,13 @@ class BlockNestingSpec extends AnyFunSuite {
     // the larger junk box must not evict the real one it covers
     val junk = Det(Kinds.Text, 36, 200, 336, 240, 0.04, "junk", "", -1)
     assert(PageOps.filterOverlapBoxes(Vector(junk, b)).map(_.text) == Vector("junk", "small"))
+    // so does a text det under the rec-confidence floor (step 1 drops it
+    // too): the garbled line must not evict the formula number it covers
+    val garbled = Det(Kinds.Text, 504, 221, 543, 238, 0.208, "???", "", 9)
+    val num = Det(Kinds.FormulaNumber, 510, 222, 540, 242, 0.377, "(10)", "", 10)
+    assert(Geo.overlapOverMin(garbled.x0, garbled.y0, garbled.x1, garbled.y1,
+      num.x0, num.y0, num.x1, num.y1) > 0.7 && garbled.area > num.area)
+    assert(PageOps.filterOverlapBoxes(Vector(garbled, num)).map(_.text) == Vector("???", "(10)"))
     // inline-formula pairs are skipped (the default no-custom-OCR path)
     val line = Det(Kinds.Text, 36, 300, 336, 312, 0.6, "x = y line", "", 3)
     val inl = Det(Kinds.InlineFormula, 100, 300, 200, 312, 0.6, "$x=y$", "", -1)

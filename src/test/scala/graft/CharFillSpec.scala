@@ -50,6 +50,15 @@ class CharFillSpec extends AnyFunSuite {
     assert(out == Vector(s2.copy(text = "x")), "s1 unfillable-empty drops, s2 filled")
   }
 
+  test("a span that already has text takes no chars from the empty line under it") {
+    // the shadow sorts first (smaller y0) and covers the line's head chars
+    val shadow = Det(Kinds.Text, 38, 98, 200, 112, 0.9, "dangling footer shadow", "")
+    val chars = Seq(CharDet("a", 40, 102, 50, 110, 0), CharDet("b", 50, 102, 60, 110, 1),
+      CharDet("c", 250, 102, 260, 110, 2))
+    val out = PageOps.fillChars(Vector(shadow, span), chars)
+    assert(out == Vector(shadow, span.copy(text = "abc")), s"got ${out.map(_.text)}")
+  }
+
   test("extraction with char-layer blocks reproduces the golden (targeted docs)") {
     import graft.corpus.DocGen
     // find docs that actually exercise the char layer

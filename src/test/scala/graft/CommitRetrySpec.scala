@@ -5,7 +5,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions.col
 import graft.io.{Commit, ExtractJob}
 import graft.kernel.{DocModel, LayoutTelemetry, StubModel}
-import graft.pipeline.Extract
 import graft.plans.DocExtract
 import graft.schema.{DocRow, PageModel}
 import java.nio.file.Files
@@ -23,7 +22,7 @@ class CommitRetrySpec extends AnyFunSuite {
     // a context of its own, with 2 task attempts
     TestSpark.withMaster("local[4,2]") { spark =>
       import spark.implicits._
-      val docs = Extract.corpus(Extract.idRange(spark, 300L))
+      val docs = TestSpark.corpus(spark, 300L)
       val cold = Files.createTempDirectory("graft_retry_cold").toString
       val retried = Files.createTempDirectory("graft_retry").toString
       ExtractJob.run(spark, docs, cold, buckets = 16, groups = 2, runId = "cold",

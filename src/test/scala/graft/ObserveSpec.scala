@@ -9,10 +9,10 @@ import graft.pipeline.Extract
 import graft.corpus.DocGen
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-/** Observability surface: Dataset.observe metrics captured through a
-  * QueryExecutionListener — the zero-extra-pass way to get lineage
-  * counters off a production run (the commit protocol counts its buckets
-  * this way). */
+/** Observability surface: a QueryExecutionListener receives the
+  * `observedMetrics` of a Dataset.observe on the extraction output — the
+  * zero-extra-pass way to get counters off a query, and the channel
+  * planned for per-reason failure counts of the raw-blob paths. */
 class ObserveSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSpark.session
@@ -33,7 +33,7 @@ class ObserveSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      Extract.run(Extract.corpus(Extract.idRange(spark, 40)), partitions = 4)
+      Extract.runFromIds(Extract.idRange(spark, 40), partitions = 4)
         .observe("graft_stats", count(lit(1)).as("docs"),
           sum(size(col("spans"))).as("spans"))
         .write.mode("overwrite").format("noop").save()

@@ -19,12 +19,14 @@ class PdfSpec extends AnyFunSuite {
   }
 
   test("%PDF sniff: prefix, offset junk within 1 KiB, and non-pdf bytes") {
-    assert(PdfConvert.isPdf(PdfGen.bytes("doc-000000000000")))
-    assert(PdfConvert.isPdf(("junkjunk\n%PDF-1.7\n").getBytes("ISO-8859-1")))
-    assert(!PdfConvert.isPdf("PKzipzip".getBytes("ISO-8859-1")))
-    assert(!PdfConvert.isPdf("<html><body>x</body></html>".getBytes("ISO-8859-1")))
+    // Sniff's PDF route: a signature offset, -1 when there is none
+    def isPdf(b: Array[Byte]) = PdfConvert.sigOffset(b) >= 0
+    assert(isPdf(PdfGen.bytes("doc-000000000000")))
+    assert(isPdf(("junkjunk\n%PDF-1.7\n").getBytes("ISO-8859-1")))
+    assert(!isPdf("PKzipzip".getBytes("ISO-8859-1")))
+    assert(!isPdf("<html><body>x</body></html>".getBytes("ISO-8859-1")))
     // signature beyond the 1 KiB window is NOT a pdf
-    assert(!PdfConvert.isPdf(("x" * 2000 + "%PDF-1.4").getBytes("ISO-8859-1")))
+    assert(!isPdf(("x" * 2000 + "%PDF-1.4").getBytes("ISO-8859-1")))
   }
 
   /** Build a minimal single-page pdf by hand around `content` ops. */

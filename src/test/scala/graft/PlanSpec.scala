@@ -64,7 +64,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stages.add(e.stageInfo)
     }
-    val docs = graft.pipeline.Extract.corpus(graft.pipeline.Extract.idRange(spark, 40L))
+    val docs = TestSpark.corpus(spark, 40L)
     val out = java.nio.file.Files.createTempDirectory("graft_plan").toString
     spark.listenerManager.register(plans)
     spark.sparkContext.addSparkListener(events)

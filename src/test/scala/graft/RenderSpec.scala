@@ -3,65 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Assemble
 import graft.schema.{Kinds, OrderedBlock}
-import graft.io.MarkdownHtml
 
-/** Rendering-config surface: configurable latex delimiters
-  * (get_latex_delimiter_config, config_reader.py:111-121) and the
-  * markdown -> HTML sink (utils/markdown_to_html.py:306-404). */
+/** The renderers the golden shares with the pipeline, pinned by hand
+  * fixtures: the text join and the markdown render. */
 class RenderSpec extends AnyFunSuite {
-
-  private val bracketDelims = Assemble.LatexDelimiters("\\[", "\\]", "\\(", "\\)")
 
   private def blk(kind: String, text: String, ref: String = "", level: Int = 0) =
     OrderedBlock(kind, text, ref, 0, 0, level)
-
-  test("custom delimiters re-wrap display and inline math at render time") {
-    val blocks = Vector(
-      blk(Kinds.Formula, "$$ \\lambda_{3} = \\frac{a_{3}}{\\bar{x}} $$ \\tag{7}"),
-      blk(Kinds.Text, "Columns merge with $\\gamma_{2}$ inside the span."))
-    val md = Assemble.renderMarkdown(blocks, bracketDelims)
-    assert(md.contains("\\[ \\lambda_{3} = \\frac{a_{3}}{\\bar{x}} \\] \\tag{7}"))
-    assert(md.contains("with \\(\\gamma_{2}\\) inside"))
-    assert(!md.contains("$"))
-    // the default config is byte-identical to the un-configured renderer
-    assert(Assemble.renderMarkdown(blocks) == Assemble.renderMarkdown(blocks, Assemble.DefaultDelims))
-  }
-
-  test("golden markdown variant with bracket delimiters stays formula-complete") {
-    // find a corpus doc whose golden markdown carries display math
-    val id = (0 until 200).map(i => f"doc-$i%012d")
-      .find(id => graft.corpus.DocGen.golden(id).markdown.contains("$$")).get
-    val g = graft.corpus.DocGen.golden(id)
-    // re-render the same golden blocks with bracket delimiters
-    val blocks = g.spans.map(s => OrderedBlock(s.kind, s.text, s.media_ref, 0, s.order,
-      if (s.kind == Kinds.Title) 1 else 0))
-    val md = Assemble.renderMarkdown(blocks, bracketDelims)
-    assert(!md.contains("$$"), "all display math re-wrapped")
-    assert(md.contains("\\["), "bracket display delimiters present")
-    assert(md.sliding(2).count(_ == "\\[") == g.markdown.sliding(2).count(_ == "$$") / 2,
-      "one \\[ per $$-pair")
-  }
-
-  test("markdown -> html: headings, tables, fences, links, images, escaping") {
-    val md = Assemble.renderMarkdown(Vector(
-      blk(Kinds.Title, "Spark & Layout <Analysis>", level = 2),
-      blk(Kinds.Text, "A paragraph with 1 < 2."),
-      blk(Kinds.Table, "<table><tr><td>a</td></tr></table>"),
-      blk(Kinds.Algorithm, "for i in range(3):\n    total += x[i]\nreturn total"),
-      blk(Kinds.Caption, "Figure 1: Figure Caption"),
-      blk(Kinds.Figure, "", ref = "img://abc"),
-      blk(Kinds.Hyperlink, "See the corpus", ref = "https://example.org/corpus/3")))
-    val html = MarkdownHtml.render(md, "T & T")
-    assert(html.startsWith("<!DOCTYPE html>"))
-    assert(html.contains("<title>T &amp; T</title>"))
-    assert(html.contains("<h2>Spark &amp; Layout &lt;Analysis&gt;</h2>"))
-    assert(html.contains("<p>A paragraph with 1 &lt; 2.</p>"))
-    assert(html.contains("<table><tr><td>a</td></tr></table>"), "table html passes through raw")
-    assert(html.contains("<pre><code class=\"language-python\">for i in range(3):"))
-    assert(html.contains("<em>Figure 1: Figure Caption</em>"))
-    assert(html.contains("<p><img src=\"img://abc\"/></p>"))
-    assert(html.contains("<a href=\"https://example.org/corpus/3\">See the corpus</a>"))
-  }
 
   test("joinText hand fixtures (golden shares this path — pinned independently)") {
     import graft.textnorm.TextNorm.{joinText, joinAll}
@@ -118,13 +66,5 @@ class RenderSpec extends AnyFunSuite {
         |
         |- a;
         |- b.""".stripMargin)
-  }
-
-  test("markdown -> html renders a full corpus document without loss") {
-    val g = graft.corpus.DocGen.golden("doc-000000000007")
-    val html = MarkdownHtml.render(g.markdown, "doc-000000000007")
-    assert(html.contains("<h1>"))
-    // every golden table appears verbatim
-    g.spans.filter(_.kind == Kinds.Table).foreach(s => assert(html.contains(s.text)))
   }
 }

@@ -44,7 +44,7 @@ class ResumeSpec extends AnyFunSuite {
     * `scheme`-prefixed temp dirs. */
   private def killAndResume(scheme: String): Unit = {
     val n = 300L
-    val docs = Extract.corpus(Extract.idRange(spark, n))
+    val docs = TestSpark.corpus(spark, n)
     val cold = scheme + Files.createTempDirectory("graft_cold").toString
     val warm = scheme + Files.createTempDirectory("graft_warm").toString
 
@@ -105,7 +105,7 @@ class ResumeSpec extends AnyFunSuite {
   test("a crash at each step of a unit's commit resumes to the cold output") {
     import spark.implicits._
     val n = 300L
-    val docs = Extract.corpus(Extract.idRange(spark, n))
+    val docs = TestSpark.corpus(spark, n)
     val cold = Files.createTempDirectory("graft_step_cold").toString
     ExtractJob.run(spark, docs, cold, buckets = 16, groups = 4, runId = "cold", partitions = 4)
     val out = Files.createTempDirectory("graft_step").toString
@@ -150,7 +150,7 @@ class ResumeSpec extends AnyFunSuite {
   test("ExtractJob.run leaves the caller's job description and session conf as it found them") {
     val sc = spark.sparkContext
     val mode = "spark.sql.sources.partitionOverwriteMode"
-    val docs = Extract.corpus(Extract.idRange(spark, 20L))
+    val docs = TestSpark.corpus(spark, 20L)
     val out = Files.createTempDirectory("graft_label").toString
     val fsImpl = sc.hadoopConfiguration.get("fs.file.impl")
     spark.conf.set(mode, "static")
@@ -169,7 +169,7 @@ class ResumeSpec extends AnyFunSuite {
   // without libhadoop, Hadoop's local filesystem forks `chmod` for every
   // dir, part file and `.crc` it makes; the protocol's writes must not
   test("a commit forks no chmod process for the files it writes") {
-    val docs = Extract.corpus(Extract.idRange(spark, 40L))
+    val docs = TestSpark.corpus(spark, 40L)
     val out = Files.createTempDirectory("graft_nofork").toRealPath().toString
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
@@ -186,7 +186,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("a commit leaves Hadoop's default modes: rwxr-xr-x dirs, rw-r--r-- files") {
-    val docs = Extract.corpus(Extract.idRange(spark, 40L))
+    val docs = TestSpark.corpus(spark, 40L)
     val out = Files.createTempDirectory("graft_modes")
     ExtractJob.run(spark, docs, out.toString, buckets = 4, groups = 2, partitions = 2)
     Commit.storeFp(spark, out.toString, Map(0 -> 1L))

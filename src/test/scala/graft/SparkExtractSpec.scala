@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import graft.corpus.DocGen
 import graft.pipeline.Extract
 
-/** End-to-end Spark run of the extraction job (routing repartition + kernel
-  * mapPartitions + assembly) against the golden oracle — the distributed
-  * path must agree with the pure per-doc path regardless of partitioning. */
+/** End-to-end Spark run of the extraction job (routing repartition + the
+  * extraction operator) against the golden oracle — the distributed path
+  * must agree with the pure per-doc path regardless of partitioning. */
 class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = TestSpark.session
@@ -25,7 +25,7 @@ class SparkExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Spark extraction equals golden on a 96-doc corpus") {
     import spark.implicits._
     val ids = Extract.idRange(spark, 96)
-    val got = Extract.run(Extract.corpus(ids), partitions = 7)
+    val got = Extract.runFromIds(ids, partitions = 7)
       .collect().map(r => r.doc_id -> r.spans).toMap
     assert(got.size == 96)
     // whole-doc extraction covers the monster-doc tail too (no page fan-out)

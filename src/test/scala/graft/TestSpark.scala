@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.corpus.DocGen
+import graft.schema.DocRow
 
 /** The one way a spec gets a Spark session. Specs run one after another
   * in one forked JVM, and the first session built fixes the static
@@ -20,6 +22,13 @@ object TestSpark {
     stop()
     val spark = build(master)
     try body(spark) finally stop()
+  }
+
+  /** The `DocRow` table of documents `0 until n` (FIXTURES.md §2), the
+    * input of the committed extraction job. */
+  def corpus(spark: SparkSession, n: Long): Dataset[DocRow] = {
+    import spark.implicits._
+    graft.pipeline.Extract.idRange(spark, n).map(DocGen.docRow _)
   }
 
   private def build(master: String): SparkSession = {

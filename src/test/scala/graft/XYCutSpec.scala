@@ -55,29 +55,4 @@ class XYCutSpec extends AnyFunSuite {
     assert(Geo.subtractIntervals(10, 20, Seq((0.0, 15.0))) == Vector((15.0, 20.0)))
     assert(Geo.subtractIntervals(10, 20, Nil) == Vector((10.0, 20.0)))
   }
-
-  test("bbox_relative_pos / bbox_distance: diagonal corners, edges, overlap") {
-    import graft.geom.Geo
-    // box1 fully top-left of box2 -> distance between the facing corners
-    assert(Geo.bboxDistance(0, 0, 10, 10, 13, 14, 20, 20) == 5.0)
-    // pure left gap
-    assert(Geo.bboxDistance(20, 0, 30, 10, 0, 0, 12, 10) == 8.0)
-    // pure vertical gap (box1 below box2)
-    assert(Geo.bboxDistance(0, 20, 10, 30, 0, 0, 10, 14) == 6.0)
-    // overlapping boxes -> 0
-    assert(Geo.bboxDistance(0, 0, 10, 10, 5, 5, 15, 15) == 0.0)
-    assert(Geo.relativePos(0, 0, 10, 10, 13, 14, 20, 20) == (false, true, false, true))
-  }
-
-  test("merge_adjacent_bboxes: line clustering + gap-tolerant fusion") {
-    import graft.geom.Geo
-    val boxes = Vector(
-      (0.0, 0.0, 10.0, 10.0, 10.0),   // 0: line A
-      (14.0, 1.0, 24.0, 11.0, 10.0),  // 1: line A, gap 4 <= 6 -> fuses with 0
-      (40.0, 0.0, 50.0, 10.0, 10.0),  // 2: line A, gap 16 > 6 -> own box
-      (0.0, 30.0, 10.0, 40.0, 10.0))  // 3: line B
-    val merged = Geo.mergeAdjacentBboxes(boxes)
-    assert(merged.map(_._2) == Vector(Vector(0, 1), Vector(2), Vector(3)))
-    assert(merged.head._1 == (0.0, 0.0, 24.0, 11.0))
-  }
 }
